@@ -425,6 +425,8 @@ class Config:
     backfill: BackfillConfig
     no_skip: bool = False
     otel: dict = field(default_factory=dict)
+    # the expressions the last successful validate_expressions checked
+    _validated: dict | None = field(default=None, init=False, repr=False, compare=False)
 
     @classmethod
     def from_json(cls, d: Any) -> "Config":
@@ -507,7 +509,9 @@ class Config:
         return cls.from_json(cls.render(path))
 
     def validate_expressions(self, spark) -> None:
-        """Load-time analysis probe, mirroring cel.go:222-237."""
+        """Load-time analysis probe, mirroring cel.go:222-237. Success is
+        remembered for the expressions it checked, so re-validating an
+        unchanged config costs no analysis; a failure raises every time."""
         from .celtrans import validate_against_schema
 
         exprs: dict[str, str] = {}
@@ -520,6 +524,8 @@ class Config:
                 exprs[f"metrics[{i}].filter"] = m.filter.sql
             if m.value is not None:
                 exprs[f"metrics[{i}].value"] = m.value.sql
+        if exprs == self._validated:
+            return
         types = validate_against_schema(spark, exprs)
         for i, m in enumerate(self.metrics):
             if m.filter is not None and types[f"metrics[{i}].filter"] != "boolean":
@@ -532,3 +538,4 @@ class Config:
                 raise ConfigError(
                     f"metrics[{i}].value must be numeric, got {types[f'metrics[{i}].value']}"
                 )
+        self._validated = exprs

@@ -54,36 +54,27 @@ def _attrs_json(pairs, types: dict[str, str] | None = None) -> list[dict]:
 
 def _attr_type_maps(result: PipelineResult, config) -> tuple[dict, dict[str, dict]]:
     """(resource-attr types, metric name -> attr types) from the translated
-    expressions' static Spark types (ToAttribute, app.go:399-412)."""
-    from .operators.aggregate import attribute_types
+    expressions' static Spark types (ToAttribute, app.go:399-412), as the
+    pipeline recorded them on the result."""
+    from .operators.aggregate import config_attribute_types
 
-    res_t = {
-        a.key: t
-        for a, t in zip(
-            config.resource_attributes,
-            attribute_types(result.parsed, config.resource_attributes),
-        )
-        if t
+    types = result.attr_types or config_attribute_types(result.parsed, config)
+    res_t = {a.key: t for a, t in zip(config.resource_attributes, types.resource) if t}
+    per_metric = {
+        m.name: {a.key: t for a, t in zip(m.attributes, types.metrics[m.name]) if t}
+        for m in config.metrics
     }
-    per_metric = {}
-    for m in config.metrics:
-        per_metric[m.name] = {
-            a.key: t
-            for a, t in zip(m.attributes, attribute_types(result.parsed, m.attributes))
-            if t
-        }
     return res_t, per_metric
 
 
 def encode_golden(result: PipelineResult, config) -> list[dict]:
-    """Collect sinks -> list of ResourceMetrics JSON trees (usually one)."""
+    """Data points -> list of ResourceMetrics JSON trees (usually one)."""
     by_resource: dict[str, dict] = {}
     res_types, metric_types = _attr_type_maps(result, config)
     ordered_names = sorted(result.sinks, key=lambda n: result.metric_index[n])
     for name in ordered_names:
         m = config.metrics[result.metric_index[name]]
-        rows = [r.asDict(recursive=True) for r in result.sinks[name].collect()]
-        for row in rows:
+        for row in result.points()[name]:
             rkey = json.dumps(_attrs_json(row["resource_attrs"], res_types), sort_keys=True)
             res = by_resource.setdefault(
                 rkey,
@@ -193,7 +184,7 @@ def encode_otlp(result: PipelineResult, config) -> list[dict]:
     ordered_names = sorted(result.sinks, key=lambda n: result.metric_index[n])
     for name in ordered_names:
         m = config.metrics[result.metric_index[name]]
-        for row in (r.asDict(recursive=True) for r in result.sinks[name].collect()):
+        for row in result.points()[name]:
             rkey = json.dumps(attrs(row["resource_attrs"], res_types), sort_keys=True)
             res = by_resource.setdefault(
                 rkey,

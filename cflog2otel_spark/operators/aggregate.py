@@ -26,6 +26,8 @@ branch, on (resource attrs, window, attrs).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -70,6 +72,28 @@ def attribute_types(parsed: DataFrame, attrs) -> list[str | None]:
             )
         types.append(t)
     return types
+
+
+@dataclass(frozen=True)
+class AttributeTypes:
+    """Static OTel types of a config's attributes: one entry per
+    resource attribute, and per metric name one per metric attribute."""
+
+    resource: list[str | None]
+    metrics: dict[str, list[str | None]]
+
+
+def config_attribute_types(parsed: DataFrame, cfg: Config) -> AttributeTypes:
+    """attribute_types for every resource and metric attribute of `cfg`
+    in one analysis call."""
+    types = iter(attribute_types(
+        parsed,
+        list(cfg.resource_attributes) + [a for m in cfg.metrics for a in m.attributes],
+    ))
+    return AttributeTypes(
+        [next(types) for _ in cfg.resource_attributes],
+        {m.name: [next(types) for _ in m.attributes] for m in cfg.metrics},
+    )
 
 
 def _duration_str(seconds: float) -> str:
@@ -122,8 +146,11 @@ def aggregate_metric(
     parsed: DataFrame,
     cfg: Config,
     m: MetricsConfig,
+    types: AttributeTypes | None = None,
 ) -> DataFrame:
-    """One metric config -> one sink DataFrame of data points."""
+    """One metric config -> one sink DataFrame of data points. `types`
+    (from config_attribute_types over the same schema) skips the
+    per-metric attribute-type probes."""
     df = parsed
     if m.filter is not None:
         # SQL three-valued logic: NULL filter excludes the row (pinned spec,
@@ -134,8 +161,11 @@ def aggregate_metric(
     # unsupported-typed attributes drop from the set entirely (ToAttribute
     # ok=false, app.go:408-412) — with the supported CEL surface every
     # expression is scalar, so this is a guard, not a hot path
-    res_types = attribute_types(parsed, cfg.resource_attributes)
-    attr_types = attribute_types(parsed, m.attributes)
+    if types is None:
+        res_types = attribute_types(parsed, cfg.resource_attributes)
+        attr_types = attribute_types(parsed, m.attributes)
+    else:
+        res_types, attr_types = types.resource, types.metrics[m.name]
     res_pairs = [
         (a.key, f"__res_{i}", res_types[i])
         for i, a in enumerate(cfg.resource_attributes)

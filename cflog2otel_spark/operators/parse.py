@@ -9,13 +9,14 @@ Reference semantics: /root/reference/cloudfront_std_log.go:279-331
   - derived: timestamp (:59-80), sc_status_category (:109-119),
     user-agent URL-unescape (:124-134), constant type (:308-310)
 
-Spark-first design: ONE Arrow-vectorized pandas UDF decodes the int32 token
-array back to the UTF-8 line (the only Python step — the JVM has no
-array<int> -> binary builtin); everything downstream is native Column
-expressions inside whole-stage codegen: split, get, nullif, try_cast,
-to_timestamp, url_decode. At 100 TB the decode UDF is an Arrow-batched
-streaming pass (no per-row Python), and Catalyst prunes unused field
-projections so configs touching 3 columns only pay for 3 casts.
+Spark-first design: `decode_tokens_col` decodes the int32 token array back
+to the UTF-8 line JVM-side (byte -> hex through a constant lookup table ->
+unhex -> UTF-8 decode), so the product path has no Python step at all;
+the Arrow UDF `decode_tokens_udf` is kept only as the `decode_impl="arrow"`
+alternative. Everything downstream is native Column expressions inside
+whole-stage codegen: split, get, nullif, try_cast, to_timestamp,
+url_decode. Catalyst prunes unused field projections, so configs touching
+3 columns only pay for 3 casts.
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .config import Config
-from .operators.aggregate import aggregate_metric
+from .operators.aggregate import AttributeTypes, aggregate_metric, config_attribute_types
 from .operators.enrich import enrich
 from .operators.parse import decode_and_parse
 
@@ -56,12 +56,44 @@ def sink_dirname(name: str) -> str:
 
 @dataclass
 class PipelineResult:
+    """One run's fan-out: the shared parsed projection and one data-point
+    DataFrame per metric.
+
+    `points()` collects every sink to the driver once and holds the rows
+    until `unpersist()`, so the manifest, golden and OTLP encoders share
+    one aggregation per metric instead of re-running it each. The held
+    rows are bounded by windows x attribute cardinality, the same data
+    points export collects anyway."""
+
     parsed: DataFrame
     sinks: dict[str, DataFrame]  # metric name -> data-point DataFrame
     metric_index: dict[str, int] = field(default_factory=dict)
+    attr_types: AttributeTypes | None = None
+    _points: dict[str, list[dict]] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def points(self) -> dict[str, list[dict]]:
+        """Metric name -> its data points as dicts, collected once. The
+        sinks are independent jobs over the shared projection, so they
+        are collected concurrently, each thread in the caller's job group."""
+        if self._points is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            jsc = self.parsed.sparkSession.sparkContext._jsc.sc()
+            props = jsc.getLocalProperties().clone()
+
+            def collect(df: DataFrame) -> list[dict]:
+                jsc.setLocalProperties(props)
+                return [r.asDict(recursive=True) for r in df.collect()]
+
+            with ThreadPoolExecutor(max(1, min(len(self.sinks), 8))) as ex:
+                self._points = dict(zip(self.sinks, ex.map(collect, self.sinks.values())))
+        return self._points
 
     def unpersist(self) -> None:
         self.parsed.unpersist()
+        self._points = None
 
 
 def _referenced_columns(cfg: Config) -> set[str]:
@@ -175,12 +207,13 @@ def run_pipeline_parsed(
     elif cache == "disk":
         parsed = parsed.persist(StorageLevel.DISK_ONLY)
 
+    types = config_attribute_types(parsed, cfg)
     sinks: dict[str, DataFrame] = {}
     index: dict[str, int] = {}
     for i, m in enumerate(cfg.metrics):
-        sinks[m.name] = aggregate_metric(parsed, cfg, m)
+        sinks[m.name] = aggregate_metric(parsed, cfg, m, types)
         index[m.name] = i
-    return PipelineResult(parsed=parsed, sinks=sinks, metric_index=index)
+    return PipelineResult(parsed=parsed, sinks=sinks, metric_index=index, attr_types=types)
 
 
 def write_sinks(
