@@ -84,10 +84,9 @@ def get_spark(
         )
         # RocksDB changelog checkpointing: commit uploads the batch's
         # changelog instead of a full snapshot per state partition per
-        # micro-batch (snapshots shift to background maintenance). At 100 TB
-        # the per-commit upload is O(delta), not O(state); measured locally
-        # it cut the 4-metric stateful drain's summed commitTimeMs ~10x
-        # (stateOperators progress, BENCH/OPTIMIZATION_r07.md).
+        # micro-batch (snapshots shift to background maintenance), so the
+        # per-commit upload of the stateful dedup above is O(delta), not
+        # O(state).
         .config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
             ".enabled",

@@ -1,19 +1,21 @@
 """Structured Streaming variant of the pipeline.
 
-The reference is a serially-invoked micro-batch system (one Lambda per S3
-notification, app.go:206-241); its backfill tolerance is bounded lateness
-(SURVEY.md §2.6 T3). The streaming mapping:
+The reference is a serially-invoked micro-batch system: one Lambda per S3
+notification aggregates the lines it read and exports them as delta data
+points, which the collector sums (app.go:206-241; the reference never
+accumulates across invocations, aggregation.go:152-155). The streaming
+mapping is the same, one micro-batch per invocation:
 
   file source over the tokenized corpus (new objects = new files)
-    -> decode/parse/enrich (same operators as batch)
-    -> withWatermark(timestamp, tolerance)      # T3 line gate analog
-    -> per metric: window agg                   # T2
-    -> sink: append (update for consoles), or foreachBatch overwriting the
-       touched window partitions (T4 idempotent delta re-emit)
+    -> foreachBatch: decode/parse/enrich + every metric aggregation
+       (run_pipeline, the batch fan-out over one pruned projection)
+    -> sink: one delta row per key per micro-batch, in the batch's
+       `_batch_id` partition (T4: dynamic overwrite, so a replayed batch
+       replaces its own rows)
 
-Aggregations are the same native Count/Sum/Histogram expressions, so the
-batch golden semantics carry over; watermarking bounds state exactly like
-the reference bounds re-reads.
+There is no streaming state: a key whose lines arrive in several batches
+(late data, windows spanning files) gets one row per batch, and readers sum
+the rows of a key, as an OTLP delta consumer sums data points.
 """
 
 from __future__ import annotations
@@ -21,11 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import Config
-from ..operators.aggregate import aggregate_metric
-from ..operators.enrich import enrich
-from ..pipeline import sink_dirname
-from ..operators.parse import decode_and_parse
+from ..pipeline import run_pipeline, sink_dirname, write_sinks
 from ..schemas import tokenized_input_schema
+
+_QUERY_DIR = "single_pass"
 
 
 def read_tokenized_stream(
@@ -38,36 +39,25 @@ def read_tokenized_stream(
     )
 
 
-def streaming_sinks(
-    spark: SparkSession,
-    cfg: Config,
-    stream: DataFrame,
-    watermark: str = "1 hour",
-) -> dict[str, DataFrame]:
-    """One streaming aggregation per metric config. Caller attaches
-    writeStream (append mode works once the watermark closes a window)."""
-    parsed = enrich(decode_and_parse(stream, keep_payload=False))
-    parsed = parsed.withWatermark("timestamp", watermark)
-    return {m.name: aggregate_metric(parsed, cfg, m) for m in cfg.metrics}
-
-
-def _window_overwrite_writer(path: str):
-    """foreachBatch sink: dynamic-overwrite the window-date partitions the
-    batch touched — the T4 idempotent delta re-emit. Late data re-emits its
-    window's full delta and replaces the stale partition slice instead of
-    appending a duplicate (the batch analog of Iceberg replaceWhere)."""
-    from pyspark.sql import functions as F
-
-    def write(batch_df, _batch_id: int):
-        (
-            batch_df.withColumn("w_date", F.to_date("window_start"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("w_date")
-            .parquet(path)
+def _reject_per_metric_checkpoint(spark: SparkSession, cfg: Config, checkpoint_dir: str) -> None:
+    """Fail fast on a checkpoint of the removed per-metric topology (a parse
+    tee under `parsed_staging/` plus one query checkpoint per metric sink
+    directory). Starting the delta drain there would re-emit all history
+    next to the old `w_date` sink partitions. Checked through the Hadoop
+    FileSystem so that `scheme://` checkpoints are covered too."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    names = {"parsed_staging"} | {sink_dirname(m.name) for m in cfg.metrics}
+    stale = sorted(
+        n for n in names - {_QUERY_DIR} if fs.exists(jvm.org.apache.hadoop.fs.Path(root, n))
+    )
+    if stale:
+        raise ValueError(
+            f"checkpoint directory {checkpoint_dir} holds {', '.join(stale)} from the "
+            "removed per-metric streaming topology; start from a new checkpoint "
+            "directory and a new output directory"
         )
-
-    return write
 
 
 def run_streaming_pipeline(
@@ -76,189 +66,57 @@ def run_streaming_pipeline(
     input_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
-    trigger_once: bool = True,
-):
-    """Start one writeStream per metric sink. Output mode is `update` +
-    foreachBatch window-partition overwrite: append mode would hold the
-    final windows hostage to a watermark that never advances past
-    end-of-stream, whereas update emits every revised window and the
-    overwrite keeps re-emission idempotent.
-
-    Scan topology (r7): the N per-metric queries used to each decode+parse
-    the raw token stream — N full passes over the most expensive per-row
-    expression in the engine for one metric's worth of columns each
-    (guide §8's anti-pattern: heavy bytes decoded once per decision).
-    Now a PARSE TEE runs first: one stateless query decodes/parses each
-    micro-batch once and appends the pruned parsed projection (only the
-    columns some metric expression references — the same rule as the
-    batch cache) to a parquet staging dir under the checkpoint; the
-    per-metric stateful aggregations then stream from that staging dir —
-    cheap columnar scans with per-metric column pruning instead of N
-    repeated decodes. The staging dir lives and dies with the checkpoint,
-    so restart/resume semantics are unchanged: the tee's file-sink
-    metadata log gives the downstream file source exactly-once file
-    visibility, each metric keeps its own checkpoint and state, and a
-    restarted run parses only new input files and aggregates only new
-    staged files.
-
-    trigger_once=True (availableNow) drains the backlog and stops — the
-    batch-equivalent mode matching the reference's
-    one-invocation-per-notification model. In this mode the tee is
-    awaited inside this call before the aggregations start (they must see
-    the full staged backlog) and only the per-metric queries are
-    returned. With trigger_once=False all queries run continuously and
-    the tee is returned first in the list (costs one extra trigger of
-    sink latency)."""
-    import os
-
-    from ..pipeline import _referenced_columns
-
-    stream = read_tokenized_stream(spark, input_path)
-    parsed = enrich(decode_and_parse(stream, keep_payload=False))
-    needed = _referenced_columns(cfg)
-    keep = [c for c in parsed.columns if c in needed or c == "timestamp"]
-    parsed = parsed.select(*dict.fromkeys(keep))
-
-    staging = f"{checkpoint_dir}/parsed_staging"
-    data_dir = f"{staging}/data"
-    if "://" not in data_dir:
-        # a zero-input availableNow drain never creates the sink path, but
-        # the downstream file source requires the directory to exist
-        os.makedirs(data_dir, exist_ok=True)
-    tee_w = (
-        parsed.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", f"{staging}/ck")
-        .outputMode("append")
-    )
-    tee_w = (
-        tee_w.trigger(availableNow=True)
-        if trigger_once
-        else tee_w.trigger(processingTime="30 seconds")
-    )
-    tee = tee_w.start()
-    if trigger_once:
-        tee.awaitTermination()
-
-    parsed_stream = (
-        spark.readStream.schema(parsed.schema)
-        .parquet(data_dir)
-        .withWatermark("timestamp", watermark)
-    )
-    sinks = {m.name: aggregate_metric(parsed_stream, cfg, m) for m in cfg.metrics}
-    queries = []
-    # availableNow drain: after the data batches, Spark appends a no-data
-    # micro-batch whose only job is advancing the watermark to evict state
-    # — in UPDATE mode it emits zero rows (eviction produces output only in
-    # append mode), yet it pays a full state-store load/commit cycle per
-    # partition per query (measured 1-10 s per query of the 4-metric
-    # drain). The drain's checkpoint dies with the run, so deferred
-    # eviction has no consumer; skip the batch. Long-running mode
-    # (trigger_once=False) keeps it: there the eviction bounds state
-    # growth between data batches. Safe to set-then-restore around
-    # start(): each query captures a cloned session at start.
-    no_data_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(no_data_key, None)
-    if trigger_once:
-        spark.conf.set(no_data_key, "false")
-    try:
-        for name, df in sinks.items():
-            safe = sink_dirname(name)
-            w = (
-                df.writeStream.foreachBatch(_window_overwrite_writer(f"{out_dir}/{safe}"))
-                .option("checkpointLocation", f"{checkpoint_dir}/{safe}")
-                .outputMode("update")
-            )
-            w = w.trigger(availableNow=True) if trigger_once else w.trigger(processingTime="30 seconds")
-            queries.append(w.start())
-    finally:
-        if trigger_once:
-            if prev is None:
-                spark.conf.unset(no_data_key)
-            else:
-                spark.conf.set(no_data_key, prev)
-    return queries if trigger_once else [tee, *queries]
-
-
-def run_streaming_pipeline_single_pass(
-    spark: SparkSession,
-    cfg: Config,
-    input_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
+    *,
     trigger_once: bool = True,
     max_files_per_trigger: int = 64,
+    watermark: str | None = None,
 ):
-    """Single-scan streaming fan-out: ONE query whose foreachBatch decodes/
-    parses the micro-batch once and derives EVERY metric sink from that
-    shared projection — the streaming twin of the batch pipeline's cached
-    fan-out (A2). The N-stateful-queries path above scans and parses the
-    corpus once PER metric (measured 4.1x the batch flagship for 4 metrics
-    at sf0.01); this path pays one decode/parse total.
+    """Start the streaming drain: ONE query whose foreachBatch decodes/
+    parses each micro-batch once and derives every metric sink from that
+    shared projection, the streaming twin of the batch fan-out (A2).
+    Returns the started query in a one-element list.
 
-    Semantics: each micro-batch emits its windows' DELTAS as rows keyed by
-    `_batch_id` — exactly the reference's per-invocation delta export
-    (app.go:206-241 aggregates one notification and exports; cross-
-    invocation windows produce multiple deltas the OTLP consumer sums, and
-    the reference never accumulates across invocations, aggregation.go:
-    152-155). Reading a sink therefore sums value-columns per window —
-    the same contract as summing delta data points. Exactly-once on retry:
-    the batch's `_batch_id` partition is dynamically overwritten, so a
-    replayed micro-batch replaces its own rows instead of duplicating.
+    Each micro-batch writes its windows' DELTAS under
+    `{out_dir}/{sink_dirname(metric)}/_batch_id=N`; reading a sink sums the
+    rows of one key (counts and sums added, histogram buckets added
+    element-wise, min/max of the extremes). Exactly-once on retry: the
+    batch's `_batch_id` partition is dynamically overwritten.
+
+    trigger_once=True (availableNow) drains the backlog and stops, the
+    reference's one-invocation-per-notification model; False runs a
+    30-second processing-time trigger. `watermark` has no effect: the drain
+    keeps no state to bound. It is accepted so existing callers still run.
     """
     from pyspark.sql import functions as F
 
+    _reject_per_metric_checkpoint(spark, cfg, checkpoint_dir)
+
     def process(batch_df, batch_id: int) -> None:
-        from ..pipeline import run_pipeline_parsed
-
-        # run_pipeline_parsed, not a bare persist of the full parse: it
-        # prunes the cached projection to the columns some metric
-        # expression references BEFORE persisting — the old path
-        # materialized all 33 field casts into the cache while the batch
-        # flagship caches ~6 (r7; profiled 21 s cold / 8.4 s warm for the
-        # unpruned materialize vs 13.6/5.4 pruned), and sharing the batch
-        # path's plan shape also shares its already-JIT-compiled codegen.
-        res = run_pipeline_parsed(
-            spark, cfg, enrich(decode_and_parse(batch_df, keep_payload=False))
-        )
-        parsed = res.parsed
-
-        def write_metric(m) -> None:
-            safe = sink_dirname(m.name)
-            (
-                res.sinks[m.name]
-                .withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(f"{out_dir}/{safe}")
-            )
-
+        # the batch pipeline itself: the same skip-or-fail rule for
+        # unparseable object keys, the cached projection pruned to the
+        # columns some metric expression references, the concurrent sink
+        # writes, and the batch path's plan shape (and its JIT-compiled
+        # codegen)
+        res = run_pipeline(spark, cfg, batch_df, keep_payload=False)
+        res.sinks = {
+            name: df.withColumn("_batch_id", F.lit(batch_id))
+            for name, df in res.sinks.items()
+        }
         try:
-            # the metric branches are independent jobs over the shared
-            # persisted projection — submit them concurrently so their
-            # shuffles/IO overlap instead of leaving cores idle between
-            # serial jobs, exactly like the batch write_sinks fan-out
-            # (pipeline.py: measured 1.6-1.8x there; the cache lock makes
-            # the projection materialize exactly once)
-            if len(cfg.metrics) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(min(len(cfg.metrics), 8)) as ex:
-                    list(ex.map(write_metric, cfg.metrics))
-            else:
-                for m in cfg.metrics:
-                    write_metric(m)
+            write_sinks(res, out_dir, partition_by="_batch_id")
         finally:
-            parsed.unpersist()
+            res.unpersist()
 
     stream = read_tokenized_stream(spark, input_path, max_files_per_trigger)
     w = (
         stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/single_pass")
+        .option("checkpointLocation", f"{checkpoint_dir}/{_QUERY_DIR}")
     )
     w = w.trigger(availableNow=True) if trigger_once else w.trigger(
         processingTime="30 seconds"
     )
     return [w.start()]
+
+
+# older name, still imported by bench.py and bench_extra.py
+run_streaming_pipeline_single_pass = run_streaming_pipeline

@@ -178,33 +178,9 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         action="store_true",
         help="run as a Structured Streaming job over --input (new files = "
         "new micro-batches, the reference's new-object-new-invocation "
-        "model); drains available data (availableNow) and writes "
-        "idempotent window-partition sinks under --out; requires "
-        "--checkpoint-dir",
-    )
-    ap.add_argument(
-        "--stream-single-pass",
-        action="store_true",
-        help="deprecated no-op: single-pass is now the --stream default "
-        "(it won every measured A/B by 1.2-3.7x; see BENCH.md)",
-    )
-    ap.add_argument(
-        "--stream-per-metric",
-        action="store_true",
-        help="with --stream: run one stateful windowed query PER metric "
-        "(RocksDB state, watermarked update-mode re-emits) instead of the "
-        "default single-pass foreachBatch fan-out. The per-metric path "
-        "scans and parses the corpus once per metric — measured 1.2-3.7x "
-        "slower at 4 metrics — but keeps windows open across future "
-        "micro-batches, which matters only for genuinely unbounded "
-        "long-running streams",
-    )
-    ap.add_argument(
-        "--watermark",
-        default=None,
-        help="streaming lateness bound (e.g. '30 minutes'); defaults to "
-        "the config's backfill.time_tolerance when backfill is enabled, "
-        "else 1 hour",
+        "model); drains available data (availableNow) and writes one delta "
+        "row per key per micro-batch under --out (readers sum a key's "
+        "rows); requires --checkpoint-dir",
     )
     ap.add_argument(
         "--export-otlp",
@@ -377,37 +353,20 @@ def main(argv: list[str] | None = None) -> int:
                     file=sys.stderr,
                 )
                 return 2
-            from cflog2otel_spark.streaming.stream import (
-                run_streaming_pipeline,
-                run_streaming_pipeline_single_pass,
-            )
+            from cflog2otel_spark.streaming.stream import run_streaming_pipeline
 
-            watermark = args.watermark or (
-                f"{int(cfg.backfill.time_tolerance_seconds)} seconds"
-                if cfg.backfill.enabled
-                else "1 hour"
-            )
             t0 = time.time()
-            # single-pass is the default (VERDICT r4): one decode/parse per
-            # micro-batch feeding every sink beat the per-metric stateful
-            # fan-out in every measured A/B (1.2-3.7x, BENCH.md). The
-            # per-metric path remains for genuinely unbounded streams.
-            if args.stream_per_metric:
+            try:
                 queries = run_streaming_pipeline(
-                    spark, cfg, args.input, args.out, args.checkpoint_dir,
-                    watermark=watermark, trigger_once=True,
+                    spark, cfg, args.input, args.out, args.checkpoint_dir
                 )
-            else:
-                queries = run_streaming_pipeline_single_pass(
-                    spark, cfg, args.input, args.out, args.checkpoint_dir,
-                    trigger_once=True,
-                )
+            except ValueError as exc:
+                print(str(exc), file=sys.stderr)
+                return 2
             for q in queries:
                 q.awaitTermination()
-            mode = "stream-per-metric" if args.stream_per_metric else "stream-single-pass"
             print(
-                jd({"run": {"elapsed_sec": round(time.time() - t0, 3),
-                            "mode": mode, "watermark": watermark}}),
+                jd({"run": {"elapsed_sec": round(time.time() - t0, 3)}}),
                 file=sys.stderr,
             )
             return 0

@@ -35,3 +35,39 @@ def cf_fixture_df(spark):
 
     _, lines = read_cf_log_file(CF_LOG)
     return tokenized_df_from_lines(spark, lines, SOURCE1).cache()
+
+
+def generated_lines(spark, n_rows: int, seed: int) -> list[str]:
+    """Deterministic CloudFront log lines from the generator, one hour of
+    2024-03-01, in doc_id order."""
+    from cflog2otel_spark.sources.generator import generate_lines
+
+    rows = generate_lines(spark, n_rows, seed=seed, n_hours=1).orderBy("doc_id").collect()
+    return [r["line"] for r in rows]
+
+
+def summed_points(rows) -> dict:
+    """Data points keyed by (window start, resource attrs, attrs), the rows
+    of one key combined the way a delta consumer sums data points: counts,
+    sums and histogram buckets added, min/max of the extremes. Sums are
+    rounded so per-batch partial sums compare equal to one batch sum."""
+    pts: dict = {}
+    for r in rows:
+        r = r if isinstance(r, dict) else r.asDict(recursive=True)
+        key = (
+            str(r["window_start"]),
+            frozenset((a["key"], a["value"]) for a in r["resource_attrs"]),
+            frozenset((a["key"], a["value"]) for a in r["attrs"]),
+        )
+        if "bucket_counts" in r:
+            v = [r["count"], r["sum"], r["min"], r["max"], r["bucket_counts"]]
+            if key in pts:
+                o = pts[key]
+                v = [o[0] + v[0], o[1] + v[1], min(o[2], v[2]), max(o[3], v[3]),
+                     [a + b for a, b in zip(o[4], v[4])]]
+        else:
+            v = [r["value"] + (pts[key][0] if key in pts else 0)]
+        pts[key] = v
+    return {k: tuple(round(x, 6) if isinstance(x, float) else
+                     tuple(x) if isinstance(x, list) else x for x in v)
+            for k, v in pts.items()}

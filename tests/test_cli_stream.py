@@ -1,17 +1,17 @@
 """CLI Structured-Streaming mode: --stream drains the corpus with
 availableNow and produces the same data points as the batch CLI."""
 
+import json
 import subprocess
 import sys
 
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CF_LOG, CONFIGS, SOURCE1
+from .conftest import CONFIGS, REPO, SOURCE1, generated_lines, summed_points
 
 
 def test_cli_stream_matches_batch(spark, tmp_path):
-    _, lines = read_cf_log_file(CF_LOG)
-    corpus = tokenized_df_from_lines(spark, lines, SOURCE1)
+    corpus = tokenized_df_from_lines(spark, generated_lines(spark, 200, seed=9), SOURCE1)
     corpus_path = str(tmp_path / "corpus")
     corpus.write.parquet(corpus_path)
 
@@ -25,24 +25,19 @@ def test_cli_stream_matches_batch(spark, tmp_path):
             "--stream",
             "--master", "local[2]",
         ],
-        cwd="/root/repo", capture_output=True, text=True, timeout=420,
+        cwd=REPO, capture_output=True, text=True, timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-
-    def points(df):
-        return {
-            (r["window_start"], r["attrs"][0]["value"]): r["value"]
-            for r in df.collect()
-        }
+    record = [json.loads(l) for l in proc.stderr.splitlines() if l.startswith('{"run"')]
+    assert len(record) == 1 and set(record[0]["run"]) == {"elapsed_sec"}
 
     sink = spark.read.parquet(str(tmp_path / "out" / "http.server.requests"))
-    got = points(sink)
+    got = summed_points(sink.collect())
 
     from cflog2otel_spark.config import Config
     from cflog2otel_spark.pipeline import run_pipeline
 
     cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    batch = run_pipeline(spark, cfg, corpus, cache="none")
-    want = points(batch.sinks["http.server.requests"])
+    want = summed_points(run_pipeline(spark, cfg, corpus).points()["http.server.requests"])
 
     assert got == want and len(got) > 0

@@ -9,47 +9,47 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cflog2otel_spark.config import Config
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CF_LOG, CONFIGS, SOURCE1, SOURCE2
+from .conftest import CONFIGS, SOURCE1, SOURCE2, generated_lines, summed_points
 
 
 def test_streaming_late_data_updates_window_idempotently(spark, tmp_path):
-    """A late file adding rows to an ALREADY-EMITTED window must replace
-    that window's delta, not duplicate it (T4: dynamic window-partition
-    overwrite + checkpointed resume)."""
+    """A restart whose only new file holds two late lines for ONE already
+    emitted key adds one delta row for that key and keeps every row the
+    first run wrote: per-key sums equal the batch pipeline over all lines
+    (T4: per-batch deltas, checkpointed resume)."""
+    from cflog2otel_spark.pipeline import run_pipeline
     from cflog2otel_spark.streaming.stream import run_streaming_pipeline
 
     inp, out, ck = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    _, lines = read_cf_log_file(CF_LOG)
-
-    # batch 1: only the three 22:42 (2xx) lines
-    tokenized_df_from_lines(spark, lines[:3], SOURCE1).write.mode("overwrite").parquet(inp)
-    cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    for q in run_streaming_pipeline(spark, cfg, inp, out, ck):
-        assert q.awaitTermination(120), "streaming query timed out (120s)"
     sink = f"{out}/http.server.requests"
-    first = {
-        (str(r["window_start"]), r["attrs"][0]["value"]): r["value"]
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert first == {("2019-12-01 22:42:00", "2xx"): 3}
+    cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
+    lines = generated_lines(spark, 300, seed=5)
 
-    # batch 2 (restart, same checkpoint): a LATE file with rows in the same
-    # 22:42 window plus the 22:51 lines
-    tokenized_df_from_lines(spark, lines, SOURCE2).write.mode("append").parquet(inp)
-    for q in run_streaming_pipeline(spark, cfg, inp, out, ck):
-        assert q.awaitTermination(120), "streaming query timed out (120s)"
-    second = {
-        (str(r["window_start"]), r["attrs"][0]["value"]): r["value"]
-        for r in spark.read.parquet(sink).collect()
-    }
-    # streaming state accumulated: 3 (old) + 3 (late) in 22:42; window
-    # partition overwritten once, never duplicated
-    assert second == {
-        ("2019-12-01 22:42:00", "2xx"): 6,
-        ("2019-12-01 22:51:00", "5xx"): 3,
-    }
+    def drain() -> list[dict]:
+        for q in run_streaming_pipeline(spark, cfg, inp, out, ck):
+            assert q.awaitTermination(120), "streaming query timed out (120s)"
+        return [r.asDict(recursive=True) for r in spark.read.parquet(sink).collect()]
+
+    def row_set(rows: list[dict]) -> set:
+        return {(*summed_points([r]).popitem(), r.get("_batch_id")) for r in rows}
+
+    tokenized_df_from_lines(spark, lines, SOURCE1).write.parquet(inp)
+    first = drain()
+    assert len(first) > 100
+
+    # restart on the same checkpoint: a new file with two copies of the
+    # earliest line, late for a window emitted by the first run
+    late = [min(lines)] * 2
+    tokenized_df_from_lines(spark, late, SOURCE2).write.mode("append").parquet(inp)
+    second = drain()
+    assert row_set(first) <= row_set(second) and len(second) == len(first) + 1
+
+    batch = run_pipeline(
+        spark, cfg, tokenized_df_from_lines(spark, lines + late, SOURCE1)
+    ).points()["http.server.requests"]
+    assert summed_points(second) == summed_points(batch)
 
 
 GO_EPOCH = datetime(1, 1, 1, tzinfo=timezone.utc)

@@ -10,105 +10,79 @@ from pyspark.sql import functions as F
 from cflog2otel_spark.config import Config
 from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
 
-from .conftest import CF_LOG, CF_LOG2, CONFIGS, SOURCE1, SOURCE2
+from .conftest import (
+    CF_LOG, CF_LOG2, CONFIGS, SOURCE1, SOURCE2, generated_lines, summed_points)
 
 
-def test_streaming_matches_batch(spark, cf_fixture_df, tmp_path):
-    """availableNow streaming run over the fixture corpus == batch goldens
-    once the stream drains (watermark closes all windows on completion)."""
+def _four_metric_config() -> Config:
+    """Count and Sum (multi_metrics), a switch-attribute Count filtered to
+    5xx, and the 5m custom-bucket Histogram, on one resource."""
+
+    def metrics(name: str) -> list[dict]:
+        with open(f"{CONFIGS}/{name}") as fh:
+            return json.load(fh)["metrics"]
+
+    with open(f"{CONFIGS}/multi_metrics.json") as fh:
+        d = json.load(fh)
+    switch = metrics("switch_case.json")[0]
+    switch["filter"] = metrics("request_count_for_5xx.json")[0]["filter"]
+    d["metrics"] += [switch, *metrics("request_time_histogram_custom_buckets.json")]
+    return Config.from_json(d)
+
+
+def test_streaming_multi_batch_matches_batch(spark, tmp_path):
+    """Input files drained one per micro-batch: summing each sink's
+    per-batch delta rows per key equals the batch pipeline for Count, Sum,
+    a filtered switch metric and a custom-bucket Histogram, and a file
+    whose object key does not parse is skipped in both. The drain is one
+    stateless query and leaves only its own checkpoint."""
+    from cflog2otel_spark.pipeline import run_pipeline, sink_dirname
     from cflog2otel_spark.streaming.stream import run_streaming_pipeline
 
-    inp = str(tmp_path / "in")
-    cf_fixture_df.write.parquet(inp)
-    cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    queries = run_streaming_pipeline(
-        spark, cfg, inp, str(tmp_path / "out"), str(tmp_path / "ck")
-    )
-    for q in queries:
-        assert q.awaitTermination(120), "streaming query timed out (120s)"
-    out = spark.read.parquet(str(tmp_path / "out/http.server.requests"))
-    rows = {
-        (str(r["window_start"]), r["attrs"][0]["value"]): r["value"]
-        for r in out.collect()
-    }
-    assert rows == {
-        ("2019-12-01 22:42:00", "2xx"): 3,
-        ("2019-12-01 22:51:00", "5xx"): 3,
-    }
+    lines = generated_lines(spark, 600, seed=11)
+    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    # one file per micro-batch; the hour's lines are spread over the first
+    # three files, so every window spans batches
+    sources = (SOURCE1, SOURCE2, SOURCE2.replace("RT3", "RT5"), "logs/unparseable.gz")
+    for i, src in enumerate(sources):
+        tokenized_df_from_lines(spark, lines[i::3], src).coalesce(1).write.mode(
+            "append").parquet(inp)
+
+    cfg = _four_metric_config()
+    assert [m.type for m in cfg.metrics] == ["Count", "Sum", "Count", "Histogram"]
+    queries = run_streaming_pipeline(spark, cfg, inp, out, ck, max_files_per_trigger=1)
+    assert len(queries) == 1
+    assert queries[0].awaitTermination(180), "streaming query timed out (180s)"
+    progress = queries[0].recentProgress
+    assert len(progress) == 4
+    assert all(not p["stateOperators"] for p in progress)
+    assert os.listdir(ck) == ["single_pass"]
+
+    batch = run_pipeline(spark, cfg, spark.read.parquet(inp)).points()
+    for m in cfg.metrics:
+        sink = spark.read.parquet(f"{out}/{sink_dirname(m.name)}")
+        assert sink.select("_batch_id").distinct().count() == 3, m.name
+        want = summed_points(batch[m.name])
+        assert want and summed_points(sink.collect()) == want, m.name
 
 
-def test_stateful_drain_parses_once_via_tee(spark, cf_fixture_df, tmp_path):
-    """r7 stateful-drain rework: ONE stateless parse tee decodes each
-    micro-batch and appends the pruned parsed projection to a staging dir
-    under the checkpoint; every per-metric stateful query consumes the
-    staged columnar files instead of re-decoding the raw token stream."""
+def test_streaming_rejects_removed_topology_checkpoint(spark, tmp_path):
+    """A checkpoint left by the removed per-metric topology (parse tee
+    staging, or one query checkpoint per metric sink) fails before any
+    query starts, for plain and scheme-qualified paths."""
+    from cflog2otel_spark.pipeline import sink_dirname
     from cflog2otel_spark.streaming.stream import run_streaming_pipeline
 
-    inp = str(tmp_path / "in")
-    cf_fixture_df.write.parquet(inp)
-    cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    queries = run_streaming_pipeline(spark, cfg, inp, out, ck)
-    for q in queries:
-        assert q.awaitTermination(120), "streaming query timed out (120s)"
-
-    # staging holds one parsed row per input row, pruned to the columns
-    # some metric expression references (+ timestamp) — never the payload
-    staged = spark.read.parquet(f"{ck}/parsed_staging/data")
-    assert staged.count() == cf_fixture_df.count()
-    cols = set(staged.columns)
-    assert "timestamp" in cols
-    assert "tokens" not in cols and "doc_id" not in cols and "n_tok" not in cols
-
-    # the aggregation queries sourced the staged files, not the raw stream
-    for q in queries:
-        desc = q.lastProgress["sources"][0]["description"]
-        assert "parsed_staging" in desc, desc
-
-
-def test_streaming_single_pass_matches_batch(spark, cf_fixture_df, tmp_path):
-    """Single-scan foreachBatch fan-out: every metric sink derives from ONE
-    decode/parse per micro-batch; summing the per-batch delta rows per
-    window must equal the batch pipeline (OTLP delta-consumer contract).
-    Run with maxFilesPerTrigger=1 over two files so windows genuinely span
-    micro-batches — the delta-rows-per-batch semantic is exercised, not
-    just the single-batch degenerate case."""
-    from cflog2otel_spark.streaming.stream import run_streaming_pipeline_single_pass
-
-    _, lines2 = read_cf_log_file(CF_LOG2)
-    inp = str(tmp_path / "in")
-    # two parquet files -> two micro-batches at maxFilesPerTrigger=1; both
-    # carry 22:xx lines so the same hour window spans batches
-    cf_fixture_df.write.parquet(inp)
-    tokenized_df_from_lines(spark, lines2, SOURCE2).write.mode("append").parquet(inp)
-
-    cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    queries = run_streaming_pipeline_single_pass(
-        spark, cfg, inp, str(tmp_path / "out"), str(tmp_path / "ck"),
-        max_files_per_trigger=1,
-    )
-    for q in queries:
-        assert q.awaitTermination(120), "streaming query timed out (120s)"
-
-    out = spark.read.parquet(str(tmp_path / "out/http.server.requests"))
-    assert out.select("_batch_id").distinct().count() >= 2  # really multi-batch
-    streamed = {
-        (str(r["window_start"]), r["k"]): r["v"]
-        for r in out.groupBy(
-            "window_start", F.col("attrs")[0]["value"].alias("k")
-        ).agg(F.sum("value").alias("v")).collect()
-    }
-
-    from cflog2otel_spark.pipeline import run_pipeline
-
-    batch = run_pipeline(
-        spark, cfg, spark.read.parquet(inp), cache="none"
-    ).sinks["http.server.requests"]
-    expected = {
-        (str(r["window_start"]), r["attrs"][0]["value"]): r["value"]
-        for r in batch.collect()
-    }
-    assert streamed == expected
+    cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
+    for i, stale in enumerate(("parsed_staging", sink_dirname("http.server.total_bytes"))):
+        ck = tmp_path / f"ck{i}"
+        (ck / stale / "offsets").mkdir(parents=True)
+        for path in (str(ck), f"file://{ck}"):
+            with pytest.raises(ValueError, match=f"{ck}.*{stale}"):
+                run_streaming_pipeline(
+                    spark, cfg, str(tmp_path / "in"), str(tmp_path / "out"), path)
+        assert sorted(os.listdir(ck)) == [stale]
+    assert not spark.streams.active
 
 
 def test_lineage_manifest_and_resume(spark, tmp_path):
