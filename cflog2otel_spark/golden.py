@@ -14,16 +14,24 @@ trees canonically:
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from typing import Any
 
 from .pipeline import PipelineResult
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
 def _rfc3339(dt: datetime) -> str:
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
+    # naive datetimes are driver-local time, as PySpark builds them;
+    # astimezone reads a naive value as local time (honouring `fold`)
     return dt.astimezone(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def _nanos(dt: datetime) -> int:
+    """Unix nanoseconds of a data-point time (naive = driver-local)."""
+    return (dt.astimezone(timezone.utc) - _EPOCH) // timedelta(microseconds=1) * 1000
 
 
 def _coerce(v: str, t: str):
@@ -174,11 +182,6 @@ def encode_otlp(result: PipelineResult, config) -> list[dict]:
             for p in pairs
         ]
 
-    def nanos(dt: datetime) -> int:
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * 1_000_000_000)
-
     by_resource: dict[str, dict] = {}
     res_types, metric_types = _attr_type_maps(result, config)
     ordered_names = sorted(result.sinks, key=lambda n: result.metric_index[n])
@@ -229,8 +232,8 @@ def encode_otlp(result: PipelineResult, config) -> list[dict]:
             dp: dict[str, Any] = {}
             if row["attrs"]:
                 dp["attributes"] = attrs(row["attrs"], metric_types[name])
-            dp["start_time_unix_nano"] = nanos(row["window_start"])
-            dp["time_unix_nano"] = nanos(row["window_end"])
+            dp["start_time_unix_nano"] = _nanos(row["window_start"])
+            dp["time_unix_nano"] = _nanos(row["window_end"])
             if m.type == "Count":
                 dp["Value"] = {"AsInt": int(row["value"])}
                 metric["Data"]["Sum"]["data_points"].append(dp)

@@ -70,16 +70,16 @@ def write_run_manifest(
     Pass the pipeline's wall time as elapsed_sec to record throughput
     alongside the skew metrics.
 
-    `sink_rows` counts `result.points()`: the data points are collected to
-    the driver once here and held on the result until `unpersist()`, so a
-    later golden or OTLP encode of the same result runs no Spark job. They
-    are bounded by windows x attribute cardinality, and export collects
-    all of them anyway."""
+    `sink_rows` counts the rows of `result.tables()`: the data points are
+    collected to the driver once here and held on the result until
+    `unpersist()`, so a later sink write, golden or OTLP encode of the same
+    result runs no Spark job. They are bounded by windows x attribute
+    cardinality, and export sends all of them anyway."""
     os.makedirs(manifest_dir, exist_ok=True)
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
     stats = source_stats(result.parsed)
-    sink_counts = {name: len(rows) for name, rows in result.points().items()}
+    sink_counts = {name: t.num_rows for name, t in result.tables().items()}
     total = sum(s["rows"] for s in stats)
     manifest = {
         "run_id": run_id,

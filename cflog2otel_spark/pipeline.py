@@ -10,10 +10,17 @@ branch then does a single shuffle on its own (window, attrs) keys.
 
 from __future__ import annotations
 
+import json
+import uuid
+from collections.abc import Mapping
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 from pyspark.storagelevel import StorageLevel
 
 from .config import Config
@@ -54,45 +61,81 @@ def sink_dirname(name: str) -> str:
     return enc
 
 
+class _Points(Mapping):
+    """Metric name -> its data points as dicts, each metric's rows built
+    from its held Arrow table on first access."""
+
+    def __init__(self, tables: dict[str, pa.Table]):
+        self._tables = tables
+        self._rows: dict[str, list[dict]] = {}
+
+    def __getitem__(self, name: str) -> list[dict]:
+        if name not in self._rows:
+            self._rows[name] = _table_rows(self._tables[name])
+        return self._rows[name]
+
+    def __iter__(self):
+        return iter(self._tables)
+
+    def __len__(self) -> int:
+        return len(self._tables)
+
+
+def _table_rows(table: pa.Table, to_ts=None) -> list[dict]:
+    """The rows `collect()` + `asDict(recursive=True)` give: timestamps
+    become naive driver-local datetimes built by PySpark's own
+    `TimestampType.fromInternal` (so `fold` matches too), or
+    `to_ts(micros)` if given."""
+    conv = to_ts or TimestampType().fromInternal
+    cols = []
+    for f, col in zip(table.schema, table.columns):
+        if pa.types.is_timestamp(f.type):
+            col = col.cast(pa.int64())  # toArrow's timestamps are microseconds
+            cols.append([None if v is None else conv(v) for v in col.to_pylist()])
+        else:
+            cols.append(col.to_pylist())
+    return [dict(zip(table.column_names, r)) for r in zip(*cols)]
+
+
 @dataclass
 class PipelineResult:
     """One run's fan-out: the shared parsed projection and one data-point
     DataFrame per metric.
 
-    `points()` collects every sink to the driver once and holds the rows
-    until `unpersist()`, so the manifest, golden and OTLP encoders share
-    one aggregation per metric instead of re-running it each. The held
-    rows are bounded by windows x attribute cardinality, the same data
-    points export collects anyway."""
+    `tables()` collects every sink to the driver once, as Arrow, and holds
+    the tables until `unpersist()`. The manifest, golden and OTLP encoders
+    and `write_sinks` all read those tables, so each metric's aggregation
+    runs once per result. The held tables are bounded by windows x
+    attribute cardinality, the same data points export sends anyway."""
 
     parsed: DataFrame
     sinks: dict[str, DataFrame]  # metric name -> data-point DataFrame
     metric_index: dict[str, int] = field(default_factory=dict)
     attr_types: AttributeTypes | None = None
-    _points: dict[str, list[dict]] | None = field(
+    _tables: dict[str, pa.Table] | None = field(
         default=None, init=False, repr=False, compare=False
     )
+    _points: _Points | None = field(default=None, init=False, repr=False, compare=False)
 
-    def points(self) -> dict[str, list[dict]]:
-        """Metric name -> its data points as dicts, collected once. The
-        sinks are independent jobs over the shared projection, so they
-        are collected concurrently, each thread in the caller's job group."""
+    def tables(self) -> dict[str, pa.Table]:
+        """Metric name -> its data points as an Arrow table, collected once
+        with `toArrow()`. The sinks are collected one after another in the
+        caller's thread: their jobs run in the caller's job group, and only
+        one Arrow result stream is in flight in the JVM at a time."""
+        if self._tables is None:
+            self._tables = {name: df.toArrow() for name, df in self.sinks.items()}
+        return self._tables
+
+    def points(self) -> Mapping[str, list[dict]]:
+        """Metric name -> its data points as the dicts `collect()` +
+        `asDict(recursive=True)` give, a lazy view of `tables()`."""
         if self._points is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            jsc = self.parsed.sparkSession.sparkContext._jsc.sc()
-            props = jsc.getLocalProperties().clone()
-
-            def collect(df: DataFrame) -> list[dict]:
-                jsc.setLocalProperties(props)
-                return [r.asDict(recursive=True) for r in df.collect()]
-
-            with ThreadPoolExecutor(max(1, min(len(self.sinks), 8))) as ex:
-                self._points = dict(zip(self.sinks, ex.map(collect, self.sinks.values())))
+            self._points = _Points(self.tables())
         return self._points
 
     def unpersist(self) -> None:
         self.parsed.unpersist()
+        self._tables = None
         self._points = None
 
 
@@ -220,34 +263,77 @@ def write_sinks(
     result: PipelineResult,
     out_dir: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
-    parallel: bool = True,
-    partition_by: str | None = None,
+    partition: str | None = None,
 ) -> None:
     """Per-metric sink writers (reference sink: OTLP export per resource,
-    app.go:230-239 — ours is a columnar table per metric config).
+    app.go:230-239 — ours is a table per metric config).
 
-    parallel=True submits every sink write from its own thread: the metric
-    branches are independent jobs over the shared persisted projection, so
-    the scheduler overlaps their shuffles/IO instead of leaving cores idle
-    between serial jobs (measured 1.6-1.8x on the 4-sink flagship; the
-    cache lock makes the shared projection materialize exactly once).
-    `partition_by` partitions every sink by that column and overwrites
-    only the partitions the write holds (dynamic overwrite)."""
+    Each metric's held table (`result.tables()`) is written from the driver
+    as one file under `{out_dir}/{sink_dirname(metric)}`, so the write starts
+    no Spark job once the tables are collected. Overwrite semantics: the
+    sink directory is replaced, or with `partition` (a Hive-style directory
+    name such as `_batch_id=3`) only that partition directory, the others
+    kept. Files go through the session's Hadoop FileSystem, so every scheme
+    Spark's own writer accepts works; each is written under a hidden
+    temporary name and renamed into place, so readers never see a partial
+    file, and `_SUCCESS` marks the sink root as Spark's writer does.
 
-    def write_one(kv) -> None:
-        name, df = kv
-        w = df.write.format(fmt).mode(mode)
-        if partition_by:
-            w = w.option("partitionOverwriteMode", "dynamic").partitionBy(partition_by)
-        w.save(f"{out_dir}/{sink_dirname(name)}")
+    `fmt="parquet"` writes the layout Spark's parquet writer gives by
+    default: snappy, INT96 timestamps and the Spark schema in the footer,
+    so readers see the column types they saw before. `fmt="json"` writes
+    JSON lines as Spark's JSON writer does."""
+    if fmt not in ("parquet", "json"):
+        raise ValueError(f"unsupported sink format {fmt!r}: parquet or json")
+    spark = result.parsed.sparkSession
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    root = Path(out_dir)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fname = f"part-00000-{uuid.uuid4()}-c000.{'snappy.parquet' if fmt == 'parquet' else 'json'}"
+    for name, table in result.tables().items():
+        if fmt == "parquet":
+            table = table.replace_schema_metadata({
+                "org.apache.spark.version": spark.version,
+                "org.apache.spark.sql.parquet.row.metadata": result.sinks[name].schema.json(),
+            })
+            buf = pa.BufferOutputStream()
+            pq.write_table(table, buf, compression="snappy", use_deprecated_int96_timestamps=True)
+            data = buf.getvalue().to_pybytes()
+        else:
+            data = _json_lines(table)
+        sink = Path(root, sink_dirname(name))
+        target = Path(sink, partition) if partition else sink
+        fs.delete(target, True)
+        tmp = Path(target, f".{fname}.tmp")
+        out = fs.create(tmp, True)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+        if not fs.rename(tmp, Path(target, fname)):
+            raise OSError(f"could not rename {tmp.toString()} into place")
+        fs.create(Path(sink, "_SUCCESS"), True).close()
 
-    items = list(result.sinks.items())
-    if parallel and len(items) > 1:
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(min(len(items), 8)) as ex:
-            list(ex.map(write_one, items))
-    else:
-        for kv in items:
-            write_one(kv)
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _json_lines(table: pa.Table) -> bytes:
+    """Spark's JSON writer output for `table`: one object per row in schema
+    order, null fields omitted, timestamps as yyyy-MM-dd'T'HH:mm:ss.SSSXXX
+    in UTC."""
+
+    def utc(micros: int) -> str:
+        ts = _EPOCH + timedelta(microseconds=micros)
+        return ts.strftime("%Y-%m-%dT%H:%M:%S.") + f"{ts.microsecond // 1000:03d}Z"
+
+    def drop_nulls(v):
+        if isinstance(v, dict):
+            return {k: drop_nulls(x) for k, x in v.items() if x is not None}
+        if isinstance(v, list):
+            return [drop_nulls(x) for x in v]
+        return v
+
+    return "".join(
+        json.dumps(drop_nulls(row), ensure_ascii=False, separators=(",", ":")) + "\n"
+        for row in _table_rows(table, utc)
+    ).encode("utf-8")

@@ -10,8 +10,8 @@ mapping is the same, one micro-batch per invocation:
     -> foreachBatch: decode/parse/enrich + every metric aggregation
        (run_pipeline, the batch fan-out over one pruned projection)
     -> sink: one delta row per key per micro-batch, in the batch's
-       `_batch_id` partition (T4: dynamic overwrite, so a replayed batch
-       replaces its own rows)
+       `_batch_id` partition (T4: a replayed batch replaces that partition
+       directory, so it replaces its own rows)
 
 There is no streaming state: a key whose lines arrive in several batches
 (late data, windows spanning files) gets one row per batch, and readers sum
@@ -79,31 +79,25 @@ def run_streaming_pipeline(
     Each micro-batch writes its windows' DELTAS under
     `{out_dir}/{sink_dirname(metric)}/_batch_id=N`; reading a sink sums the
     rows of one key (counts and sums added, histogram buckets added
-    element-wise, min/max of the extremes). Exactly-once on retry: the
-    batch's `_batch_id` partition is dynamically overwritten.
+    element-wise, min/max of the extremes). Exactly-once on retry: a
+    replayed batch replaces its own `_batch_id` directory.
 
     trigger_once=True (availableNow) drains the backlog and stops, the
     reference's one-invocation-per-notification model; False runs a
     30-second processing-time trigger. `watermark` has no effect: the drain
     keeps no state to bound. It is accepted so existing callers still run.
     """
-    from pyspark.sql import functions as F
-
     _reject_per_metric_checkpoint(spark, cfg, checkpoint_dir)
 
     def process(batch_df, batch_id: int) -> None:
         # the batch pipeline itself: the same skip-or-fail rule for
         # unparseable object keys, the cached projection pruned to the
-        # columns some metric expression references, the concurrent sink
-        # writes, and the batch path's plan shape (and its JIT-compiled
-        # codegen)
+        # columns some metric expression references, the sinks collected
+        # once and written from the driver, and the batch path's plan
+        # shape (and its JIT-compiled codegen)
         res = run_pipeline(spark, cfg, batch_df, keep_payload=False)
-        res.sinks = {
-            name: df.withColumn("_batch_id", F.lit(batch_id))
-            for name, df in res.sinks.items()
-        }
         try:
-            write_sinks(res, out_dir, partition_by="_batch_id")
+            write_sinks(res, out_dir, partition=f"_batch_id={batch_id}")
         finally:
             res.unpersist()
 

@@ -119,7 +119,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         help="raw CloudFront standard-log files (.gz or plain text) instead of --input",
     )
     ap.add_argument("--out", help="sink output directory")
-    ap.add_argument("--format", default="parquet", choices=["parquet", "json", "csv"])
+    ap.add_argument(
+        "--format", default="parquet", choices=["parquet", "json"],
+        help="sink file format: one parquet file, or JSON lines, per metric",
+    )
     ap.add_argument("--strict", action="store_true", help="fail on malformed rows (reference semantics)")
     ap.add_argument("--event-time", help="backfill event time (ISO), enables the lateness gate")
     ap.add_argument(

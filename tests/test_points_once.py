@@ -1,20 +1,23 @@
-"""One aggregation per metric per run: the manifest, golden and OTLP
-encoders share the data points `PipelineResult.points()` collects once.
+"""One aggregation per metric per run: the manifest, the sink writers and
+the golden and OTLP encoders share the data points `PipelineResult`
+collects once, as Arrow.
 
 Self-contained: synthetic input from the generator and a config from
 configs/, no reference testdata."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import time
 
 import pytest
 
 from cflog2otel_spark.config import Config, ConfigError
 from cflog2otel_spark.golden import encode_golden, encode_otlp
 from cflog2otel_spark.lineage import write_run_manifest
-from cflog2otel_spark.pipeline import run_pipeline
+from cflog2otel_spark.pipeline import run_pipeline, sink_dirname, write_sinks
 from cflog2otel_spark.sources.generator import generate_tokenized
 
 from .conftest import CONFIGS
@@ -96,8 +99,8 @@ def test_manifest_and_export_share_one_collect(spark, tokenized, tmp_path):
     assert _in_group(
         spark, "points-export2", lambda: (encode_otlp(res2, cfg), encode_golden(res2, cfg))
     ) == (otlp, golden)
-    # here export collects, on pool threads that carry the caller's job
-    # group, so the zero-job check above would have seen those jobs
+    # here export collects, in the caller's thread and so in its job
+    # group: the zero-job check above would have seen those jobs
     assert _group_jobs(spark, "points-export2")
     held = res2.points()
     # the manifest still runs its per-source stats, but counts the held rows
@@ -107,7 +110,151 @@ def test_manifest_and_export_share_one_collect(spark, tokenized, tmp_path):
 
     for r in (res, res2):
         r.unpersist()
-        assert r._points is None
+        assert r._points is None and r._tables is None
+
+
+def _mixed_config() -> Config:
+    """Count and Sum (multi_metrics), the 5m custom-bucket Histogram, and a
+    Count whose filter matches no line."""
+    with open(f"{CONFIGS}/multi_metrics.json") as fh:
+        d = json.load(fh)
+    with open(f"{CONFIGS}/request_time_histogram_custom_buckets.json") as fh:
+        d["metrics"] += json.load(fh)["metrics"]
+    d["metrics"].append({"name": "none/matched", "type": "Count",
+                         "filter": {"expr": "log.scStatus == 999"}})
+    return Config.from_json(d)
+
+
+@pytest.fixture(scope="module")
+def mixed(spark, tokenized):
+    cfg = _mixed_config()
+    res = run_pipeline(spark, cfg, tokenized)
+    yield cfg, res
+    res.unpersist()
+
+
+def _key(row: dict) -> str:
+    return json.dumps(row, sort_keys=True, default=repr)
+
+
+def _rows(df) -> list[dict]:
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=_key)
+
+
+def _parquet_files(path) -> list[str]:
+    return sorted(f for f in glob.glob(f"{path}/**", recursive=True) if f.endswith(".parquet"))
+
+
+def test_points_keep_the_collect_row_contract(mixed):
+    cfg, res = mixed
+    for name, df in res.sinks.items():
+        # repr keeps the datetime's fold and naive-ness
+        assert sorted(map(_key, res.points()[name])) == sorted(map(_key, _rows(df))), name
+        assert all(list(r) == df.columns for r in res.points()[name]), name
+    assert res.points()["none/matched"] == []
+
+
+def test_write_sinks_after_points_starts_no_job(spark, mixed, tmp_path):
+    cfg, res = mixed
+    res.points()
+    out = str(tmp_path / "sinks")
+    _in_group(spark, "sink-write", lambda: write_sinks(res, out))
+    assert _group_jobs(spark, "sink-write") == []
+    assert sorted(os.listdir(out)) == sorted(sink_dirname(m.name) for m in cfg.metrics)
+    for m in cfg.metrics:
+        d = f"{out}/{sink_dirname(m.name)}"
+        assert len(_parquet_files(d)) == 1, m.name
+        assert os.path.exists(f"{d}/_SUCCESS")
+        assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
+
+
+def test_parquet_sinks_read_back_equal_points(spark, mixed, tmp_path):
+    """Spark and DuckDB read our sinks as the rows and schema Spark's own
+    parquet writer gives for the same DataFrames; a metric whose filter
+    matches nothing writes a readable zero-row file."""
+    import duckdb
+
+    cfg, res = mixed
+    ours, spark_out = str(tmp_path / "ours"), str(tmp_path / "spark")
+    write_sinks(res, ours)
+    con = duckdb.connect()
+    for name, df in res.sinks.items():
+        d = sink_dirname(name)
+        df.write.parquet(f"{spark_out}/{d}")
+        back, want = spark.read.parquet(f"{ours}/{d}"), spark.read.parquet(f"{spark_out}/{d}")
+        assert back.schema == want.schema, name
+        assert back.schema.simpleString() == df.schema.simpleString(), name
+        assert _rows(back) == _rows(want) == sorted(res.points()[name], key=_key), name
+        sql = ("SELECT * EXCLUDE (window_start, window_end), epoch(window_start), "
+               "epoch(window_end) FROM read_parquet('{}/{}/*.parquet') ORDER BY ALL")
+        assert (con.execute(sql.format(ours, d)).fetchall()
+                == con.execute(sql.format(spark_out, d)).fetchall()), name
+    assert spark.read.parquet(f"{ours}/{sink_dirname('none/matched')}").count() == 0
+    assert len(_parquet_files(f"{ours}/{sink_dirname('none/matched')}")) == 1
+    con.close()
+
+
+def test_json_sinks_read_back_as_spark_json(spark, mixed, tmp_path):
+    cfg, res = mixed
+    ours, spark_out = str(tmp_path / "ours"), str(tmp_path / "spark")
+    write_sinks(res, ours, fmt="json")
+    for name, df in res.sinks.items():
+        if name == "none/matched":
+            continue  # nothing to infer a JSON schema from
+        d = sink_dirname(name)
+        df.write.json(f"{spark_out}/{d}")
+        back, want = spark.read.json(f"{ours}/{d}"), spark.read.json(f"{spark_out}/{d}")
+        assert back.schema == want.schema, name
+        assert _rows(back) == _rows(want), name
+        assert len(glob.glob(f"{ours}/{d}/*.json")) == 1
+
+
+def test_overwrite_replaces_only_its_own_directory(spark, mixed, tmp_path):
+    cfg, res = mixed
+    out = str(tmp_path / "sinks")
+    d = f"{out}/{sink_dirname(cfg.metrics[0].name)}"
+    write_sinks(res, out, partition="_batch_id=0")
+    write_sinks(res, out, partition="_batch_id=1")
+    first = _parquet_files(f"{d}/_batch_id=0")
+    write_sinks(res, out, partition="_batch_id=1")
+    assert _parquet_files(f"{d}/_batch_id=0") == first
+    assert len(first) == 1 and len(_parquet_files(f"{d}/_batch_id=1")) == 1
+    back = spark.read.parquet(d)
+    n = len(res.points()[cfg.metrics[0].name])
+    assert sorted(r[0] for r in back.groupBy("_batch_id").count().collect()) == [0, 1]
+    assert back.count() == 2 * n
+
+    # without a partition the whole sink directory is replaced
+    write_sinks(res, out)
+    assert len(_parquet_files(d)) == 1
+    assert spark.read.parquet(d).count() == n
+
+
+def test_golden_and_otlp_times_do_not_depend_on_driver_tz(spark, tokenized, mixed):
+    """PySpark returns naive datetimes in the driver's local time; the
+    encoders read them as local time, so a non-UTC driver encodes the same
+    instants."""
+    cfg, res = mixed
+    want = encode_golden(res, cfg), encode_otlp(res, cfg)
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        fresh = run_pipeline(spark, cfg, tokenized)
+        try:
+            got = encode_golden(fresh, cfg), encode_otlp(fresh, cfg)
+            first = [min(r["window_start"] for r in x.points()[cfg.metrics[0].name])
+                     for x in (res, fresh)]
+        finally:
+            fresh.unpersist()
+    finally:
+        if tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()
+    assert first[0] != first[1]  # the rows really are in New York time
+    assert got == want
 
 
 def test_validation_is_memoized_only_on_success(spark, monkeypatch):
