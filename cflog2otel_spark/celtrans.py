@@ -361,7 +361,7 @@ class _Parser:
         if t.kind == "float":
             return self._methods((f"CAST({t.text} AS DOUBLE)", "double"))
         if t.kind == "string":
-            return self._methods((_sql_str(_unescape(t.text)), "string"))
+            return self._methods((sql_str(_unescape(t.text)), "string"))
         if t.kind == "ident":
             if t.text == "true":
                 return self._methods(("true", "bool"))
@@ -612,7 +612,8 @@ def _unescape(lit: str) -> str:
     return re.sub(r"\\(.)", lambda m: {"n": "\n", "t": "\t", "r": "\r"}.get(m.group(1), m.group(1)), body)
 
 
-def _sql_str(s: str) -> str:
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 

@@ -79,7 +79,7 @@ def encode_golden(result: PipelineResult, config) -> list[dict]:
     """Data points -> list of ResourceMetrics JSON trees (usually one)."""
     by_resource: dict[str, dict] = {}
     res_types, metric_types = _attr_type_maps(result, config)
-    ordered_names = sorted(result.sinks, key=lambda n: result.metric_index[n])
+    ordered_names = sorted(result.metric_index, key=result.metric_index.get)
     for name in ordered_names:
         m = config.metrics[result.metric_index[name]]
         for row in result.points()[name]:
@@ -184,7 +184,7 @@ def encode_otlp(result: PipelineResult, config) -> list[dict]:
 
     by_resource: dict[str, dict] = {}
     res_types, metric_types = _attr_type_maps(result, config)
-    ordered_names = sorted(result.sinks, key=lambda n: result.metric_index[n])
+    ordered_names = sorted(result.metric_index, key=result.metric_index.get)
     for name in ordered_names:
         m = config.metrics[result.metric_index[name]]
         for row in result.points()[name]:

@@ -23,26 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def source_stats(parsed: DataFrame) -> list[dict]:
-    """Per-source lineage: rows, token volume, timestamp span. One shuffle
-    over the (small) source dimension."""
-    agg = [
-        F.count(F.lit(1)).alias("rows"),
-        F.min("timestamp").alias("min_ts"),
-        F.max("timestamp").alias("max_ts"),
-    ]
-    if "n_tok" in parsed.columns:
-        agg.append(F.sum("n_tok").alias("tokens"))
-    rows = parsed.groupBy("source").agg(*agg).collect()
-    out = []
-    for r in rows:
-        d = r.asDict()
-        for k in ("min_ts", "max_ts"):
-            d[k] = str(d[k]) if d[k] is not None else None
-        out.append(d)
-    return out
-
-
 def skew_metrics(stats: list[dict]) -> dict:
     counts = sorted((s["rows"] for s in stats), reverse=True)
     total = sum(counts) or 1
@@ -58,6 +38,10 @@ def skew_metrics(stats: list[dict]) -> dict:
     }
 
 
+def _str_or_none(v):
+    return None if v is None else str(v)
+
+
 def write_run_manifest(
     spark: SparkSession,
     result,
@@ -70,15 +54,19 @@ def write_run_manifest(
     Pass the pipeline's wall time as elapsed_sec to record throughput
     alongside the skew metrics.
 
-    `sink_rows` counts the rows of `result.tables()`: the data points are
-    collected to the driver once here and held on the result until
+    `sources` are `result.source_stats()` and `sink_rows` counts the rows
+    of `result.tables()`: the one aggregation that computes both is
+    collected to the driver here and held on the result until
     `unpersist()`, so a later sink write, golden or OTLP encode of the same
-    result runs no Spark job. They are bounded by windows x attribute
-    cardinality, and export sends all of them anyway."""
+    result runs no Spark job. The data points are bounded by windows x
+    attribute cardinality, and export sends all of them anyway."""
     os.makedirs(manifest_dir, exist_ok=True)
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
-    stats = source_stats(result.parsed)
+    stats = [
+        {**s, "min_ts": _str_or_none(s["min_ts"]), "max_ts": _str_or_none(s["max_ts"])}
+        for s in result.source_stats()
+    ]
     sink_counts = {name: t.num_rows for name, t in result.tables().items()}
     total = sum(s["rows"] for s in stats)
     manifest = {

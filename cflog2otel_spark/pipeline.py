@@ -1,11 +1,12 @@
 """End-to-end pipeline: read -> parse -> enrich -> route -> aggregate -> sinks.
 
-The reference interleaves all metric configs in one pass over rows
-(/root/reference/aggregation.go:50-73); metrics never interact, so we branch
-N independent aggregations off ONE cached parse+enrich scan (SURVEY.md §3.1).
-At 100 TB the cached intermediate is the pruned projection (only columns any
-metric references plus payload), serialized columnar in memory-and-disk; each
-branch then does a single shuffle on its own (window, attrs) keys.
+The reference interleaves all metric configs in one pass over rows, one
+accumulator keyed by (metric, resource set, window, attribute set)
+(the reference's aggregation.go:50-73). So do we: the parse+enrich
+projection, pruned to the columns some metric references plus the payload,
+feeds ONE aggregation of every metric (operators/aggregate.aggregate_points)
+with the manifest's per-source stats folded in. It is read once, by that
+aggregation's single job, so nothing is cached.
 """
 
 from __future__ import annotations
@@ -20,11 +21,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql.types import StructType, TimestampType
 
 from .config import Config
-from .operators.aggregate import AttributeTypes, aggregate_metric, config_attribute_types
+from .operators.aggregate import AttributeTypes, aggregate_points, config_attribute_types
 from .operators.enrich import enrich
 from .operators.parse import decode_and_parse
 
@@ -61,24 +61,25 @@ def sink_dirname(name: str) -> str:
     return enc
 
 
-class _Points(Mapping):
-    """Metric name -> its data points as dicts, each metric's rows built
-    from its held Arrow table on first access."""
+class _Lazy(Mapping):
+    """Metric name -> `build(name)`, each value built on first access."""
 
-    def __init__(self, tables: dict[str, pa.Table]):
-        self._tables = tables
-        self._rows: dict[str, list[dict]] = {}
+    def __init__(self, names, build):
+        self._names, self._build = names, build
+        self._values: dict = {}
 
-    def __getitem__(self, name: str) -> list[dict]:
-        if name not in self._rows:
-            self._rows[name] = _table_rows(self._tables[name])
-        return self._rows[name]
+    def __getitem__(self, name: str):
+        if name not in self._values:
+            if name not in self._names:
+                raise KeyError(name)
+            self._values[name] = self._build(name)
+        return self._values[name]
 
     def __iter__(self):
-        return iter(self._tables)
+        return iter(self._names)
 
     def __len__(self) -> int:
-        return len(self._tables)
+        return len(self._names)
 
 
 def _table_rows(table: pa.Table, to_ts=None) -> list[dict]:
@@ -99,49 +100,88 @@ def _table_rows(table: pa.Table, to_ts=None) -> list[dict]:
 
 @dataclass
 class PipelineResult:
-    """One run's fan-out: the shared parsed projection and one data-point
-    DataFrame per metric.
+    """One run: the pruned parsed projection and the ONE aggregation of
+    every metric (`aggregate_points`), with per-source stats when the run
+    keeps the payload.
 
-    `tables()` collects every sink to the driver once, as Arrow, and holds
-    the tables until `unpersist()`. The manifest, golden and OTLP encoders
-    and `write_sinks` all read those tables, so each metric's aggregation
-    runs once per result. The held tables are bounded by windows x
-    attribute cardinality, the same data points export sends anyway."""
+    `tables()` collects that aggregation to the driver once, as Arrow,
+    splits it into one table per metric, and holds the tables (and the
+    source stats) until `unpersist()`. The manifest, golden and OTLP
+    encoders and `write_sinks` all read them, so a run executes one Spark
+    aggregation, two jobs under AQE. The held tables are bounded by
+    windows x attribute cardinality, the same data points export sends
+    anyway."""
 
     parsed: DataFrame
-    sinks: dict[str, DataFrame]  # metric name -> data-point DataFrame
+    points_df: DataFrame  # aggregate_points over `parsed`
     metric_index: dict[str, int] = field(default_factory=dict)
     attr_types: AttributeTypes | None = None
     _tables: dict[str, pa.Table] | None = field(
         default=None, init=False, repr=False, compare=False
     )
-    _points: _Points | None = field(default=None, init=False, repr=False, compare=False)
+    _stats: list[dict] | None = field(default=None, init=False, repr=False, compare=False)
+    _points: Mapping | None = field(default=None, init=False, repr=False, compare=False)
+    _sinks: Mapping | None = field(default=None, init=False, repr=False, compare=False)
+
+    @property
+    def sinks(self) -> Mapping[str, DataFrame]:
+        """Metric name -> its data points as a DataFrame view of the one
+        aggregation, each built on first access. Each view re-runs the whole
+        aggregation; the product path reads `tables()` instead."""
+        if self._sinks is None:
+            self._sinks = _Lazy(self.metric_index, lambda name: self.points_df.selectExpr(
+                f"inline(p{self.metric_index[name]})"
+            ))
+        return self._sinks
+
+    def sink_schema(self, name: str) -> StructType:
+        """The Spark schema of metric `name`'s sink rows, read off the one
+        aggregation's schema: no view is analysed."""
+        return self.points_df.schema[f"p{self.metric_index[name]}"].dataType.elementType
 
     def tables(self) -> dict[str, pa.Table]:
-        """Metric name -> its data points as an Arrow table, collected once
-        with `toArrow()`. The sinks are collected one after another in the
-        caller's thread: their jobs run in the caller's job group, and only
-        one Arrow result stream is in flight in the JVM at a time."""
+        """Metric name -> its data points as an Arrow table, from one
+        `toArrow()` of the aggregation in the caller's thread (so its jobs
+        run in the caller's job group)."""
         if self._tables is None:
-            self._tables = {name: df.toArrow() for name, df in self.sinks.items()}
+            t = self.points_df.toArrow()
+
+            def rows_of(col: str) -> pa.Table:
+                # each row's array holds its one struct or nothing
+                return pa.Table.from_struct_array(t.column(col).combine_chunks().flatten())
+
+            self._tables = {name: rows_of(f"p{i}") for name, i in self.metric_index.items()}
+            if "stats" in t.column_names:
+                self._stats = _table_rows(rows_of("stats"))
         return self._tables
+
+    def source_stats(self) -> list[dict]:
+        """Per source: `source`, `rows`, `min_ts`/`max_ts` (as `collect()`
+        gives them) and, with a token column, `tokens`; collected with the
+        data points by `tables()`."""
+        self.tables()
+        if self._stats is None:
+            raise ValueError(
+                "this result has no per-source stats: run the pipeline with keep_payload=True"
+            )
+        return self._stats
 
     def points(self) -> Mapping[str, list[dict]]:
         """Metric name -> its data points as the dicts `collect()` +
         `asDict(recursive=True)` give, a lazy view of `tables()`."""
         if self._points is None:
-            self._points = _Points(self.tables())
+            tables = self.tables()
+            self._points = _Lazy(self.metric_index, lambda name: _table_rows(tables[name]))
         return self._points
 
     def unpersist(self) -> None:
-        self.parsed.unpersist()
-        self._tables = None
-        self._points = None
+        """Drop the held tables, stats and rows."""
+        self._tables = self._stats = self._points = None
 
 
 def _referenced_columns(cfg: Config) -> set[str]:
-    """Column pruning for the cache: parse emits all fields, but the cached
-    projection keeps only what some expression references (SURVEY.md §4
+    """Column pruning: parse emits all fields, but the projection the
+    aggregation reads keeps only what some expression references (SURVEY.md §4
     'column pruning — worth exploiting explicitly').
     """
     import re
@@ -164,7 +204,7 @@ def run_pipeline(
     cfg: Config,
     tokenized: DataFrame,
     strict: bool = False,
-    cache: str = "memory_and_disk",
+    cache: str | None = None,
     keep_payload: bool = True,
     event_time: str | None = None,
     trigger_source: str | None = None,
@@ -182,6 +222,11 @@ def run_pipeline(
     `repartition_by_source` pre-shuffles on (source, hour(ts)) to align with
     an Iceberg (source, hours(ts)) layout so downstream window aggregations
     mostly combine map-side.
+    `keep_payload` keeps doc_id/tokens/n_tok/source on `result.parsed` and
+    folds the manifest's per-source stats into the aggregation.
+    `cache` has no effect: the projection is read once, by the one
+    aggregation, so nothing is persisted. It is accepted so existing
+    callers still run.
     """
     parsed = decode_and_parse(tokenized, strict=strict, keep_payload=keep_payload)
     # skip-or-fail on unparseable object keys (app.go:306-313): NoSkip=true
@@ -198,7 +243,6 @@ def run_pipeline(
         spark,
         cfg,
         parsed,
-        cache=cache,
         keep_payload=keep_payload,
         event_time=event_time,
         trigger_source=trigger_source,
@@ -210,14 +254,13 @@ def run_pipeline_parsed(
     spark: SparkSession,
     cfg: Config,
     parsed: DataFrame,
-    cache: str = "memory_and_disk",
     keep_payload: bool = True,
     event_time: str | None = None,
     trigger_source: str | None = None,
     repartition_by_source: bool = False,
 ) -> PipelineResult:
-    """Fan-out over an already-parsed+enriched record set (shared by the
-    tokenized and raw-text sources)."""
+    """Every metric over an already-parsed+enriched record set (shared by
+    the tokenized and raw-text sources); options as in run_pipeline."""
     cfg.validate_expressions(spark)
 
     if cfg.backfill.enabled and event_time is not None:
@@ -245,18 +288,14 @@ def run_pipeline_parsed(
     if repartition_by_source:
         parsed = parsed.repartition("source", F.hour("timestamp"))
 
-    if cache == "memory_and_disk":
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    elif cache == "disk":
-        parsed = parsed.persist(StorageLevel.DISK_ONLY)
-
     types = config_attribute_types(parsed, cfg)
-    sinks: dict[str, DataFrame] = {}
-    index: dict[str, int] = {}
-    for i, m in enumerate(cfg.metrics):
-        sinks[m.name] = aggregate_metric(parsed, cfg, m, types)
-        index[m.name] = i
-    return PipelineResult(parsed=parsed, sinks=sinks, metric_index=index, attr_types=types)
+    lineage = keep_payload and "source" in parsed.columns
+    return PipelineResult(
+        parsed=parsed,
+        points_df=aggregate_points(parsed, cfg, types, lineage=lineage),
+        metric_index={m.name: i for i, m in enumerate(cfg.metrics)},
+        attr_types=types,
+    )
 
 
 def write_sinks(
@@ -293,7 +332,7 @@ def write_sinks(
         if fmt == "parquet":
             table = table.replace_schema_metadata({
                 "org.apache.spark.version": spark.version,
-                "org.apache.spark.sql.parquet.row.metadata": result.sinks[name].schema.json(),
+                "org.apache.spark.sql.parquet.row.metadata": result.sink_schema(name).json(),
             })
             buf = pa.BufferOutputStream()
             pq.write_table(table, buf, compression="snappy", use_deprecated_int96_timestamps=True)

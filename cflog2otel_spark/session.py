@@ -6,7 +6,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+
+def default_cpus() -> int:
+    """CPUs this process may run on."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap: a quarter of physical memory (of this host unless
+    given), 1 to 8 GiB."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(8, phys_bytes // 2**30 // 4))}g"
+
+
+def default_shuffle_partitions(master: str, cpus: int) -> int:
+    """The N of `local[N]`; `cpus` for `local[*]` or a master without
+    `[N]`."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+    return cpus if n == "*" else int(n)
 
 
 def _xms_for(mem: str) -> str:
@@ -27,11 +48,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = cpus if n == "*" else int(n)
+        shuffle_partitions = default_shuffle_partitions(master, cpus)
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -58,17 +79,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.files.maxPartitionBytes", "256m")
         .config("spark.ui.enabled", "false")
-        # local mode: the driver heap IS the executor heap — size it so the
-        # persisted pruned projection + concurrent sink jobs never spill at
-        # bench scale (box has 128 GiB)
-        .config("spark.driver.memory", _DRIVER_MEM)
+        # local mode: the driver heap IS the executor heap; sized from the
+        # host unless SPARK_DRIVER_MEMORY says otherwise
+        .config("spark.driver.memory", driver_mem)
         # preset the heap: growing from the default -Xms under a 32-thread
         # allocation storm dominated the first full-scale run (measured on
         # the flagship: cold 113.5 s -> 67.0 s, warm 13.1 s -> 8.3 s with
         # -Xms14g). 3/4 of -Xmx, never above it.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_DRIVER_JAVA_OPTS", _xms_for(_DRIVER_MEM)),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", _xms_for(driver_mem)),
         )
         # stateful streaming (cross-batch dedup, streaming/stateful.py) keeps
         # one marker row per key — at 100 TB that state outgrows the default

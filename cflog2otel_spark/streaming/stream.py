@@ -8,7 +8,8 @@ mapping is the same, one micro-batch per invocation:
 
   file source over the tokenized corpus (new objects = new files)
     -> foreachBatch: decode/parse/enrich + every metric aggregation
-       (run_pipeline, the batch fan-out over one pruned projection)
+       (run_pipeline: one aggregation of every metric over one pruned
+       projection, as in batch)
     -> sink: one delta row per key per micro-batch, in the batch's
        `_batch_id` partition (T4: a replayed batch replaces that partition
        directory, so it replaces its own rows)
@@ -72,8 +73,8 @@ def run_streaming_pipeline(
     watermark: str | None = None,
 ):
     """Start the streaming drain: ONE query whose foreachBatch decodes/
-    parses each micro-batch once and derives every metric sink from that
-    shared projection, the streaming twin of the batch fan-out (A2).
+    parses each micro-batch once and derives every metric sink from one
+    aggregation over that projection, as the batch pipeline does (A2).
     Returns the started query in a one-element list.
 
     Each micro-batch writes its windows' DELTAS under
@@ -91,10 +92,10 @@ def run_streaming_pipeline(
 
     def process(batch_df, batch_id: int) -> None:
         # the batch pipeline itself: the same skip-or-fail rule for
-        # unparseable object keys, the cached projection pruned to the
-        # columns some metric expression references, the sinks collected
-        # once and written from the driver, and the batch path's plan
-        # shape (and its JIT-compiled codegen)
+        # unparseable object keys, the projection pruned to the columns
+        # some metric expression references, one aggregation of every
+        # metric collected once and written from the driver, and the batch
+        # path's plan shape (and its JIT-compiled codegen)
         res = run_pipeline(spark, cfg, batch_df, keep_payload=False)
         try:
             write_sinks(res, out_dir, partition=f"_batch_id={batch_id}")

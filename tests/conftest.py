@@ -46,6 +46,31 @@ def generated_lines(spark, n_rows: int, seed: int) -> list[str]:
     return [r["line"] for r in rows]
 
 
+def metric_windows(spark, epoch_us: list[int], interval: float) -> dict:
+    """{(window start, window end) in Unix microseconds: data points} of a
+    Count metric with `interval` (seconds, ms precision) over one row at
+    each of `epoch_us`, as aggregate_metric builds the sink."""
+    from pyspark.sql import functions as F
+
+    from cflog2otel_spark.config import Config
+    from cflog2otel_spark.operators.aggregate import aggregate_metric
+
+    cfg = Config.from_json({
+        "resource_attributes": [],
+        "scope": {"name": "t"},
+        "metrics": [{"name": "n", "type": "Count", "interval": f"{round(interval * 1000)}ms"}],
+    })
+    parsed = spark.createDataFrame([(u,) for u in epoch_us], "us long").select(
+        F.timestamp_micros("us").alias("timestamp")
+    )
+    rows = aggregate_metric(parsed, cfg, cfg.metrics[0]).select(
+        F.unix_micros("window_start").alias("start"),
+        F.unix_micros("window_end").alias("end"),
+        "value",
+    ).collect()
+    return {(r["start"], r["end"]): r["value"] for r in rows}
+
+
 def summed_points(rows) -> dict:
     """Data points keyed by (window start, resource attrs, attrs), the rows
     of one key combined the way a delta consumer sums data points: counts,

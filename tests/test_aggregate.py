@@ -2,6 +2,7 @@
 rule vs a NumPy oracle (property-based), null-attr drop."""
 
 import json
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
@@ -9,9 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from cflog2otel_spark.config import Config
-from cflog2otel_spark.operators.aggregate import GO_ZERO_EPOCH_OFFSET, window_col
+
+from .conftest import metric_windows
 
 GO_EPOCH = datetime(1, 1, 1, tzinfo=timezone.utc)
+UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def go_truncate(ts: datetime, seconds: float) -> datetime:
@@ -22,7 +25,7 @@ def go_truncate(ts: datetime, seconds: float) -> datetime:
 
 @pytest.mark.parametrize("interval", [60, 300, 3600, 420, 7 * 60, 13 * 60, 90])
 def test_window_anchor_matches_go_truncate(spark, interval):
-    """F.window with our startTime offset == Go Truncate for ALL intervals,
+    """The sink's window_start/window_end == Go Truncate for ALL intervals,
     including non-day-dividing ones like 7m (SURVEY.md §2.4 A4 caveat)."""
     times = [
         datetime(2019, 12, 1, 22, 42, 31),
@@ -30,13 +33,15 @@ def test_window_anchor_matches_go_truncate(spark, interval):
         datetime(2024, 3, 1, 0, 0, 0),
         datetime(2024, 2, 29, 23, 59, 59),
     ]
-    df = spark.createDataFrame([(t,) for t in times], ["ts"])
-    rows = df.select(window_col(F.col("ts"), interval).alias("w"), "ts").collect()
-    for r in rows:
-        expect = go_truncate(r["ts"].replace(tzinfo=timezone.utc), interval)
-        got = r["w"]["start"].replace(tzinfo=timezone.utc)
-        assert got == expect, f"interval={interval} ts={r['ts']}"
-        assert (r["w"]["end"] - r["w"]["start"]).total_seconds() == interval
+    us = [(t.replace(tzinfo=timezone.utc) - UNIX_EPOCH) // timedelta(microseconds=1) for t in times]
+    expect = Counter()
+    for t in times:
+        start = go_truncate(t.replace(tzinfo=timezone.utc), interval)
+        expect[tuple(
+            (x - UNIX_EPOCH) // timedelta(microseconds=1)
+            for x in (start, start + timedelta(seconds=interval))
+        )] += 1
+    assert metric_windows(spark, us, interval) == expect, f"interval={interval}"
 
 
 def _mini_cfg(metric):
@@ -194,7 +199,7 @@ def test_typed_attributes(spark, cf_fixture_df):
             ],
         }
     )
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     tree = encode_golden(result, cfg)[0]
     dps = tree["ScopeMetrics"][0]["Metrics"][0]["Data"]["DataPoints"]
     by_key = {a["Key"]: a["Value"] for a in dps[0]["Attributes"]}

@@ -226,7 +226,7 @@ def test_has_filter_through_full_pipeline(spark, cf_fixture_df):
     from cflog2otel_spark.operators.parse import decode_and_parse
 
     cfg = Config.load("configs/has_filter.json")
-    res = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    res = run_pipeline(spark, cfg, cf_fixture_df)
     sink = res.sinks["http.server.requests_with_referer"]
     got = sum(r["value"] for r in sink.collect())
 

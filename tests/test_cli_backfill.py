@@ -82,14 +82,14 @@ def test_run_pipeline_event_time_exempts_trigger(spark):
     cfg = Config.load(f"{CONFIGS}/backfil_config.json")  # 30m tolerance
 
     kept = run_pipeline(
-        spark, cfg, corpus, cache="none",
+        spark, cfg, corpus,
         event_time=EVENT_TIME, trigger_source=SOURCE2,
     )
     total = sum(r["value"] for r in kept.sinks[cfg.metrics[0].name].collect())
     assert total == 6  # all lines, incl. the 22:10 ones
 
     coarse = run_pipeline(
-        spark, cfg, corpus, cache="none", event_time=EVENT_TIME,
+        spark, cfg, corpus, event_time=EVENT_TIME,
     )
     total = sum(r["value"] for r in coarse.sinks[cfg.metrics[0].name].collect())
     assert total == 3  # 22:10 lines gated without the trigger exemption

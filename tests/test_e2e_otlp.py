@@ -7,7 +7,7 @@ import json
 from cflog2otel_spark.config import Config
 from cflog2otel_spark.golden import canonicalize_otlp, encode_otlp
 from cflog2otel_spark.operators.backfill import backfill_select
-from cflog2otel_spark.pipeline import PipelineResult, run_pipeline
+from cflog2otel_spark.pipeline import run_pipeline, run_pipeline_parsed
 from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
 
 from .conftest import CF_LOG, CF_LOG2, CONFIGS, FIXTURES, SOURCE1, SOURCE2
@@ -20,7 +20,7 @@ def _load(name):
 
 def test_e2e_otlp_golden(spark, cf_fixture_df):
     cfg = Config.load(f"{CONFIGS}/request_count_by_status_category.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     reqs = encode_otlp(result, cfg)
     assert len(reqs) == 1
     assert reqs[0] == _load("e2e")
@@ -29,7 +29,6 @@ def test_e2e_otlp_golden(spark, cf_fixture_df):
 def test_e2e_backfill_otlp_golden(spark):
     from pyspark.sql import functions as F
 
-    from cflog2otel_spark.operators.aggregate import aggregate_metric
     from cflog2otel_spark.operators.enrich import enrich
     from cflog2otel_spark.operators.parse import decode_and_parse
 
@@ -50,8 +49,6 @@ def test_e2e_backfill_otlp_golden(spark):
             SOURCE1: "2019-12-01 22:52:00",
         },
     )
-    sinks = {m.name: aggregate_metric(selected, cfg, m) for m in cfg.metrics}
-    result = PipelineResult(parsed=selected, sinks=sinks, metric_index={m.name: i for i, m in enumerate(cfg.metrics)})
-    reqs = encode_otlp(result, cfg)
+    reqs = encode_otlp(run_pipeline_parsed(spark, cfg, selected), cfg)
     assert len(reqs) == 1
     assert reqs[0] == _load("e2e_backfill")

@@ -42,7 +42,7 @@ def _serve():
 
 def test_to_wire_shape(spark, cf_fixture_df):
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     reqs = encode_otlp(result, cfg)
     wire = to_wire(reqs[0])
     rm = wire["resourceMetrics"][0]
@@ -59,7 +59,7 @@ def test_to_wire_shape(spark, cf_fixture_df):
 
 def test_export_posts_to_collector(spark, cf_fixture_df):
     cfg = Config.load(f"{CONFIGS}/request_time_histogram.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     reqs = encode_otlp(result, cfg)
 
     srv, base = _serve()
@@ -152,7 +152,7 @@ def test_protobuf_wire_roundtrip(spark, cf_fixture_df):
 
     for cfg_name in ("multi_metrics", "request_time_histogram", "switch_case"):
         cfg = Config.load(f"{CONFIGS}/{cfg_name}.json")
-        result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+        result = run_pipeline(spark, cfg, cf_fixture_df)
         for req in encode_otlp(result, cfg):
             wire = to_wire(req)
             buf = encode_export_request(wire)
@@ -227,7 +227,7 @@ def test_export_protobuf_to_collector(spark, cf_fixture_df):
     from cflog2otel_spark.otlp_proto import decode_export_request
 
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     reqs = encode_otlp(result, cfg)
 
     srv = HTTPServer(("127.0.0.1", 0), _BinCollector)
@@ -352,7 +352,7 @@ def test_grpc_exporter_live_roundtrip(spark, cf_fixture_df):
     from cflog2otel_spark.pipeline import run_pipeline
 
     cfg = Config.load("configs/request_count_by_status_category.json")
-    res = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    res = run_pipeline(spark, cfg, cf_fixture_df)
     reqs = encode_otlp(res, cfg)
     expected = [encode_export_request(to_wire(r)) for r in reqs]
 

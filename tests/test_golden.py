@@ -33,7 +33,7 @@ def test_golden(spark, cf_fixture_df, name):
     # the cel/switch natives), proven identical to the hand-ported JSON
     cfg = Config.load(f"{REFERENCE}/testdata/{name}.jsonnet")
     assert cfg == Config.load(f"{CONFIGS}/{name}.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df, cache="none")
+    result = run_pipeline(spark, cfg, cf_fixture_df)
     ours = encode_golden(result, cfg)
     theirs = load_reference_golden(f"{FIXTURES}/{name}.golden.json")
     assert len(ours) == 1

@@ -2,16 +2,18 @@
 window-anchor property test (hypothesis vs Go-Truncate oracle), and a
 physical-plan regression guard for the flagship pipeline."""
 
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from cflog2otel_spark.config import Config
 from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CONFIGS, SOURCE1, SOURCE2, generated_lines, summed_points
+from .conftest import (
+    CONFIGS, SOURCE1, SOURCE2, generated_lines, metric_windows, summed_points,
+)
 
 
 def test_streaming_late_data_updates_window_idempotently(spark, tmp_path):
@@ -53,40 +55,58 @@ def test_streaming_late_data_updates_window_idempotently(spark, tmp_path):
 
 
 GO_EPOCH = datetime(1, 1, 1, tzinfo=timezone.utc)
+UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 @settings(max_examples=30, deadline=None)
 @given(
-    epoch_s=st.integers(min_value=0, max_value=2_000_000_000),
-    interval=st.sampled_from([1, 7, 45, 60, 90, 300, 420, 3600, 5400, 86400]),
+    epoch_us=st.lists(
+        st.integers(min_value=-2_000_000_000_000_000, max_value=2_000_000_000_000_000),
+        min_size=1, max_size=8,
+    ),
+    interval=st.sampled_from([0.5, 1, 1.25, 7, 45, 60, 90, 300, 420, 3600, 5400, 86400]),
 )
-def test_window_anchor_property(spark, epoch_s, interval):
-    """For arbitrary timestamps and intervals, F.window with our offset
-    equals Go time.Truncate (hypothesis-driven; SURVEY.md A4)."""
-    from cflog2otel_spark.operators.aggregate import window_col
+def test_window_anchor_property(spark, epoch_us, interval):
+    """For arbitrary timestamps (before 1970 too) and intervals (sub-second
+    ones too), the sink's arithmetic window equals Go time.Truncate
+    (hypothesis-driven; SURVEY.md A4)."""
+    d = round(interval * 1000) * 1000
+    expect = Counter()
+    for us in epoch_us:
+        # Go Truncate: the microseconds since the year-1 zero time, rounded
+        # down to a multiple of the interval
+        since_go = us + (UNIX_EPOCH - GO_EPOCH) // timedelta(microseconds=1)
+        expect[(us - since_go % d, us - since_go % d + d)] += 1
+    assert metric_windows(spark, epoch_us, interval) == expect, (epoch_us, interval)
 
-    ts = datetime.fromtimestamp(epoch_s, tz=timezone.utc).replace(tzinfo=None)
-    df = spark.createDataFrame([(ts,)], ["ts"])
-    w = df.select(window_col(F.col("ts"), interval).alias("w")).collect()[0]["w"]
-    t_utc = ts.replace(tzinfo=timezone.utc)
-    delta = (t_utc - GO_EPOCH).total_seconds()
-    expect = GO_EPOCH + timedelta(seconds=(delta // interval) * interval)
-    assert w["start"].replace(tzinfo=timezone.utc) == expect
 
-
-def test_flagship_plan_has_no_python_and_prunes_scan(spark, cf_fixture_df, tmp_path):
-    """Regression guard for the perf-critical plan shape: no Python eval
-    nodes, parquet scan reads only (tokens, source)."""
+def test_flagship_plan_has_no_python_and_prunes_scan(spark, tmp_path, monkeypatch):
+    """Regression guard for the perf-critical plan shape: the data points
+    of the whole config are collected by ONE plan with one shuffle, over
+    an uncached projection, with no Python eval nodes and the parquet scan
+    pruned to the columns the config needs."""
     from cflog2otel_spark.pipeline import run_pipeline
 
+    plans = []
+    classic = type(spark.range(1))  # the DataFrame class this session builds
+    to_arrow = classic.toArrow
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    monkeypatch.setattr(classic, "toArrow", recording)
+
     path = str(tmp_path / "corpus")
-    cf_fixture_df.write.parquet(path)
-    corpus = spark.read.parquet(path)
+    tokenized_df_from_lines(spark, generated_lines(spark, 300, seed=3), SOURCE1).write.parquet(path)
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    res = run_pipeline(spark, cfg, corpus, keep_payload=False, cache="none")
-    plan = res.sinks["http.server.requests"]._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "BatchEvalPython" not in plan
-    assert "HashAggregate" in plan
-    # scan pruned to the two needed columns
-    read_schema = [l for l in plan.split("\n") if "ReadSchema" in l]
-    assert read_schema and "tokens" in read_schema[0] and "doc_id" not in read_schema[0]
+    res = run_pipeline(spark, cfg, spark.read.parquet(path), keep_payload=False)
+    assert all(res.points().values())
+    assert len(plans) == 1, plans
+    plan = plans[0]
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "InMemoryTableScan" not in plan
+    assert "Python" not in plan and "HashAggregate" in plan
+    read_schema = [line for line in plan.split("\n") if "ReadSchema" in line]
+    assert len(read_schema) == 1 and "tokens" in read_schema[0], plan
+    assert "doc_id" not in read_schema[0]

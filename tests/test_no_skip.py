@@ -34,7 +34,7 @@ def test_bad_key_file_skipped_when_no_skip_false(spark):
     """NoSkip=false: the whole unparseable-key file contributes nothing
     (the reference skips the file before parsing it)."""
     corpus, n_lines = _corpus(spark)
-    result = run_pipeline(spark, _count_cfg(no_skip=False), corpus, cache="none")
+    result = run_pipeline(spark, _count_cfg(no_skip=False), corpus)
     total = result.sinks["requests"].agg(F.sum("value")).first()[0]
     assert total == n_lines  # only SOURCE1's lines
 
@@ -43,7 +43,7 @@ def test_bad_key_errors_when_no_skip_true(spark):
     """NoSkip=true: the run fails at the first unparseable key, in-dataflow
     (no extra scan), with the key in the message."""
     corpus, _ = _corpus(spark)
-    result = run_pipeline(spark, _count_cfg(no_skip=True), corpus, cache="none")
+    result = run_pipeline(spark, _count_cfg(no_skip=True), corpus)
     with pytest.raises(Exception, match="failed to parse object key"):
         result.sinks["requests"].collect()
 
@@ -52,7 +52,7 @@ def test_no_skip_true_clean_corpus_passes(spark):
     """The assert must be invisible when every key parses."""
     _, lines = read_cf_log_file(CF_LOG)
     corpus = tokenized_df_from_lines(spark, lines, SOURCE1)
-    result = run_pipeline(spark, _count_cfg(no_skip=True), corpus, cache="none")
+    result = run_pipeline(spark, _count_cfg(no_skip=True), corpus)
     total = result.sinks["requests"].agg(F.sum("value")).first()[0]
     assert total == len(lines)
 
@@ -82,7 +82,7 @@ def test_switch_value_zero_keeps_row_at_zero(spark):
             ],
         }
     )
-    result = run_pipeline(spark, cfg, corpus, cache="none")
+    result = run_pipeline(spark, cfg, corpus)
     row = result.sinks["hist"].first()
     assert row["count"] == len(lines)  # every row aggregated at 0.0
     assert row["sum"] == 0.0

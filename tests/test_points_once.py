@@ -1,6 +1,6 @@
-"""One aggregation per metric per run: the manifest, the sink writers and
-the golden and OTLP encoders share the data points `PipelineResult`
-collects once, as Arrow.
+"""One aggregation per run: the manifest (per-source stats included), the
+sink writers and the golden and OTLP encoders share the data points
+`PipelineResult` collects once, as Arrow.
 
 Self-contained: synthetic input from the generator and a config from
 configs/, no reference testdata."""
@@ -103,14 +103,69 @@ def test_manifest_and_export_share_one_collect(spark, tokenized, tmp_path):
     # group: the zero-job check above would have seen those jobs
     assert _group_jobs(spark, "points-export2")
     held = res2.points()
-    # the manifest still runs its per-source stats, but counts the held rows
-    manifest2 = _manifest(spark, res2, str(tmp_path / "b"), "b")
+    # the manifest reads the held rows and source stats
+    manifest2 = _in_group(
+        spark, "points-manifest2", lambda: _manifest(spark, res2, str(tmp_path / "b"), "b")
+    )
+    assert _group_jobs(spark, "points-manifest2") == []
     assert res2.points() is held
     assert manifest2["sink_rows"] == manifest["sink_rows"]
+    assert manifest2["sources"] == manifest["sources"]
 
     for r in (res, res2):
         r.unpersist()
         assert r._points is None and r._tables is None
+
+
+def test_one_run_starts_at_most_two_jobs(spark, tokenized, tmp_path):
+    """The whole product path, run_pipeline -> manifest -> sinks -> golden
+    -> OTLP, is one aggregation: at most two Spark jobs (the shuffle map
+    stage and the result stage under AQE). The manifest's per-source stats
+    come out of it and equal a direct groupBy("source")."""
+    from pyspark.sql import functions as F
+
+    from cflog2otel_spark.operators.enrich import enrich
+    from cflog2otel_spark.operators.parse import decode_and_parse
+
+    tokenized.count()  # the cached input is not part of the run
+    cfg = _mixed_config()
+
+    def run():
+        res = run_pipeline(spark, cfg, tokenized)
+        manifest = _manifest(spark, res, str(tmp_path / "m"), "m")
+        write_sinks(res, str(tmp_path / "sinks"))
+        encode_golden(res, cfg)
+        encode_otlp(res, cfg)
+        res.unpersist()
+        return manifest
+
+    manifest = _in_group(spark, "one-run", run)
+    assert 1 <= len(_group_jobs(spark, "one-run")) <= 2
+
+    direct = enrich(decode_and_parse(tokenized), on_bad_key="skip").groupBy("source").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.min("timestamp").alias("min_ts"),
+        F.max("timestamp").alias("max_ts"),
+        F.sum("n_tok").alias("tokens"),
+    ).collect()
+    assert len(direct) > 1
+    assert manifest["sources"] == {
+        r["source"]: {
+            "source": r["source"], "rows": r["rows"], "min_ts": str(r["min_ts"]),
+            "max_ts": str(r["max_ts"]), "tokens": r["tokens"], "status": "done",
+        }
+        for r in direct
+    }
+    assert manifest["skew"]["rows_total"] == sum(r["rows"] for r in direct)
+
+
+def test_source_stats_need_the_payload(spark, tokenized):
+    res = run_pipeline(spark, Config.load(f"{CONFIGS}/multi_metrics.json"), tokenized,
+                       keep_payload=False)
+    assert "stats" not in res.points_df.columns
+    assert all(res.tables().values())
+    with pytest.raises(ValueError, match="keep_payload=True"):
+        res.source_stats()
 
 
 def _mixed_config() -> Config:

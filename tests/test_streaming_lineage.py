@@ -98,7 +98,7 @@ def test_lineage_manifest_and_resume(spark, tmp_path):
     mdir = str(tmp_path / "manifests")
 
     # run 1: only SOURCE1
-    r1 = run_pipeline(spark, cfg, corpus.filter(F.col("source") == SOURCE1), cache="none")
+    r1 = run_pipeline(spark, cfg, corpus.filter(F.col("source") == SOURCE1))
     total = write_run_manifest(spark, r1, mdir, input_path="corpus")
     assert total == 6
     assert completed_sources(mdir) == {SOURCE1}
