@@ -18,8 +18,6 @@ results are deterministic across runs and partitionings.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -200,58 +198,6 @@ def minhash_signature(
     )
 
 
-def _minhash_fold_arrow(k: int, seed: int = 42):
-    """Arrow-batched twin of minhash_signature's k-wide fold: one
-    (total_shingles, k) int64 broadcast multiply + segment-min
-    (np.minimum.reduceat) per batch instead of 576M interpreted HOF steps.
-
-    MEASURED RESULT ON THIS SANDBOX: a LOSS — 342.6 s for the signature
-    stage alone vs 97 s for the whole JVM pipeline at 100k docs x ~180
-    shingles x k=32. The JVM HOF fold is interpretation-bound (~61 s of
-    the 97), but shipping the 20M-element hash arrays through the Arrow
-    bridge costs far more here (the bridge is syscall-bound on this box's
-    ~2.4 effective cores, and 32 local Python workers oversubscribe it).
-    Contrast with the embedding band-hash matmul (similarity.py), which
-    wins 300x because its input is 100x smaller and its kernel is BLAS.
-    Default therefore stays sig_impl='jvm'; this path is kept (with a
-    bit-parity test) for clusters whose per-executor Python workers have
-    real cores — re-measure before switching.
-
-    BIT-IDENTICAL to the JVM fold, including Spark's truncated-remainder
-    `%` on negative xxhash64 bases (numpy's % is floored — corrected
-    below); asserted by test_minhash_arrow_fold_matches_jvm.
-    """
-    params = _hash_params(k, seed)
-    A = np.array([a for a, _ in params], dtype=np.int64)
-    B = np.array([b for _, b in params], dtype=np.int64)
-    P = np.int64(MERSENNE_P)
-
-    def trunc_mod(x):
-        r = np.remainder(x, P)  # floored: [0, P)
-        return r - P * ((x < 0) & (r != 0))
-
-    @F.pandas_udf("array<bigint>")
-    def fold(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.array([0 if h is None else len(h) for h in hashes])
-        out = np.full((n, len(A)), MERSENNE_P, dtype=np.int64)
-        nz = lens > 0
-        if nz.any():
-            flat = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h, l in zip(hashes, lens) if l]
-            )
-            v = trunc_mod(flat)[:, None] * A[None, :] + B[None, :]
-            v = trunc_mod(v)
-            starts = np.zeros(int(nz.sum()), dtype=np.int64)
-            starts[1:] = np.cumsum(lens[nz])[:-1]
-            out[nz] = np.minimum.reduceat(v, starts, axis=0)
-        return pd.Series(list(out))
-
-    return fold
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -263,7 +209,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     engine_stable: bool = False,
     log_stats: bool = False,
-    sig_impl: str = "jvm",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -277,21 +222,10 @@ def minhash_lsh_pairs(
     log_stats=True prints the skew cap's candidate-volume numbers to
     stderr (one extra aggregate job). Persisted intermediates register for
     release_persisted().
-
-    sig_impl: 'jvm' (default) is the pure aggregate/zip_with fold —
-    zero-Python plan; 'arrow' computes the fold in a vectorized pandas UDF
-    over the JVM-hashed shingle array, bit-identical but MEASURED SLOWER
-    on this sandbox (see _minhash_fold_arrow: the Arrow transfer of the
-    hash arrays dominates) — an option for clusters with real per-worker
-    cores, guarded by the parity test.
     """
     rows_per_band = k // bands
     sh = shingles(F.col(text_col), shingle_n)
-    if sig_impl == "arrow":
-        base = F.transform(sh, lambda s: _base_hash(s, engine_stable))
-        sig = _minhash_fold_arrow(k, seed)(base)
-    else:
-        sig = minhash_signature(sh, k, seed, engine_stable)
+    sig = minhash_signature(sh, k, seed, engine_stable)
     # materialize the signature table (id + k bigints — tiny next to the
     # text): the cap count and both self-join sides consume it, and without
     # the persist each consumer re-runs the shingle+minhash CPU

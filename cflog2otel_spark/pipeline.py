@@ -208,7 +208,6 @@ def run_pipeline(
     keep_payload: bool = True,
     event_time: str | None = None,
     trigger_source: str | None = None,
-    repartition_by_source: bool = False,
 ) -> PipelineResult:
     """Run every metric config over a tokenized-sequence DataFrame.
 
@@ -219,9 +218,6 @@ def run_pipeline(
     never to the trigger file (app.go:324 keeps all trigger lines). Without
     it the gate is coarse (every row gated) — a documented deviation for
     callers that don't know the trigger.
-    `repartition_by_source` pre-shuffles on (source, hour(ts)) to align with
-    an Iceberg (source, hours(ts)) layout so downstream window aggregations
-    mostly combine map-side.
     `keep_payload` keeps doc_id/tokens/n_tok/source on `result.parsed` and
     folds the manifest's per-source stats into the aggregation.
     `cache` has no effect: the projection is read once, by the one
@@ -246,7 +242,6 @@ def run_pipeline(
         keep_payload=keep_payload,
         event_time=event_time,
         trigger_source=trigger_source,
-        repartition_by_source=repartition_by_source,
     )
 
 
@@ -257,7 +252,6 @@ def run_pipeline_parsed(
     keep_payload: bool = True,
     event_time: str | None = None,
     trigger_source: str | None = None,
-    repartition_by_source: bool = False,
 ) -> PipelineResult:
     """Every metric over an already-parsed+enriched record set (shared by
     the tokenized and raw-text sources); options as in run_pipeline."""
@@ -284,9 +278,6 @@ def run_pipeline_parsed(
         if c in needed or c in payload or c == "timestamp"
     ]
     parsed = parsed.select(*dict.fromkeys(keep))
-
-    if repartition_by_source:
-        parsed = parsed.repartition("source", F.hour("timestamp"))
 
     types = config_attribute_types(parsed, cfg)
     lineage = keep_payload and "source" in parsed.columns

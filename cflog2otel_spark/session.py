@@ -90,28 +90,6 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", _xms_for(driver_mem)),
         )
-        # stateful streaming (cross-batch dedup, streaming/stateful.py) keeps
-        # one marker row per key — at 100 TB that state outgrows the default
-        # in-heap HDFSBackedStateStore; RocksDB spills to local disk and
-        # bounds executor memory. Overridable per-session via `extra`.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_STATESTORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            ),
-        )
-        # RocksDB changelog checkpointing: commit uploads the batch's
-        # changelog instead of a full snapshot per state partition per
-        # micro-batch (snapshots shift to background maintenance), so the
-        # per-commit upload of the stateful dedup above is O(delta), not
-        # O(state).
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
-            ".enabled",
-            os.environ.get("SPARK_ROCKSDB_CHANGELOG", "true"),
-        )
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -113,5 +113,5 @@ def run_streaming_pipeline(
     return [w.start()]
 
 
-# older name, still imported by bench.py and bench_extra.py
+# older name, imported only by bench.py
 run_streaming_pipeline_single_pass = run_streaming_pipeline

@@ -5,7 +5,7 @@
       --input /data/tokenized_corpus \
       --out /data/sinks \
       [--format parquet|json] [--strict] [--golden-stdout] \
-      [--event-time 2019-12-01T22:56:00Z] [--repartition-by-source] \
+      [--event-time 2019-12-01T22:56:00Z] \
       [--config-validate-only] [--render-config] [--local-collector] \
       [--manifest listing.json | --backfill-auto-manifest DIR]
 
@@ -159,7 +159,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "generateDummyS3Notification) and runs it through the --s3-event "
         "path ($S3_URL)",
     )
-    ap.add_argument("--repartition-by-source", action="store_true")
     ap.add_argument(
         "--config-validate-only", action="store_true",
         default=_env_flag("CONFIG_VALIDATE_ONLY"),
@@ -453,10 +452,7 @@ def main(argv: list[str] | None = None) -> int:
                             "object only", file=sys.stderr,
                         )
                     scoped = scoped.filter(F.col("source") == ctx["source"])
-                results.append(run_pipeline_parsed(
-                    spark, cfg, scoped,
-                    repartition_by_source=args.repartition_by_source,
-                ))
+                results.append(run_pipeline_parsed(spark, cfg, scoped))
         elif use_manifest:
             # full object+line gate: sibling objects admitted by the
             # LastModified manifest, their lines by the lateness gate, the
@@ -470,10 +466,7 @@ def main(argv: list[str] | None = None) -> int:
                 cfg.backfill.time_tolerance_seconds,
                 manifest,
             )
-            results.append(run_pipeline_parsed(
-                spark, cfg, parsed,
-                repartition_by_source=args.repartition_by_source,
-            ))
+            results.append(run_pipeline_parsed(spark, cfg, parsed))
         else:
             results.append(run_pipeline_parsed(
                 spark,
@@ -481,7 +474,6 @@ def main(argv: list[str] | None = None) -> int:
                 parsed,
                 event_time=args.event_time,
                 trigger_source=args.trigger_source,
-                repartition_by_source=args.repartition_by_source,
             ))
         n_rows = None
         if args.checkpoint_dir:

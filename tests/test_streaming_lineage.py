@@ -66,6 +66,52 @@ def test_streaming_multi_batch_matches_batch(spark, tmp_path):
         assert want and summed_points(sink.collect()) == want, m.name
 
 
+def test_streaming_replay_replaces_its_batch(spark, tmp_path):
+    """Re-running the drain on its checkpoint rewrites nothing, and a batch
+    whose commit was lost is replayed into its own `_batch_id` directory,
+    replacing (not duplicating) its rows: the summed sinks equal the batch
+    pipeline after each run."""
+    from cflog2otel_spark.pipeline import run_pipeline, sink_dirname
+    from cflog2otel_spark.streaming.stream import run_streaming_pipeline
+
+    lines = generated_lines(spark, 600, seed=11)
+    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    for i, src in enumerate((SOURCE1, SOURCE2, SOURCE2.replace("RT3", "RT5"))):
+        tokenized_df_from_lines(spark, lines[i::3], src).coalesce(1).write.mode(
+            "append").parquet(inp)
+    cfg = _four_metric_config()
+    batch = run_pipeline(spark, cfg, spark.read.parquet(inp)).points()
+
+    def drain() -> dict[str, list[str]]:
+        """Drain, check every sink's sums, return each sink's data files."""
+        (query,) = run_streaming_pipeline(spark, cfg, inp, out, ck, max_files_per_trigger=1)
+        assert query.awaitTermination(180), "streaming query timed out (180s)"
+        files = {}
+        for m in cfg.metrics:
+            sink = f"{out}/{sink_dirname(m.name)}"
+            want = summed_points(batch[m.name])
+            assert want and summed_points(spark.read.parquet(sink).collect()) == want, m.name
+            files[m.name] = sorted(
+                f"{d}/{f}" for d in os.listdir(sink) if d.startswith("_batch_id=")
+                for f in os.listdir(f"{sink}/{d}") if f.startswith("part-")
+            )
+        return files
+
+    first = drain()
+    assert all(len(f) == 3 for f in first.values())
+    assert drain() == first
+
+    # lose batch 2's commit: the restarted query replays batch 2
+    commits = tmp_path / "ck" / "single_pass" / "commits"
+    (commits / "2").unlink()
+    (commits / ".2.crc").unlink(missing_ok=True)
+    replayed = drain()
+    for name, files in replayed.items():
+        assert files[:2] == first[name][:2], name
+        assert len(files) == 3 and files[2].startswith("_batch_id=2/"), name
+        assert files[2] != first[name][2], name
+
+
 def test_streaming_rejects_removed_topology_checkpoint(spark, tmp_path):
     """A checkpoint left by the removed per-metric topology (parse tee
     staging, or one query checkpoint per metric sink) fails before any

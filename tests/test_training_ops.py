@@ -546,16 +546,35 @@ def test_near_dup_n_aware_recall(spark):
     assert (3, 299) in pairs
 
 
-def test_minhash_arrow_fold_matches_jvm(spark):
-    """The vectorized Arrow permutation fold must be BIT-identical to the
-    JVM aggregate/zip_with fold — including Spark's truncated-remainder %
-    on negative xxhash64 bases, empty docs, and the engine-stable hash60
-    base (nonnegative)."""
-    from pyspark.sql import functions as F
+def _numpy_minhash_fold(base: list[int], k: int, seed: int) -> list[int]:
+    """Oracle for minhash_signature's fold over one doc's base hashes: a
+    (shingles, k) int64 broadcast multiply and a column min. numpy's % is
+    floored, Spark's is truncated (the sign of the dividend), so negative
+    xxhash64 bases are corrected."""
+    from cflog2otel_spark.operators.dedup import MERSENNE_P, _hash_params
 
+    params = _hash_params(k, seed)
+    A = np.array([a for a, _ in params], dtype=np.int64)
+    B = np.array([b for _, b in params], dtype=np.int64)
+    P = np.int64(MERSENNE_P)
+
+    def trunc_mod(x):
+        r = np.remainder(x, P)
+        return r - P * ((x < 0) & (r != 0))
+
+    x = np.asarray(base, dtype=np.int64)
+    if not len(x):
+        return [MERSENNE_P] * k
+    return trunc_mod(trunc_mod(x)[:, None] * A[None, :] + B[None, :]).min(axis=0).tolist()
+
+
+def test_minhash_fold_matches_numpy_oracle(spark):
+    """The JVM aggregate/zip_with fold is BIT-identical to a numpy fold of
+    the same base hashes, including Spark's truncated-remainder % on
+    negative xxhash64 bases, empty docs, and the engine-stable hash60 base
+    (nonnegative)."""
     from cflog2otel_spark.operators.dedup import (
         _base_hash,
-        _minhash_fold_arrow,
         minhash_signature,
         shingles,
     )
@@ -570,14 +589,14 @@ def test_minhash_arrow_fold_matches_jvm(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     for stable in (False, True):
         sh = shingles(F.col("text"))
-        base = F.transform(sh, lambda s: _base_hash(s, stable))
         out = df.select(
             "doc_id",
+            F.transform(sh, lambda s: _base_hash(s, stable)).alias("base"),
             minhash_signature(sh, 32, 42, stable).alias("jvm"),
-            _minhash_fold_arrow(32, 42)(base).alias("arrow"),
         ).collect()
+        assert len(out) == len(docs)
         for r in out:
-            assert list(r["jvm"]) == list(r["arrow"]), (stable, r["doc_id"])
+            assert list(r["jvm"]) == _numpy_minhash_fold(r["base"], 32, 42), (stable, r["doc_id"])
 
 
 def test_band_plan_degenerate_thresholds():
