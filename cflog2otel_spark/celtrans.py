@@ -51,7 +51,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from .schemas import CEL_CONTEXT_FIELDS, CEL_LOG_FIELDS
+from .schemas import CEL_CONTEXT_FIELDS, CEL_FIELDS, CEL_LOG_FIELDS, parsed_log_schema
 
 
 class CELTranslationError(ValueError):
@@ -150,33 +150,10 @@ _GLOBAL2 = {
 
 _CMP = {"==": "=", "!=": "<>", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
-_COLUMN_TYPES: dict[str, str] = {}
-
-
-def _init_column_types() -> None:
-    if _COLUMN_TYPES:
-        return
-    from .schemas import CF_FIELDS
-
-    for f in CF_FIELDS:
-        _COLUMN_TYPES[f.col] = f.dtype if f.dtype != "long" else "int"
-    _COLUMN_TYPES.update(
-        {
-            "type": "string",
-            "timestamp": "timestamp",
-            "sc_status_category": "string",
-            "distribution_id": "string",
-            "datehour": "string",
-            "bucket_name": "string",
-            "bucket_arn": "string",
-            "bucket_owner_principal_id": "string",
-            "source": "string",
-            "object_size": "int",
-            "object_etag": "string",
-            "object_version_id": "string",
-            "object_sequencer": "string",
-        }
-    )
+# Spark column -> the translator's static type (CEL `int` for BIGINT)
+_COLUMN_TYPES: dict[str, str] = {
+    f.col: "int" if f.dtype == "long" else f.dtype for f in CEL_FIELDS
+}
 
 
 class _Parser:
@@ -188,7 +165,6 @@ class _Parser:
         # SQL lambda variable currently shadowing it
         self.scope: dict[str, str] = {}
         self._lambda_n = 0
-        _init_column_types()
 
     def peek(self) -> Tok:
         return self.toks[self.i]
@@ -634,10 +610,6 @@ def translate(cel_src: str) -> str:
     return sql
 
 
-def translate_typed(cel_src: str) -> tuple[str, str | None]:
-    return _Parser(_tokenize(cel_src), cel_src).parse()
-
-
 def validate_against_schema(spark, sql_exprs: dict[str, str]) -> dict[str, str]:
     """Analyze translated expressions against an empty parsed-log DataFrame,
     mirroring the reference's load-time probe eval (cel.go:222-237).
@@ -645,19 +617,7 @@ def validate_against_schema(spark, sql_exprs: dict[str, str]) -> dict[str, str]:
     Returns {name: spark_type_simpleString}; raises CELTranslationError on
     analysis failure.
     """
-    from .schemas import parsed_log_schema
-
     empty = spark.createDataFrame([], parsed_log_schema())
-    empty = empty.selectExpr(
-        "*",
-        "CAST(NULL AS STRING) AS bucket_name",
-        "CAST(NULL AS STRING) AS bucket_arn",
-        "CAST(NULL AS STRING) AS bucket_owner_principal_id",
-        "CAST(NULL AS BIGINT) AS object_size",
-        "CAST(NULL AS STRING) AS object_etag",
-        "CAST(NULL AS STRING) AS object_version_id",
-        "CAST(NULL AS STRING) AS object_sequencer",
-    )
     out: dict[str, str] = {}
     for name, sql in sql_exprs.items():
         try:

@@ -223,7 +223,7 @@ def aggregate_points(
         # SQL three-valued logic: NULL filter excludes the row (pinned spec,
         # SURVEY.md §2.3); reference filter eval: aggregation.go:113-122.
         # The timestamp test comes first, so that every row evaluates it
-        # (fail_on_bad_source_key guards it).
+        # (the on_bad_key="fail" assert of enrich guards it).
         keep = "timestamp IS NOT NULL"
         if m.filter is not None:
             keep += f" AND ({m.filter.sql})"

@@ -1,12 +1,12 @@
-"""Enrich stage: context columns derived from the `source` object key, plus
-broadcast dimension lookups.
+"""Enrich stage: the CEL context columns, plus broadcast dimension lookups.
 
 The reference derives `cloudfront.distributionId` from the S3 object key
 `{prefix}{distID}.{datehour}.{hash}.gz` (/root/reference/app.go:434-450) and
 binds bucket/object context from the S3 event (/root/reference/cel.go:26-46).
 Here `source` is a column, so the parse is a native regexp over the column —
 per-file constant in practice, so Catalyst folds it cheaply; at 100 TB it
-costs one regex per row with no shuffle.
+costs one regex per row with no shuffle. The event's fields are literal
+columns, NULL for a run with no event; schemas.CEL_FIELDS declares them.
 """
 
 from __future__ import annotations
@@ -14,16 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import CEL_FIELDS
+
 # basename(source) minus .gz, then SplitN(".", 3): distID . datehour . hash
 # (app.go:434-450). datehour is free-form in the reference (any middle part).
 _BASE = r"([^/]+)\.gz$"
-
-
-def source_key_valid(source_col: str = "source") -> "F.Column":
-    """True iff the object key parses as {prefix}{distID}.{datehour}.{hash}.gz
-    (ParseCFStandardLogObjectKey, app.go:434-450)."""
-    base = F.regexp_extract(F.col(source_col), _BASE, 1)
-    return (base != "") & (F.size(F.split(base, r"\.", 3)) == 3)
 
 
 def parse_source_key(
@@ -37,80 +32,46 @@ def parse_source_key(
       - "skip": drop every row of an unparseable-key file (the reference's
         NoSkip=false file skip); with a source-partitioned layout the
         filter prunes whole partitions
-      - error semantics (NoSkip=true) live in fail_on_bad_source_key so the
-        assert can ride a column the aggregates always consume
+      - "fail": error the run at the first row whose key does not parse
+        (NoSkip=true). The assert rides on `timestamp`, which every
+        aggregation consumes, so column pruning can never drop it, and it
+        costs no extra scan
     """
     base = F.regexp_extract(F.col(source_col), _BASE, 1)
-    ok = base != ""
     # SplitN(".", 3): first two dots split, remainder (incl. dots) is hash
     parts = F.split(base, r"\.", 3)
-    valid = ok & (F.size(parts) == 3)
+    valid = (base != "") & (F.size(parts) == 3)
     if on_bad_key == "skip":
         df = df.filter(valid)
-    return (
-        df.withColumn("distribution_id", F.when(valid, F.get(parts, 0)))
-        .withColumn("datehour", F.when(valid, F.get(parts, 1)))
-        .withColumn("object_hash", F.when(valid, F.get(parts, 2)))
-    )
-
-
-def fail_on_bad_source_key(
-    df: DataFrame, source_col: str = "source", guard_col: str = "timestamp"
-) -> DataFrame:
-    """no_skip=true (app.go:306-313): error the run when any row's object
-    key is unparseable. The assert is attached to `guard_col` (every
-    aggregation consumes `timestamp`) so Catalyst column pruning can never
-    drop it, and it costs no extra scan — it fails in-dataflow at the first
-    bad row."""
-    msg = F.concat(
-        F.lit("failed to parse object key: "),
-        F.coalesce(F.col(source_col), F.lit("<null>")),
-    )
-    guarded = F.when(
-        F.assert_true(source_key_valid(source_col), msg).isNull(), F.col(guard_col)
-    )
-    return df.withColumn(guard_col, guarded)
-
-
-def with_context(
-    df: DataFrame,
-    bucket_name: str | None = None,
-    bucket_arn: str | None = None,
-    bucket_owner_principal_id: str | None = None,
-) -> DataFrame:
-    """Constant S3-bucket context columns (CEL `bucket.*` namespace).
-
-    Literal columns — Catalyst constant-folds them; zero runtime cost.
-    """
-    return (
-        df.withColumn("bucket_name", F.lit(bucket_name).cast("string"))
-        .withColumn("bucket_arn", F.lit(bucket_arn).cast("string"))
-        .withColumn(
-            "bucket_owner_principal_id", F.lit(bucket_owner_principal_id).cast("string")
+    elif on_bad_key == "fail":
+        msg = F.concat(
+            F.lit("failed to parse object key: "),
+            F.coalesce(F.col(source_col), F.lit("<null>")),
         )
-    )
+        df = df.withColumn(
+            "timestamp", F.when(F.assert_true(valid, msg).isNull(), F.col("timestamp"))
+        )
+    return df.withColumns({
+        "distribution_id": F.when(valid, F.get(parts, 0)),
+        "datehour": F.when(valid, F.get(parts, 1)),
+        "object_hash": F.when(valid, F.get(parts, 2)),
+    })
 
 
 def with_event_context(df: DataFrame, ctx: dict) -> DataFrame:
-    """Bind the full S3-event CEL context (bucket.* and object.* namespaces,
-    cel.go:48-69) as literal columns — from sources.events.s3_record_context.
+    """Bind the S3 event's CEL context (the bucket.* and object.* fields of
+    schemas.CEL_FIELDS, cel.go:48-69) as literal columns, each from `ctx`
+    (sources.events.s3_record_context) or NULL when `ctx` lacks it.
     Constant-folded by Catalyst; zero runtime cost."""
-    typed = {
-        "bucket_name": "string",
-        "bucket_arn": "string",
-        "bucket_owner_principal_id": "string",
-        "object_size": "bigint",
-        "object_etag": "string",
-        "object_version_id": "string",
-        "object_sequencer": "string",
-    }
-    for col, t in typed.items():
-        df = df.withColumn(col, F.lit(ctx.get(col)).cast(t))
-    return df
+    return df.withColumns({
+        f.col: F.lit(ctx.get(f.col)).cast(f.dtype) for f in CEL_FIELDS if f.event
+    })
 
 
-def enrich(df: DataFrame, on_bad_key: str = "null", **context) -> DataFrame:
-    return with_context(parse_source_key(df, on_bad_key=on_bad_key), **context)
+def enrich(df: DataFrame, on_bad_key: str = "null") -> DataFrame:
+    """Every CEL context column: the object-key fields (parse_source_key),
+    and the event fields NULL, as for a run with no S3 event."""
+    return with_event_context(parse_source_key(df, on_bad_key=on_bad_key), {})
 
 
 def broadcast_lookup(

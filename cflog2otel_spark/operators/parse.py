@@ -13,10 +13,12 @@ Spark-first design: `decode_tokens_col` decodes the int32 token array back
 to the UTF-8 line JVM-side (byte -> hex through a constant lookup table ->
 unhex -> UTF-8 decode), so the product path has no Python step at all;
 the Arrow UDF `decode_tokens_udf` is kept only as the `decode_impl="arrow"`
-alternative. Everything downstream is native Column expressions inside
-whole-stage codegen: split, get, nullif, try_cast, to_timestamp,
-url_decode. Catalyst prunes unused field projections, so configs touching
-3 columns only pay for 3 casts.
+alternative. The decode is a `transform` lambda, which Spark interprets
+(higher-order functions are CodegenFallback): its Project sits between two
+whole-stage-codegen stages. Everything downstream is native Column
+expressions inside whole-stage codegen: split, get, nullif, try_cast,
+to_timestamp, url_decode. Catalyst prunes unused field projections, so
+configs touching 3 columns only pay for 3 casts.
 """
 
 from __future__ import annotations
@@ -53,9 +55,11 @@ def decode_tokens_col(tokens: Column) -> Column:
     in the lookup and drop from the join, i.e. corrupt silently (strict
     mode guards with an explicit range check).
 
-    Measured 2-3x faster than the best Arrow UDF on this box (and the
-    table lookup another 2x over hex()+lpad()): no JVM<->Python socket
-    crossing, stays inside whole-stage codegen, scales linearly with cores.
+    No JVM<->Python socket crossing, and the table lookup measured 2x
+    faster than hex()+lpad(). It does not stay inside whole-stage codegen:
+    `transform` is CodegenFallback, so Spark interprets the decode Project
+    between two codegen stages, and on warm 200k-row runs the Arrow UDF
+    has measured faster (1.3 s against 2.1 s on 4 CPUs).
     """
     return F.decode(
         F.unhex(F.array_join(F.transform(tokens, lambda x: F.get(_hex_table(), x)), "")),

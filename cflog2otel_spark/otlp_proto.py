@@ -82,12 +82,6 @@ def _bool_field(field: int, v: bool) -> bytes:
     return _varint_field(field, 1 if v else 0)
 
 
-def _double_field(field: int, x: float, *, always: bool = False) -> bytes:
-    if x == 0.0 and not always:
-        return b""
-    return _tag(field, _FIX64) + struct.pack("<d", float(x))
-
-
 def _fixed64_field(field: int, n: int, *, always: bool = False) -> bytes:
     if not n and not always:
         return b""

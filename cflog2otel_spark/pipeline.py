@@ -199,6 +199,17 @@ def _referenced_columns(cfg: Config) -> set[str]:
     return idents
 
 
+def parse_and_enrich(
+    tokenized: DataFrame, cfg: Config, strict: bool = False, keep_payload: bool = True
+) -> DataFrame:
+    """Tokenized input -> parsed, enriched records, with the config's
+    skip-or-fail on unparseable object keys (app.go:306-313): NoSkip=true
+    errors the run at the first bad key; otherwise the file's rows are
+    skipped, mirroring the reference's per-file skip."""
+    parsed = decode_and_parse(tokenized, strict=strict, keep_payload=keep_payload)
+    return enrich(parsed, on_bad_key="fail" if cfg.no_skip else "skip")
+
+
 def run_pipeline(
     spark: SparkSession,
     cfg: Config,
@@ -224,21 +235,10 @@ def run_pipeline(
     aggregation, so nothing is persisted. It is accepted so existing
     callers still run.
     """
-    parsed = decode_and_parse(tokenized, strict=strict, keep_payload=keep_payload)
-    # skip-or-fail on unparseable object keys (app.go:306-313): NoSkip=true
-    # errors the run at the first bad key; otherwise the file's rows are
-    # skipped, mirroring the reference's per-file skip
-    if cfg.no_skip:
-        from .operators.enrich import fail_on_bad_source_key
-
-        parsed = enrich(parsed)
-        parsed = fail_on_bad_source_key(parsed)
-    else:
-        parsed = enrich(parsed, on_bad_key="skip")
     return run_pipeline_parsed(
         spark,
         cfg,
-        parsed,
+        parse_and_enrich(tokenized, cfg, strict=strict, keep_payload=keep_payload),
         keep_payload=keep_payload,
         event_time=event_time,
         trigger_source=trigger_source,

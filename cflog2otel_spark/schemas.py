@@ -10,6 +10,9 @@ Every CloudFront field is listed once in CF_FIELDS with:
     struct tags in cloudfront_std_log.go:17-54),
   - our Spark column name (snake_case),
   - the Spark type after casting.
+
+CEL_FIELDS extends it with the derived and context fields into the one
+list of variables a CEL expression can name.
 """
 
 from __future__ import annotations
@@ -78,33 +81,48 @@ CF_FIELDS: list[CFField] = [
 
 CANONICAL_HEADER: list[str] = [f.raw for f in CF_FIELDS]
 
-# Derived fields added by the enrich stage (not in the raw line):
-#  - type:            constant "CloudFront Standard Log" (cloudfront_std_log.go:309)
-#  - timestamp:       to_timestamp(date || ' ' || time)  (cloudfront_std_log.go:59-80)
-#  - sc_status_category: f"{status//100}xx"              (cloudfront_std_log.go:109-119)
-DERIVED_FIELDS: list[tuple[str, str, str]] = [
-    ("type", "type", "string"),
-    ("timestamp", "timestamp", "timestamp"),
-    ("scStatusCategory", "sc_status_category", "string"),
+# Every variable a CEL expression can name, once: (CEL path, Spark column,
+# type). The translator resolves and types paths from it, the load-time
+# validator analyses against the schema built from it, and
+# operators.enrich.with_event_context binds its event fields. The reference
+# binds the same set per invocation in NewCELVariables (cel.go:19-69).
+@dataclass(frozen=True)
+class CELField:
+    path: str  # dotted CEL path, e.g. "log.scBytes" or "bucket.name"
+    col: str  # the Spark column it resolves to
+    dtype: str  # 'string' | 'long' | 'double' | 'timestamp'
+    event: bool = False  # bound from the S3 event record, NULL without one
+
+
+CEL_FIELDS: list[CELField] = [
+    *(CELField(f"log.{f.cel}", f.col, f.dtype) for f in CF_FIELDS),
+    # derived by the parse stage (cloudfront_std_log.go:59-80, :109-119, :309)
+    CELField("log.type", "type", "string"),
+    CELField("log.timestamp", "timestamp", "timestamp"),
+    CELField("log.scStatusCategory", "sc_status_category", "string"),
+    # derived from the `source` object key by enrich (app.go:434-450)
+    CELField("cloudfront.distributionId", "distribution_id", "string"),
+    CELField("object.key", "source", "string"),
+    # the S3 event record's bucket/object fields (cel.go:48-69)
+    CELField("bucket.name", "bucket_name", "string", event=True),
+    CELField("bucket.arn", "bucket_arn", "string", event=True),
+    CELField(
+        "bucket.ownerIdentity.principalId", "bucket_owner_principal_id", "string", event=True
+    ),
+    CELField("object.size", "object_size", "long", event=True),
+    CELField("object.eTag", "object_etag", "string", event=True),
+    CELField("object.versionId", "object_version_id", "string", event=True),
+    CELField("object.sequencer", "object_sequencer", "string", event=True),
 ]
 
 # CEL `log.` namespace -> Spark column name
-CEL_LOG_FIELDS: dict[str, str] = {f.cel: f.col for f in CF_FIELDS}
-CEL_LOG_FIELDS.update({cel: col for cel, col, _ in DERIVED_FIELDS})
+CEL_LOG_FIELDS: dict[str, str] = {
+    f.path.removeprefix("log."): f.col for f in CEL_FIELDS if f.path.startswith("log.")
+}
 
-# Context (non-log) CEL variables -> Spark column name. The reference binds
-# these from the S3 event (cel.go:19-68); we derive them from the `source`
-# column / job manifest (SURVEY.md S8).
+# Context (non-log) CEL variables -> Spark column name
 CEL_CONTEXT_FIELDS: dict[str, str] = {
-    "cloudfront.distributionId": "distribution_id",
-    "bucket.name": "bucket_name",
-    "bucket.arn": "bucket_arn",
-    "bucket.ownerIdentity.principalId": "bucket_owner_principal_id",
-    "object.key": "source",
-    "object.size": "object_size",
-    "object.eTag": "object_etag",
-    "object.versionId": "object_version_id",
-    "object.sequencer": "object_sequencer",
+    f.path: f.col for f in CEL_FIELDS if not f.path.startswith("log.")
 }
 
 _SPARK_TYPES = {
@@ -127,70 +145,9 @@ def tokenized_input_schema() -> T.StructType:
     )
 
 
-def parsed_log_schema(include_payload: bool = True) -> T.StructType:
-    """Typed nullable schema after parse+enrich (SURVEY.md §1.1)."""
-    fields = [T.StructField(f.col, _SPARK_TYPES[f.dtype], True) for f in CF_FIELDS]
-    fields += [
-        T.StructField("type", T.StringType(), False),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("sc_status_category", T.StringType(), True),
-        T.StructField("distribution_id", T.StringType(), True),
-        T.StructField("datehour", T.StringType(), True),
-    ]
-    if include_payload:
-        fields += [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("tokens", T.ArrayType(T.IntegerType()), False),
-            T.StructField("n_tok", T.IntegerType(), False),
-            T.StructField("source", T.StringType(), False),
-        ]
+def parsed_log_schema() -> T.StructType:
+    """Typed nullable schema after parse+enrich (SURVEY.md §1.1): every
+    CEL_FIELDS column, then the payload."""
+    fields = [T.StructField(f.col, _SPARK_TYPES[f.dtype], True) for f in CEL_FIELDS]
+    fields += [f for f in tokenized_input_schema() if f.name != "source"]
     return T.StructType(fields)
-
-
-ATTR_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("key", T.StringType(), False),
-            T.StructField("value", T.StringType(), False),
-        ]
-    )
-)
-
-
-def sink_schema(kind: str) -> T.StructType:
-    """One row per data point per sink (SURVEY.md §1.5 / FIXTURES.md §4)."""
-    common = [
-        T.StructField("resource_attrs", ATTR_TYPE, False),
-        T.StructField("scope_name", T.StringType(), False),
-        T.StructField("scope_version", T.StringType(), False),
-        T.StructField("scope_schema_url", T.StringType(), False),
-        T.StructField("metric_name", T.StringType(), False),
-        T.StructField("metric_description", T.StringType(), False),
-        T.StructField("metric_unit", T.StringType(), False),
-        T.StructField("window_start", T.TimestampType(), False),
-        T.StructField("window_end", T.TimestampType(), False),
-        T.StructField("attrs", ATTR_TYPE, False),
-        T.StructField("temporality", T.StringType(), False),
-    ]
-    if kind == "Count":
-        extra = [
-            T.StructField("value", T.LongType(), False),
-            T.StructField("is_monotonic", T.BooleanType(), False),
-        ]
-    elif kind == "Sum":
-        extra = [
-            T.StructField("value", T.DoubleType(), False),
-            T.StructField("is_monotonic", T.BooleanType(), False),
-        ]
-    elif kind == "Histogram":
-        extra = [
-            T.StructField("count", T.LongType(), False),
-            T.StructField("sum", T.DoubleType(), False),
-            T.StructField("min", T.DoubleType(), True),
-            T.StructField("max", T.DoubleType(), True),
-            T.StructField("bounds", T.ArrayType(T.DoubleType()), False),
-            T.StructField("bucket_counts", T.ArrayType(T.LongType()), False),
-        ]
-    else:  # pragma: no cover
-        raise ValueError(f"unknown sink kind {kind!r}")
-    return T.StructType(common + extra)

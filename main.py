@@ -346,7 +346,8 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 2
 
-        from cflog2otel_spark.pipeline import run_pipeline_parsed, write_sinks
+        from cflog2otel_spark.pipeline import (
+            parse_and_enrich, run_pipeline_parsed, write_sinks)
 
         if args.stream:
             if not (args.input and args.out and args.checkpoint_dir):
@@ -392,17 +393,11 @@ def main(argv: list[str] | None = None) -> int:
 
             parsed = enrich(read_cf_text(spark, args.text_input, strict=args.strict))
         else:
-            from cflog2otel_spark.operators.enrich import enrich, fail_on_bad_source_key
-            from cflog2otel_spark.operators.parse import decode_and_parse
             from cflog2otel_spark.sources.tokenized import read_tokenized
 
-            parsed = decode_and_parse(
-                read_tokenized(spark, args.input), strict=args.strict
+            parsed = parse_and_enrich(
+                read_tokenized(spark, args.input), cfg, strict=args.strict
             )
-            if cfg.no_skip:
-                parsed = fail_on_bad_source_key(enrich(parsed))
-            else:
-                parsed = enrich(parsed, on_bad_key="skip")
         if args.resume:
             if not args.checkpoint_dir:
                 print("--resume requires --checkpoint-dir", file=sys.stderr)

@@ -1,8 +1,15 @@
 """CEL->SQL translator unit tests (no Spark needed for pure translation)."""
 
+import json
+
 import pytest
 
 from cflog2otel_spark.celtrans import CELTranslationError, translate
+from cflog2otel_spark.config import Config
+from cflog2otel_spark.sources.events import dummy_s3_notification, s3_record_context
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
+
+from .conftest import SOURCE1, generated_lines
 
 
 @pytest.mark.parametrize(
@@ -486,3 +493,65 @@ def test_nested_map_selection_translates():
     assert translate("{'a': {'b': 2}}.a.b") == (
         "element_at(element_at(map('a', map('b', 2L)), 'a'), 'b')"
     )
+
+
+def _context_cfg() -> Config:
+    return Config.from_json({
+        "scope": {"name": "t"},
+        "metrics": [{
+            "name": "requests",
+            "type": "Count",
+            "interval": "1h",
+            "attributes": [
+                {"key": "object.size", "value": {"expr": "object.size"}},
+                {"key": "bucket.name", "value": {"expr": "bucket.name"}},
+            ],
+        }],
+    })
+
+
+def _attrs(points) -> set:
+    return {frozenset((a["key"], a["value"]) for a in p["attrs"]) for p in points}
+
+
+def test_event_context_without_an_event_is_null(spark, tmp_path):
+    """Every CEL context variable is bound on every run, as the reference's
+    NewCELVariables does (cel.go:19-69): object.* and bucket.* attributes
+    resolve on runs with no S3 event, in batch and in the streaming drain,
+    and their NULLs drop out of the attribute set (app.go:421-424)."""
+    from cflog2otel_spark.pipeline import run_pipeline, sink_dirname
+    from cflog2otel_spark.streaming.stream import run_streaming_pipeline
+
+    cfg = _context_cfg()
+    corpus = tokenized_df_from_lines(spark, generated_lines(spark, 200, seed=5), SOURCE1)
+    points = run_pipeline(spark, cfg, corpus).points()["requests"]
+    assert sum(p["value"] for p in points) == 200
+    assert _attrs(points) == {frozenset()}
+
+    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    corpus.coalesce(1).write.parquet(inp)
+    (query,) = run_streaming_pipeline(spark, cfg, inp, out, ck)
+    assert query.awaitTermination(180), "streaming query timed out (180s)"
+    rows = [r.asDict(recursive=True)
+            for r in spark.read.parquet(f"{out}/{sink_dirname('requests')}").collect()]
+    assert sum(r["value"] for r in rows) == 200
+    assert _attrs(rows) == {frozenset()}
+
+
+def test_event_context_binds_the_s3_record(spark):
+    """The same records bound to a dummy S3 notification carry its
+    object.size and bucket.name."""
+    from cflog2otel_spark.operators.enrich import enrich, with_event_context
+    from cflog2otel_spark.operators.parse import decode_and_parse
+    from cflog2otel_spark.pipeline import run_pipeline_parsed
+
+    corpus = tokenized_df_from_lines(spark, generated_lines(spark, 200, seed=5), SOURCE1)
+    (record,) = json.loads(dummy_s3_notification(f"s3://bench-bucket/{SOURCE1}"))["Records"]
+    parsed = with_event_context(
+        enrich(decode_and_parse(corpus), on_bad_key="skip"), s3_record_context(record)
+    )
+    points = run_pipeline_parsed(spark, _context_cfg(), parsed).points()["requests"]
+    assert sum(p["value"] for p in points) == 200
+    assert _attrs(points) == {
+        frozenset({("object.size", "1024"), ("bucket.name", "bench-bucket")})
+    }

@@ -16,7 +16,7 @@ from cflog2otel_spark.config import Config
 from cflog2otel_spark.pipeline import run_pipeline
 from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
 
-from .conftest import CF_LOG, CF_LOG2, CONFIGS, SOURCE1, SOURCE2
+from .conftest import CF_LOG, CF_LOG2, CONFIGS, REPO, SOURCE1, SOURCE2
 
 RT2 = "logs/EMLARXS9EXAMPLE.2019-12-01-22.RT2KCN4SGK9.gz"
 EVENT_TIME = "2019-12-01 22:56:00"
@@ -52,7 +52,7 @@ def test_cli_manifest_backfill(spark, tmp_path):
             "--manifest", str(manifest_path),
             "--master", "local[2]",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=420,
@@ -113,7 +113,7 @@ def test_cli_resume_skips_completed_sources(spark, tmp_path):
                 "--checkpoint-dir", ckpt,
                 "--master", "local[2]",
             ] + extra,
-            cwd="/root/repo", capture_output=True, text=True, timeout=420,
+            cwd=REPO, capture_output=True, text=True, timeout=420,
         )
 
     p1 = run([])
@@ -166,7 +166,7 @@ def test_cli_auto_manifest_backfill(spark, tmp_path):
             "--backfill-auto-manifest", str(bucket),
             "--master", "local[2]",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=420,

@@ -6,6 +6,8 @@ import pytest
 
 from cflog2otel_spark.config import Config, ConfigError, parse_duration
 
+from .conftest import REPO
+
 
 def _base(metric):
     return {"resource_attributes": [], "metrics": [metric]}
@@ -142,7 +144,7 @@ def test_render_config_cli():
         [sys.executable, "main.py",
          "--config", "/root/reference/testdata/switch_case.jsonnet",
          "--render-config"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        capture_output=True, text=True, cwd=REPO, timeout=60,
     )
     assert proc.returncode == 0, proc.stderr
     doc = json.loads(proc.stdout)

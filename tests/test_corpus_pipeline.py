@@ -11,6 +11,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from .conftest import REPO
+
 SF_DIR = "/root/testdata/sf0.001"
 
 # The driver-generated corpus contains no English stop words, so the
@@ -151,7 +153,7 @@ def test_cli_corpus_pipeline_e2e(spark, tmp_path):
             "--sample-fraction", "0.8",
             "--master", "local[2]",
         ],
-        cwd="/root/repo", capture_output=True, text=True, timeout=420,
+        cwd=REPO, capture_output=True, text=True, timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     manifests = glob.glob(f"{out}/manifest_*.json")

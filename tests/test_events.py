@@ -13,7 +13,7 @@ from cflog2otel_spark.sources.events import (
     unwrap_event,
 )
 
-from .conftest import CF_LOG, CF_LOG2, CONFIGS, REFERENCE, SOURCE1, SOURCE2
+from .conftest import CF_LOG, CF_LOG2, CONFIGS, REFERENCE, REPO, SOURCE1, SOURCE2
 
 S3_NOTIFICATION = f"{REFERENCE}/testdata/s3_notification.json"
 SQS_EVENT = f"{REFERENCE}/testdata/sqs_event.json"
@@ -100,7 +100,7 @@ def test_cli_s3_event_scopes_to_trigger_and_matches_golden(spark, tmp_path):
             "--golden-stdout",
             "--master", "local[2]",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=420,
@@ -164,7 +164,7 @@ def test_cli_multi_record_event_writes_per_record_sinks(spark, tmp_path):
             "--checkpoint-dir", str(ckpt),
             "--master", "local[2]",
         ],
-        cwd="/root/repo", capture_output=True, text=True, timeout=420,
+        cwd=REPO, capture_output=True, text=True, timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     s0 = spark.read.parquet(str(out / "record_0" / "http.server.requests"))
@@ -229,7 +229,7 @@ def test_cli_s3_url_scopes_and_matches_golden(spark, tmp_path):
             "--log-prettify",
             "--master", "local[2]",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=420,

@@ -14,7 +14,7 @@ from cflog2otel_spark.export import export_otlp_http, to_wire
 from cflog2otel_spark.golden import encode_otlp
 from cflog2otel_spark.pipeline import run_pipeline
 
-from .conftest import CONFIGS
+from .conftest import CONFIGS, REPO
 
 
 class _Collector(BaseHTTPRequestHandler):
@@ -103,7 +103,7 @@ def test_cli_export_otlp(spark, cf_fixture_df, tmp_path):
                 "--export-otlp", base,
                 "--master", "local[2]",
             ],
-            cwd="/root/repo", capture_output=True, text=True, timeout=420,
+            cwd=REPO, capture_output=True, text=True, timeout=420,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
         assert '"exported": 1' in proc.stderr
