@@ -378,7 +378,10 @@ class _Parser:
                     raise CELTranslationError(
                         f"duration() requires a string literal in {self.src!r}"
                     )
-                secs = _parse_go_duration(_unescape(arg.text), self.src)
+                try:
+                    secs = parse_go_duration(_unescape(arg.text))
+                except ValueError as exc:
+                    raise CELTranslationError(f"{exc} in {self.src!r}") from exc
                 self.expect(")")
                 return self._methods(
                     (f"make_dt_interval(0, 0, 0, {secs!r})", "duration")
@@ -562,25 +565,27 @@ def _num(lt: str | None, rt: str | None) -> str | None:
     return None
 
 
+# time.ParseDuration's units: µs is U+00B5, μs U+03BC
 _DUR_UNITS = {
-    "ns": 1e-9, "us": 1e-6, "µs": 1e-6, "ms": 1e-3,
+    "ns": 1e-9, "us": 1e-6, "µs": 1e-6, "μs": 1e-6, "ms": 1e-3,
     "s": 1.0, "m": 60.0, "h": 3600.0,
 }
 
-# unit alternation order matters: multi-char units before their suffixes
-_DUR_PART = r"(\d+(?:\.\d*)?)(ns|us|µs|ms|s|m|h)"
+# digits before or after the point (or both), then a unit; the alternation
+# tries multi-char units before their one-char prefixes
+_DUR_PART = r"([0-9]+(?:\.[0-9]*)?|\.[0-9]+)(ns|us|µs|μs|ms|s|m|h)"
 
 
-def _parse_go_duration(s: str, src: str) -> float:
-    """Go time.ParseDuration syntax -> total seconds (float). CEL's
-    duration() accepts exactly this syntax (cel-go delegates to Go)."""
-    m = re.fullmatch(rf"([+-]?)((?:{_DUR_PART})+)", s)
+def parse_go_duration(s: str) -> float:
+    """Go time.ParseDuration syntax -> total seconds (float): an optional
+    sign, then a bare `0` or one or more number+unit parts. CEL's
+    duration() (cel-go delegates to Go) and the config's durations both
+    take exactly this syntax. Raises ValueError."""
+    m = re.fullmatch(rf"([+-]?)(0|(?:{_DUR_PART})+)", s)
     if not m:
-        raise CELTranslationError(f"bad duration literal {s!r} in {src!r}")
-    total = 0.0
-    for num, unit in re.findall(_DUR_PART, m.group(2)):
-        total += float(num) * _DUR_UNITS[unit]
-    return -total if m.group(1) == "-" else total
+        raise ValueError(f"invalid duration {s!r}")
+    total = sum((float(num) * _DUR_UNITS[unit] for num, unit in re.findall(_DUR_PART, m[2])), 0.0)
+    return -total if m[1] == "-" else total
 
 
 def _unescape(lit: str) -> str:

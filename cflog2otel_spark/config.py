@@ -30,11 +30,10 @@ from __future__ import annotations
 
 import json
 import logging
-import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from .celtrans import CELTranslationError, translate
+from .celtrans import CELTranslationError, parse_go_duration, sql_str, translate
 
 logger = logging.getLogger(__name__)
 
@@ -51,33 +50,20 @@ class ConfigError(ValueError):
     pass
 
 
-_DUR_RE = re.compile(r"(\d+(?:\.\d+)?)(ns|us|µs|ms|s|m|h)")
-_DUR_UNIT = {"ns": 1e-9, "us": 1e-6, "µs": 1e-6, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0}
-
-
 def parse_duration(s: str) -> float:
-    """Go-style duration string -> seconds (e.g. '1m', '30m', '1h30m')."""
-    if not s:
-        raise ConfigError("empty duration")
-    pos, total = 0, 0.0
-    neg = False
-    if s[0] in "+-":
-        neg = s[0] == "-"
-        pos = 1
-    while pos < len(s):
-        m = _DUR_RE.match(s, pos)
-        if not m:
-            raise ConfigError(f"invalid duration {s!r}")
-        total += float(m.group(1)) * _DUR_UNIT[m.group(2)]
-        pos = m.end()
-    return -total if neg else total
+    """Go-style duration string -> seconds (e.g. '1m', '30m', '1h30m'),
+    by celtrans.parse_go_duration."""
+    try:
+        return parse_go_duration(s)
+    except ValueError as exc:
+        raise ConfigError(str(exc)) from exc
 
 
 def _sql_literal(v: Any) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return sql_str(v)
     if isinstance(v, int):
         return f"{v}L"
     if isinstance(v, float):
@@ -508,12 +494,9 @@ class Config:
         """Load a config file (render + build)."""
         return cls.from_json(cls.render(path))
 
-    def validate_expressions(self, spark) -> None:
-        """Load-time analysis probe, mirroring cel.go:222-237. Success is
-        remembered for the expressions it checked, so re-validating an
-        unchanged config costs no analysis; a failure raises every time."""
-        from .celtrans import validate_against_schema
-
+    def expressions(self) -> dict[str, str]:
+        """Every translated expression of the config, {where: sql}: resource
+        attributes, then per metric its attributes, filter and value."""
         exprs: dict[str, str] = {}
         for i, a in enumerate(self.resource_attributes):
             exprs[f"resource_attributes[{i}]"] = a.value.sql
@@ -524,6 +507,15 @@ class Config:
                 exprs[f"metrics[{i}].filter"] = m.filter.sql
             if m.value is not None:
                 exprs[f"metrics[{i}].value"] = m.value.sql
+        return exprs
+
+    def validate_expressions(self, spark) -> None:
+        """Load-time analysis probe, mirroring cel.go:222-237. Success is
+        remembered for the expressions it checked, so re-validating an
+        unchanged config costs no analysis; a failure raises every time."""
+        from .celtrans import validate_against_schema
+
+        exprs = self.expressions()
         if exprs == self._validated:
             return
         types = validate_against_schema(spark, exprs)

@@ -2,8 +2,10 @@
 
 Re-creates the reference's unit-test golden shape (goldie snapshots of the
 Go OTel SDK metricdata tree, /root/reference/aggregation_test.go:20-51 and
-testdata/fixtures/*.golden.json) from our sink DataFrames, and compares
-trees canonically:
+testdata/fixtures/*.golden.json) and the OTLP request trees from the data
+points a run holds (`PipelineResult.tables()`) alone: attribute types come
+from each pair's `value_type`, times stay integer Unix microseconds. It
+compares trees canonically:
 
   - data points sorted by (StartTime, attrs) — the reference's native order
     is first-seen and non-deterministic under a shuffle (SURVEY.md §2.4 A12)
@@ -14,29 +16,20 @@ trees canonically:
 from __future__ import annotations
 
 import json
-from datetime import datetime, timedelta, timezone
 from typing import Any
 
-from .pipeline import PipelineResult
+from .pipeline import PipelineResult, _table_rows, utc_text
 
 
-_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+def _rfc3339(micros: int) -> str:
+    return utc_text(micros, "%Y-%m-%dT%H:%M:%SZ")
 
 
-def _rfc3339(dt: datetime) -> str:
-    # naive datetimes are driver-local time, as PySpark builds them;
-    # astimezone reads a naive value as local time (honouring `fold`)
-    return dt.astimezone(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
-
-
-def _nanos(dt: datetime) -> int:
-    """Unix nanoseconds of a data-point time (naive = driver-local)."""
-    return (dt.astimezone(timezone.utc) - _EPOCH) // timedelta(microseconds=1) * 1000
-
-
-def _coerce(v: str, t: str):
-    """Canonical string -> typed JSON value (Go attribute.Value marshals
-    Int64/Float64/Bool as JSON numbers/bools, app.go:399-412)."""
+def _value(pair) -> Any:
+    """An attribute pair's value as typed JSON, by its `value_type` (Go
+    attribute.Value marshals Int64/Float64/Bool as JSON numbers/bools,
+    app.go:399-412)."""
+    v, t = pair["value"], pair["value_type"]
     if t == "INT64":
         return int(v)
     if t == "FLOAT64":
@@ -46,93 +39,78 @@ def _coerce(v: str, t: str):
     return v
 
 
-def _attrs_json(pairs, types: dict[str, str] | None = None) -> list[dict]:
-    types = types or {}
-    return [
-        {
-            "Key": p["key"],
-            "Value": {
-                "Type": types.get(p["key"], "STRING"),
-                "Value": _coerce(p["value"], types.get(p["key"], "STRING")),
-            },
-        }
-        for p in pairs
-    ]
+def _attrs_json(pairs) -> list[dict]:
+    return [{"Key": p["key"], "Value": {"Type": p["value_type"], "Value": _value(p)}} for p in pairs]
 
 
-def _attr_type_maps(result: PipelineResult, config) -> tuple[dict, dict[str, dict]]:
-    """(resource-attr types, metric name -> attr types) from the translated
-    expressions' static Spark types (ToAttribute, app.go:399-412), as the
-    pipeline recorded them on the result."""
-    from .operators.aggregate import config_attribute_types
+_ONEOF = {"STRING": "StringValue", "BOOL": "BoolValue", "INT64": "IntValue", "FLOAT64": "DoubleValue"}
 
-    types = result.attr_types or config_attribute_types(result.parsed, config)
-    res_t = {a.key: t for a, t in zip(config.resource_attributes, types.resource) if t}
-    per_metric = {
-        m.name: {a.key: t for a, t in zip(m.attributes, types.metrics[m.name]) if t}
-        for m in config.metrics
-    }
-    return res_t, per_metric
+
+def _attrs_otlp(pairs) -> list[dict]:
+    return [{"key": p["key"], "value": {"Value": {_ONEOF[p["value_type"]]: _value(p)}}} for p in pairs]
+
+
+def _resources(result: PipelineResult, config) -> list[tuple[list, list[tuple[Any, list]]]]:
+    """The held data points as [(resource attrs, [(metric config, rows)])]:
+    resources sorted by their typed attribute sets, each one's metrics in
+    config order (those with rows), times as Unix microseconds. Both
+    encoders render this one grouping."""
+    tables = result.tables()
+    by_resource: dict[str, tuple[list, dict]] = {}
+    for name in sorted(result.metric_index, key=result.metric_index.get):
+        m = config.metrics[result.metric_index[name]]
+        for row in _table_rows(tables[name], int):
+            key = json.dumps(_attrs_json(row["resource_attrs"]), sort_keys=True)
+            metrics = by_resource.setdefault(key, (row["resource_attrs"], {}))[1]
+            metrics.setdefault(name, (m, []))[1].append(row)
+    return [(by_resource[k][0], list(by_resource[k][1].values())) for k in sorted(by_resource)]
 
 
 def encode_golden(result: PipelineResult, config) -> list[dict]:
     """Data points -> list of ResourceMetrics JSON trees (usually one)."""
-    by_resource: dict[str, dict] = {}
-    res_types, metric_types = _attr_type_maps(result, config)
-    ordered_names = sorted(result.metric_index, key=result.metric_index.get)
-    for name in ordered_names:
-        m = config.metrics[result.metric_index[name]]
-        for row in result.points()[name]:
-            rkey = json.dumps(_attrs_json(row["resource_attrs"], res_types), sort_keys=True)
-            res = by_resource.setdefault(
-                rkey,
-                {
-                    "Resource": _attrs_json(row["resource_attrs"], res_types),
-                    "ScopeMetrics": [
-                        {
-                            "Scope": {
-                                "Name": row["scope_name"],
-                                "Version": row["scope_version"],
-                                "SchemaURL": row["scope_schema_url"],
-                            },
-                            "Metrics": [],
-                        }
-                    ],
-                },
-            )
-            metrics = res["ScopeMetrics"][0]["Metrics"]
-            metric = next((x for x in metrics if x["Name"] == name), None)
-            if metric is None:
-                data: dict[str, Any] = {"DataPoints": [], "Temporality": row["temporality"]}
-                if m.type in ("Count", "Sum"):
-                    data["IsMonotonic"] = row["is_monotonic"]
-                metric = {
-                    "Name": name,
-                    "Description": row["metric_description"],
-                    "Unit": row["metric_unit"],
-                    "Data": data,
-                }
-                metrics.append(metric)
-            dp: dict[str, Any] = {
-                "Attributes": _attrs_json(row["attrs"], metric_types[name]),
-                "StartTime": _rfc3339(row["window_start"]),
-                "Time": _rfc3339(row["window_end"]),
-            }
-            if m.type == "Count":
-                dp["Value"] = int(row["value"])
-            elif m.type == "Sum":
-                dp["Value"] = row["value"]
-            else:
-                dp["Count"] = int(row["count"])
-                dp["Bounds"] = row["bounds"]
-                dp["BucketCounts"] = row["bucket_counts"]
-                if not m.no_min_max:
-                    dp["Min"] = row["min"]
-                    dp["Max"] = row["max"]
-                dp["Sum"] = row["sum"]
-            metric["Data"]["DataPoints"].append(dp)
-    out = [by_resource[k] for k in sorted(by_resource)]
-    return [canonicalize(r) for r in out]
+
+    def point(m, row) -> dict:
+        dp: dict[str, Any] = {
+            "Attributes": _attrs_json(row["attrs"]),
+            "StartTime": _rfc3339(row["window_start"]),
+            "Time": _rfc3339(row["window_end"]),
+        }
+        if m.type != "Histogram":
+            dp["Value"] = row["value"]
+            return dp
+        dp |= {"Count": row["count"], "Bounds": row["bounds"], "BucketCounts": row["bucket_counts"]}
+        if not m.no_min_max:
+            dp |= {"Min": row["min"], "Max": row["max"]}
+        dp["Sum"] = row["sum"]
+        return dp
+
+    def metric(m, rows) -> dict:
+        data: dict[str, Any] = {
+            "DataPoints": [point(m, r) for r in rows],
+            "Temporality": rows[0]["temporality"],
+        }
+        if m.type != "Histogram":
+            data["IsMonotonic"] = rows[0]["is_monotonic"]
+        return {
+            "Name": m.name,
+            "Description": rows[0]["metric_description"],
+            "Unit": rows[0]["metric_unit"],
+            "Data": data,
+        }
+
+    trees = []
+    for attrs, metrics in _resources(result, config):
+        row = metrics[0][1][0]
+        scope = {
+            "Name": row["scope_name"],
+            "Version": row["scope_version"],
+            "SchemaURL": row["scope_schema_url"],
+        }
+        trees.append({
+            "Resource": _attrs_json(attrs),
+            "ScopeMetrics": [{"Scope": scope, "Metrics": [metric(m, rows) for m, rows in metrics]}],
+        })
+    return [canonicalize(t) for t in trees]
 
 
 def canonicalize(tree: Any) -> Any:
@@ -163,115 +141,52 @@ def encode_otlp(result: PipelineResult, config) -> list[dict]:
     oneof wrappers: value.Value.StringValue, dp.Value.AsInt/AsDouble;
     aggregation_temporality 1=delta, 2=cumulative."""
 
-    _ONEOF = {"STRING": "StringValue", "BOOL": "BoolValue",
-              "INT64": "IntValue", "FLOAT64": "DoubleValue"}
+    def point(m, row) -> dict:
+        dp: dict[str, Any] = {"attributes": _attrs_otlp(row["attrs"])} if row["attrs"] else {}
+        dp["start_time_unix_nano"] = row["window_start"] * 1000
+        dp["time_unix_nano"] = row["window_end"] * 1000
+        if m.type == "Count":
+            dp["Value"] = {"AsInt": row["value"]}
+        elif m.type == "Sum":
+            dp["Value"] = {"AsDouble": row["value"]}
+        else:
+            dp |= {"count": row["count"], "sum": row["sum"],
+                   "explicit_bounds": row["bounds"], "bucket_counts": row["bucket_counts"]}
+            if not m.no_min_max:
+                dp |= {"min": row["min"], "max": row["max"]}
+        return dp
 
-    def attrs(pairs, types: dict[str, str] | None = None):
-        types = types or {}
-        return [
-            {
-                "key": p["key"],
-                "value": {
-                    "Value": {
-                        _ONEOF[types.get(p["key"], "STRING")]: _coerce(
-                            p["value"], types.get(p["key"], "STRING")
-                        )
-                    }
-                },
-            }
-            for p in pairs
-        ]
+    def metric(m, rows) -> dict:
+        out: dict[str, Any] = {"name": m.name}
+        for k in ("description", "unit"):
+            if rows[0][f"metric_{k}"]:
+                out[k] = rows[0][f"metric_{k}"]
+        data: dict[str, Any] = {
+            "data_points": [point(m, r) for r in rows],
+            "aggregation_temporality": 2 if rows[0]["temporality"] == "CumulativeTemporality" else 1,
+        }
+        if m.type == "Histogram":
+            out["Data"] = {"Histogram": data}
+        else:
+            out["Data"] = {"Sum": data | {"is_monotonic": rows[0]["is_monotonic"]}}
+        return out
 
-    by_resource: dict[str, dict] = {}
-    res_types, metric_types = _attr_type_maps(result, config)
-    ordered_names = sorted(result.metric_index, key=result.metric_index.get)
-    for name in ordered_names:
-        m = config.metrics[result.metric_index[name]]
-        for row in result.points()[name]:
-            rkey = json.dumps(attrs(row["resource_attrs"], res_types), sort_keys=True)
-            res = by_resource.setdefault(
-                rkey,
-                {
-                    "resource": {"attributes": attrs(row["resource_attrs"], res_types)},
-                    "scope_metrics": [{"scope": {}, "metrics": []}],
-                },
-            )
-            sm = res["scope_metrics"][0]
-            for k, v in (
-                ("name", row["scope_name"]),
-                ("version", row["scope_version"]),
-            ):
-                if v:
-                    sm["scope"][k] = v
-            if row["scope_schema_url"]:
-                sm["schema_url"] = row["scope_schema_url"]
-            metric = next((x for x in sm["metrics"] if x.get("name") == name), None)
-            if metric is None:
-                metric = {"name": name}
-                if row["metric_description"]:
-                    metric["description"] = row["metric_description"]
-                if row["metric_unit"]:
-                    metric["unit"] = row["metric_unit"]
-                temporality = 2 if row["temporality"] == "CumulativeTemporality" else 1
-                if m.type in ("Count", "Sum"):
-                    metric["Data"] = {
-                        "Sum": {
-                            "data_points": [],
-                            "aggregation_temporality": temporality,
-                            "is_monotonic": row["is_monotonic"],
-                        }
-                    }
-                else:
-                    metric["Data"] = {
-                        "Histogram": {
-                            "data_points": [],
-                            "aggregation_temporality": temporality,
-                        }
-                    }
-                sm["metrics"].append(metric)
-            dp: dict[str, Any] = {}
-            if row["attrs"]:
-                dp["attributes"] = attrs(row["attrs"], metric_types[name])
-            dp["start_time_unix_nano"] = _nanos(row["window_start"])
-            dp["time_unix_nano"] = _nanos(row["window_end"])
-            if m.type == "Count":
-                dp["Value"] = {"AsInt": int(row["value"])}
-                metric["Data"]["Sum"]["data_points"].append(dp)
-            elif m.type == "Sum":
-                dp["Value"] = {"AsDouble": row["value"]}
-                metric["Data"]["Sum"]["data_points"].append(dp)
-            else:
-                dp.update(
-                    {
-                        "count": int(row["count"]),
-                        "sum": row["sum"],
-                        "explicit_bounds": row["bounds"],
-                        "bucket_counts": row["bucket_counts"],
-                    }
-                )
-                if not m.no_min_max:
-                    dp["min"] = row["min"]
-                    dp["max"] = row["max"]
-                metric["Data"]["Histogram"]["data_points"].append(dp)
-    reqs = [
-        {"resource_metrics": [by_resource[k]]} for k in sorted(by_resource)
-    ]
-    for req in reqs:
-        for rm in req["resource_metrics"]:
-            for sm in rm["scope_metrics"]:
-                for metric in sm["metrics"]:
-                    data = metric["Data"].get("Sum") or metric["Data"].get("Histogram")
-                    data["data_points"].sort(
-                        key=lambda d: (
-                            d["start_time_unix_nano"],
-                            json.dumps(d.get("attributes", []), sort_keys=True),
-                        )
-                    )
-    return [_norm_numbers(r) for r in reqs]
+    reqs = []
+    for attrs, metrics in _resources(result, config):
+        row = metrics[0][1][0]
+        sm: dict[str, Any] = {
+            "scope": {k: row[f"scope_{k}"] for k in ("name", "version") if row[f"scope_{k}"]},
+            "metrics": [metric(m, rows) for m, rows in metrics],
+        }
+        if row["scope_schema_url"]:
+            sm["schema_url"] = row["scope_schema_url"]
+        req = {"resource_metrics": [{"resource": {"attributes": _attrs_otlp(attrs)}, "scope_metrics": [sm]}]}
+        reqs.append(_norm_numbers(_sort_otlp(req)))
+    return reqs
 
 
-def canonicalize_otlp(tree: Any) -> Any:
-    tree = _norm_numbers(tree)
+def _sort_otlp(tree: Any) -> Any:
+    """Sort every metric's data points by (start time, attributes), in place."""
     for rm in tree.get("resource_metrics", []):
         for sm in rm.get("scope_metrics", []):
             for metric in sm.get("metrics", []):
@@ -284,6 +199,11 @@ def canonicalize_otlp(tree: Any) -> Any:
                     )
                 )
     return tree
+
+
+def canonicalize_otlp(tree: Any) -> Any:
+    """Normalize an OTLP request tree for order-insensitive comparison."""
+    return _sort_otlp(_norm_numbers(tree))
 
 
 def load_reference_golden(path: str) -> dict:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 from .config import Config
-from .operators.aggregate import AttributeTypes, aggregate_points, config_attribute_types
+from .operators.aggregate import aggregate_points
 from .operators.enrich import enrich
 from .operators.parse import decode_and_parse
 
@@ -82,11 +82,20 @@ class _Lazy(Mapping):
         return len(self._names)
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def utc_text(micros: int, fmt: str) -> str:
+    """Unix microseconds formatted by `strftime(fmt)` in UTC, by arithmetic,
+    so the driver's TZ never enters."""
+    return (_EPOCH + timedelta(microseconds=micros)).strftime(fmt)
+
+
 def _table_rows(table: pa.Table, to_ts=None) -> list[dict]:
     """The rows `collect()` + `asDict(recursive=True)` give: timestamps
     become naive driver-local datetimes built by PySpark's own
     `TimestampType.fromInternal` (so `fold` matches too), or
-    `to_ts(micros)` if given."""
+    `to_ts(micros)` if given (`int` keeps the Unix microseconds)."""
     conv = to_ts or TimestampType().fromInternal
     cols = []
     for f, col in zip(table.schema, table.columns):
@@ -115,7 +124,6 @@ class PipelineResult:
     parsed: DataFrame
     points_df: DataFrame  # aggregate_points over `parsed`
     metric_index: dict[str, int] = field(default_factory=dict)
-    attr_types: AttributeTypes | None = None
     _tables: dict[str, pa.Table] | None = field(
         default=None, init=False, repr=False, compare=False
     )
@@ -168,7 +176,8 @@ class PipelineResult:
 
     def points(self) -> Mapping[str, list[dict]]:
         """Metric name -> its data points as the dicts `collect()` +
-        `asDict(recursive=True)` give, a lazy view of `tables()`."""
+        `asDict(recursive=True)` give, a lazy view of `tables()`. For
+        tests: the encoders and sink writers read `tables()`."""
         if self._points is None:
             tables = self.tables()
             self._points = _Lazy(self.metric_index, lambda name: _table_rows(tables[name]))
@@ -186,17 +195,7 @@ def _referenced_columns(cfg: Config) -> set[str]:
     """
     import re
 
-    sqls: list[str] = [a.value.sql for a in cfg.resource_attributes]
-    for m in cfg.metrics:
-        sqls += [a.value.sql for a in m.attributes]
-        if m.filter is not None:
-            sqls.append(m.filter.sql)
-        if m.value is not None:
-            sqls.append(m.value.sql)
-    idents = set()
-    for s in sqls:
-        idents |= set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", s))
-    return idents
+    return set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", " ".join(cfg.expressions().values())))
 
 
 def parse_and_enrich(
@@ -279,13 +278,11 @@ def run_pipeline_parsed(
     ]
     parsed = parsed.select(*dict.fromkeys(keep))
 
-    types = config_attribute_types(parsed, cfg)
     lineage = keep_payload and "source" in parsed.columns
     return PipelineResult(
         parsed=parsed,
-        points_df=aggregate_points(parsed, cfg, types, lineage=lineage),
+        points_df=aggregate_points(parsed, cfg, lineage=lineage),
         metric_index={m.name: i for i, m in enumerate(cfg.metrics)},
-        attr_types=types,
     )
 
 
@@ -344,17 +341,13 @@ def write_sinks(
         fs.create(Path(sink, "_SUCCESS"), True).close()
 
 
-_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
-
-
 def _json_lines(table: pa.Table) -> bytes:
     """Spark's JSON writer output for `table`: one object per row in schema
     order, null fields omitted, timestamps as yyyy-MM-dd'T'HH:mm:ss.SSSXXX
     in UTC."""
 
     def utc(micros: int) -> str:
-        ts = _EPOCH + timedelta(microseconds=micros)
-        return ts.strftime("%Y-%m-%dT%H:%M:%S.") + f"{ts.microsecond // 1000:03d}Z"
+        return utc_text(micros, "%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
 
     def drop_nulls(v):
         if isinstance(v, dict):

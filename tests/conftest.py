@@ -46,6 +46,15 @@ def generated_lines(spark, n_rows: int, seed: int) -> list[str]:
     return [r["line"] for r in rows]
 
 
+@pytest.fixture(scope="session")
+def generated_df(spark):
+    """200 generator lines as one object of SOURCE1 (one distribution, so
+    one resource): input for tests that need no reference line."""
+    from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
+
+    return tokenized_df_from_lines(spark, generated_lines(spark, 200, seed=5), SOURCE1).cache()
+
+
 def metric_windows(spark, epoch_us: list[int], interval: float) -> dict:
     """{(window start, window end) in Unix microseconds: data points} of a
     Count metric with `interval` (seconds, ms precision) over one row at

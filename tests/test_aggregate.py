@@ -173,7 +173,7 @@ def test_sum_is_monotonic_from_config(spark):
     assert out[0]["temporality"] == "DeltaTemporality"
 
 
-def test_typed_attributes(spark, cf_fixture_df):
+def test_typed_attributes(spark, generated_df):
     """Non-string CEL attribute values emit typed OTel attributes
     (ToAttribute, app.go:399-412): Int64/Float64/Bool, not stringified.
     Hand-computed expectation (no golden exercises typed attrs)."""
@@ -199,7 +199,7 @@ def test_typed_attributes(spark, cf_fixture_df):
             ],
         }
     )
-    result = run_pipeline(spark, cfg, cf_fixture_df)
+    result = run_pipeline(spark, cfg, generated_df)
     tree = encode_golden(result, cfg)[0]
     dps = tree["ScopeMetrics"][0]["Metrics"][0]["Data"]["DataPoints"]
     by_key = {a["Key"]: a["Value"] for a in dps[0]["Attributes"]}

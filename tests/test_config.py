@@ -107,6 +107,29 @@ def test_durations():
         parse_duration("5 lightyears")
 
 
+@pytest.mark.parametrize(
+    "text,seconds",
+    [("0", 0.0), ("+0", 0.0), (".5h", 1800.0), ("1.h", 3600.0), ("1h30m", 5400.0),
+     ("300ms", 0.3), ("1µs", 1e-6), ("1μs", 1e-6)],  # µ U+00B5, μ U+03BC
+)
+def test_durations_go_accepts(text, seconds):
+    """Go time.ParseDuration's cases, for the config and for CEL alike."""
+    from cflog2otel_spark.celtrans import translate
+
+    assert parse_duration(text) == pytest.approx(seconds)
+    assert translate(f'duration("{text}")') == f"make_dt_interval(0, 0, 0, {parse_duration(text)!r})"
+
+
+@pytest.mark.parametrize("text", ["", "+", "-", "1", ".s"])
+def test_durations_go_rejects(text):
+    from cflog2otel_spark.celtrans import CELTranslationError, translate
+
+    with pytest.raises(ConfigError, match="invalid duration"):
+        parse_duration(text)
+    with pytest.raises(CELTranslationError, match="invalid duration"):
+        translate(f'duration("{text}")')
+
+
 def test_backfill_defaults():
     c = Config.from_json(
         {"metrics": [{"name": "x"}], "backfill": {"enabled": True}}

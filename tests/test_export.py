@@ -40,9 +40,9 @@ def _serve():
     return srv, f"http://127.0.0.1:{srv.server_port}"
 
 
-def test_to_wire_shape(spark, cf_fixture_df):
+def test_to_wire_shape(spark, generated_df):
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df)
+    result = run_pipeline(spark, cfg, generated_df)
     reqs = encode_otlp(result, cfg)
     wire = to_wire(reqs[0])
     rm = wire["resourceMetrics"][0]
@@ -57,9 +57,9 @@ def test_to_wire_shape(spark, cf_fixture_df):
     assert metrics["http.server.requests"]["sum"]["isMonotonic"] is True
 
 
-def test_export_posts_to_collector(spark, cf_fixture_df):
+def test_export_posts_to_collector(spark, generated_df):
     cfg = Config.load(f"{CONFIGS}/request_time_histogram.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df)
+    result = run_pipeline(spark, cfg, generated_df)
     reqs = encode_otlp(result, cfg)
 
     srv, base = _serve()
@@ -141,7 +141,7 @@ def _norm_tree(x):
     return x
 
 
-def test_protobuf_wire_roundtrip(spark, cf_fixture_df):
+def test_protobuf_wire_roundtrip(spark, generated_df):
     """Binary OTLP: encode the wire tree with the hand-rolled protobuf
     encoder, decode with the schema-aware decoder, and recover the tree
     exactly — for a Sum/Count/Histogram mix and a histogram-only config."""
@@ -152,7 +152,7 @@ def test_protobuf_wire_roundtrip(spark, cf_fixture_df):
 
     for cfg_name in ("multi_metrics", "request_time_histogram", "switch_case"):
         cfg = Config.load(f"{CONFIGS}/{cfg_name}.json")
-        result = run_pipeline(spark, cfg, cf_fixture_df)
+        result = run_pipeline(spark, cfg, generated_df)
         for req in encode_otlp(result, cfg):
             wire = to_wire(req)
             buf = encode_export_request(wire)
@@ -218,7 +218,7 @@ class _BinCollector(BaseHTTPRequestHandler):
         pass
 
 
-def test_export_protobuf_to_collector(spark, cf_fixture_df):
+def test_export_protobuf_to_collector(spark, generated_df):
     """End-to-end: POST application/x-protobuf (+gzip) to a live HTTP
     collector; the collector-side decode equals the JSON wire tree."""
     import threading
@@ -227,7 +227,7 @@ def test_export_protobuf_to_collector(spark, cf_fixture_df):
     from cflog2otel_spark.otlp_proto import decode_export_request
 
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    result = run_pipeline(spark, cfg, cf_fixture_df)
+    result = run_pipeline(spark, cfg, generated_df)
     reqs = encode_otlp(result, cfg)
 
     srv = HTTPServer(("127.0.0.1", 0), _BinCollector)
