@@ -598,6 +598,11 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_ident(name: str) -> str:
+    """Column `name` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _resolve(segs: list[str], src: str) -> str:
     path = ".".join(segs)
     if segs[0] == "log":

@@ -411,8 +411,10 @@ class Config:
     backfill: BackfillConfig
     no_skip: bool = False
     otel: dict = field(default_factory=dict)
-    # the expressions the last successful validate_expressions checked
+    # the expressions the last successful validate_expressions checked,
+    # and their Spark types
     _validated: dict | None = field(default=None, init=False, repr=False, compare=False)
+    _types: dict | None = field(default=None, init=False, repr=False, compare=False)
 
     @classmethod
     def from_json(cls, d: Any) -> "Config":
@@ -509,15 +511,29 @@ class Config:
                 exprs[f"metrics[{i}].value"] = m.value.sql
         return exprs
 
-    def validate_expressions(self, spark) -> None:
-        """Load-time analysis probe, mirroring cel.go:222-237. Success is
+    def attribute_types(self, spark) -> tuple[list[str], list[list[str]]]:
+        """The Spark type (simpleString) of each resource attribute, and per
+        metric of each of its attributes, from validate_expressions."""
+        types = self.validate_expressions(spark)
+        return (
+            [types[f"resource_attributes[{j}]"] for j in range(len(self.resource_attributes))],
+            [
+                [types[f"metrics[{i}].attributes[{j}]"] for j in range(len(m.attributes))]
+                for i, m in enumerate(self.metrics)
+            ],
+        )
+
+    def validate_expressions(self, spark) -> dict[str, str]:
+        """Load-time analysis probe, mirroring cel.go:222-237; returns each
+        expression's Spark type against schemas.parsed_log_schema,
+        {where: simpleString}, keyed as expressions() is. Success is
         remembered for the expressions it checked, so re-validating an
         unchanged config costs no analysis; a failure raises every time."""
         from .celtrans import validate_against_schema
 
         exprs = self.expressions()
         if exprs == self._validated:
-            return
+            return self._types
         types = validate_against_schema(spark, exprs)
         for i, m in enumerate(self.metrics):
             if m.filter is not None and types[f"metrics[{i}].filter"] != "boolean":
@@ -530,4 +546,5 @@ class Config:
                 raise ConfigError(
                     f"metrics[{i}].value must be numeric, got {types[f'metrics[{i}].value']}"
                 )
-        self._validated = exprs
+        self._validated, self._types = exprs, types
+        return types

@@ -29,10 +29,11 @@ attrs, window, attrs), however many metrics there are.
 
 from __future__ import annotations
 
+import logging
 import math
-from dataclasses import dataclass, replace
+from dataclasses import replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..celtrans import sql_str
@@ -58,50 +59,16 @@ _OTEL_TYPE_BY_SPARK = {
 }
 
 
-def attribute_types(parsed: DataFrame, attrs) -> list[str | None]:
-    """Static OTel type per attribute config, from the translated
-    expression's Spark type against the parsed schema (one analysis call,
-    no job). None = unsupported -> the attribute is dropped entirely,
-    mirroring ToAttribute's ok=false skip."""
-    if not attrs:
-        return []
-    probe = parsed.select(
-        *[F.expr(a.value.sql).alias(f"__t{i}") for i, a in enumerate(attrs)]
-    )
-    types = []
-    for (_, dt), a in zip(probe.dtypes, attrs):
-        base = dt.split("(")[0]
-        t = _OTEL_TYPE_BY_SPARK.get(base)
-        if t is None:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "unsupported attribute type %s for key %s — dropped", dt, a.key
-            )
-        types.append(t)
-    return types
-
-
-@dataclass(frozen=True)
-class AttributeTypes:
-    """Static OTel types of a config's attributes: one entry per
-    resource attribute, and per metric name one per metric attribute."""
-
-    resource: list[str | None]
-    metrics: dict[str, list[str | None]]
-
-
-def config_attribute_types(parsed: DataFrame, cfg: Config) -> AttributeTypes:
-    """attribute_types for every resource and metric attribute of `cfg`
-    in one analysis call."""
-    types = iter(attribute_types(
-        parsed,
-        list(cfg.resource_attributes) + [a for m in cfg.metrics for a in m.attributes],
-    ))
-    return AttributeTypes(
-        [next(types) for _ in cfg.resource_attributes],
-        {m.name: [next(types) for _ in m.attributes] for m in cfg.metrics},
-    )
+def _otel_type(spark_type: str, key: str) -> str | None:
+    """The OTel type of an attribute whose expression has `spark_type`;
+    None = unsupported -> the attribute is dropped entirely, mirroring
+    ToAttribute's ok=false skip."""
+    t = _OTEL_TYPE_BY_SPARK.get(spark_type.split("(")[0])
+    if t is None:
+        logging.getLogger(__name__).warning(
+            "unsupported attribute type %s for key %s — dropped", spark_type, key
+        )
+    return t
 
 
 def _interval_micros(interval_seconds: float) -> tuple[int, int]:
@@ -111,14 +78,14 @@ def _interval_micros(interval_seconds: float) -> tuple[int, int]:
     return (-GO_ZERO_EPOCH_OFFSET * 1_000_000) % d, d
 
 
-def _truncate_micros(ts: Column, off: Column, d: Column) -> Column:
-    """Unix microseconds of the tumbling window start of `ts` matching Go
-    time.Time.Truncate, for (`off`, `d`) from _interval_micros: every
-    interval (sub-second, not dividing a day) and every epoch (before 1970
-    too) matches Go. Arithmetic rather than F.window, because Spark allows
-    only one F.window per projection."""
-    us = F.unix_micros(ts)
-    return us - F.pmod(us - off, d)
+def _truncate_micros(ts: str, off: str, d: str) -> str:
+    """SQL for the Unix microseconds of the tumbling window start of `ts`
+    matching Go time.Time.Truncate, for (`off`, `d`) from _interval_micros:
+    every interval (sub-second, not dividing a day) and every epoch (before
+    1970 too) matches Go. Arithmetic rather than window(), because Spark
+    allows only one window() per projection."""
+    us = f"unix_micros({ts})"
+    return f"{us} - pmod({us} - {off}, {d})"
 
 
 def _named_struct(fields: list[tuple[str, str]]) -> str:
@@ -169,9 +136,11 @@ def aggregate_points(parsed: DataFrame, cfg: Config, lineage: bool = False) -> D
     filter excludes the row as a SQL WHERE does), and with `lineage` one
     per-source stats entry. One groupBy over (metric, source, resource
     attrs, window start, attrs) then computes count, sum, min, max and the
-    bucket counts. The plan is built from SQL text: each Column built
-    through the Python API costs a py4j round trip, and the plan of a
-    small object is mostly that cost.
+    bucket counts. The plan is built from SQL text in five analyses (the
+    explode, the filter of empty entries, the window and bucket
+    projection, the aggregation, the sink structs): each Column built
+    through the Python API costs a py4j round trip and each DataFrame
+    step an analysis, and the plan of a small object is mostly that cost.
 
     Output, one row per data point (per source for the stats): `p{i}`,
     an array holding metric i's sink row as a struct on the rows of metric
@@ -181,17 +150,20 @@ def aggregate_points(parsed: DataFrame, cfg: Config, lineage: bool = False) -> D
     struct. An array rather than a NULL struct, because the struct's
     fields then keep the nullability a sink has always had (and Arrow can
     carry the non-nullable ones). Each attribute pair carries its OTel type
-    (`value_type`), from one analysis probe of the attribute expressions
-    (config_attribute_types)."""
-    types = config_attribute_types(parsed, cfg)
-    # unsupported-typed attributes drop from the set entirely (ToAttribute
-    # ok=false, app.go:408-412) — with the supported CEL surface every
-    # expression is scalar, so this is a guard, not a hot path
-    res_kept = [(a, t) for a, t in zip(cfg.resource_attributes, types.resource) if t]
-    attr_kept = [
-        [(a, t) for a, t in zip(m.attributes, types.metrics[m.name]) if t]
-        for m in cfg.metrics
-    ]
+    (`value_type`), from the Spark types the config's validation found
+    (Config.attribute_types), which it remembers: no analysis here."""
+    res_types, metric_types = cfg.attribute_types(parsed.sparkSession)
+
+    def typed(attrs, spark_types):
+        # unsupported-typed attributes drop from the set entirely
+        # (ToAttribute ok=false, app.go:408-412) — with the supported CEL
+        # surface every expression is scalar, so this is a guard, not a
+        # hot path
+        pairs = [(a, _otel_type(st, a.key)) for a, st in zip(attrs, spark_types)]
+        return [(a, t) for a, t in pairs if t]
+
+    res_kept = typed(cfg.resource_attributes, res_types)
+    attr_kept = [typed(m.attributes, st) for m, st in zip(cfg.metrics, metric_types)]
     n_attrs = max(map(len, attr_kept))
     has_tok = lineage and "n_tok" in parsed.columns
 
@@ -229,15 +201,15 @@ def aggregate_points(parsed: DataFrame, cfg: Config, lineage: bool = False) -> D
         entries.append(entry(m=str(SOURCE_STATS), ts="timestamp", source="source", tok="n_tok"))
 
     hists = [(i, m) for i, m in enumerate(cfg.metrics) if m.type == "Histogram"]
+    derived = [f"{_truncate_micros('e.ts', 'e.off', 'e.d')} AS ws"]
+    if hists:
+        buckets = " ".join(f"WHEN {i} THEN {_bucket_index('e.v', m.boundaries)}" for i, m in hists)
+        derived.append(f"CASE e.m {buckets} END AS b")
     rows = (
         parsed.selectExpr(f"explode(array({', '.join(entries)})) AS e")
         .where("e IS NOT NULL")
-        .select("e.*")
+        .selectExpr("e.*", *derived)
     )
-    rows = rows.withColumn("ws", _truncate_micros(F.col("ts"), F.col("off"), F.col("d")))
-    if hists:
-        buckets = " ".join(f"WHEN {i} THEN {_bucket_index('v', m.boundaries)}" for i, m in hists)
-        rows = rows.withColumn("b", F.expr(f"CASE m {buckets} END"))
 
     keys = ["m"] + (["source"] if lineage else [])
     keys += [f"r{j}" for j in range(len(res_kept))] + ["ws"]

@@ -9,16 +9,22 @@ Reference semantics: /root/reference/cloudfront_std_log.go:279-331
   - derived: timestamp (:59-80), sc_status_category (:109-119),
     user-agent URL-unescape (:124-134), constant type (:308-310)
 
-Spark-first design: `decode_tokens_col` decodes the int32 token array back
-to the UTF-8 line JVM-side (byte -> hex through a constant lookup table ->
-unhex -> UTF-8 decode), so the product path has no Python step at all;
-the Arrow UDF `decode_tokens_udf` is kept only as the `decode_impl="arrow"`
-alternative. The decode is a `transform` lambda, which Spark interprets
+Spark-first design: the token array decodes back to the UTF-8 line
+JVM-side (byte -> hex through a constant lookup table -> unhex -> UTF-8
+decode), so the product path has no Python step at all; the Arrow UDF
+`decode_tokens_udf` is kept as the reference the tests compare the decode
+against. The decode is a `transform` lambda, which Spark interprets
 (higher-order functions are CodegenFallback): its Project sits between two
-whole-stage-codegen stages. Everything downstream is native Column
-expressions inside whole-stage codegen: split, get, nullif, try_cast,
-to_timestamp, url_decode. Catalyst prunes unused field projections, so
-configs touching 3 columns only pay for 3 casts.
+whole-stage-codegen stages. Everything downstream is native expressions
+inside whole-stage codegen: split, get, nullif, try_cast, to_timestamp,
+url_decode. Catalyst prunes unused field projections, so configs touching
+3 columns only pay for 3 casts.
+
+The plan is built from SQL text in three `selectExpr` projections, so
+three analyses: decode (decode_and_parse), tab split, and every typed and
+derived field (parse_cf_lines). Spark analyses each DataFrame step
+eagerly and each Column built through the Python API is a py4j round
+trip, so for a small object building the plan costs more than running it.
 """
 
 from __future__ import annotations
@@ -30,30 +36,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..celtrans import sql_ident
 from ..schemas import CANONICAL_HEADER, CF_FIELDS
 
-
-# foldable byte -> 2-hex-chars lookup table: one array get per byte instead
-# of hex()+lpad() string calls (measured 2-2.4x on the 613M-token corpus).
-# Built lazily — constructing literal Columns needs an active SparkContext,
-# which doesn't exist at import time.
-_HEX_TABLE: Column | None = None
+# byte -> 2-hex-chars lookup table: one array get per byte instead of
+# hex()+lpad() string calls (measured 2-2.4x on the 613M-token corpus)
+_HEX_TABLE = "array(" + ", ".join(f"'{i:02x}'" for i in range(256)) + ")"
 
 
-def _hex_table() -> Column:
-    global _HEX_TABLE
-    if _HEX_TABLE is None:
-        _HEX_TABLE = F.array(*[F.lit(format(i, "02x")) for i in range(256)])
-    return _HEX_TABLE
-
-
-def decode_tokens_col(tokens: Column) -> Column:
-    """array<int32> of UTF-8 byte values -> string, entirely JVM-side:
-    byte -> 2-char hex (constant lookup table) -> unhex -> UTF-8 decode.
-    Byte-exact for any UTF-8 (incl. multi-byte) as long as values are in
-    [0, 255] — the input_hint domain; out-of-range values resolve to NULL
-    in the lookup and drop from the join, i.e. corrupt silently (strict
-    mode guards with an explicit range check).
+def decode_tokens_sql(tokens: str) -> str:
+    """SQL for the decode of `tokens` (SQL of an array<int32> of UTF-8 byte
+    values) to a string, entirely JVM-side: byte -> 2-char hex (constant
+    lookup table) -> unhex -> UTF-8 decode. Byte-exact for any UTF-8
+    (incl. multi-byte) as long as values are in [0, 255] — the input_hint
+    domain; out-of-range values resolve to NULL in the lookup and drop
+    from the join, i.e. corrupt silently (strict mode guards with an
+    explicit range check).
 
     No JVM<->Python socket crossing, and the table lookup measured 2x
     faster than hex()+lpad(). It does not stay inside whole-stage codegen:
@@ -61,8 +59,13 @@ def decode_tokens_col(tokens: Column) -> Column:
     between two codegen stages, and on warm 200k-row runs the Arrow UDF
     has measured faster (1.3 s against 2.1 s on 4 CPUs).
     """
+    return f"decode(unhex(array_join(transform({tokens}, x -> get({_HEX_TABLE}, x)), '')), 'UTF-8')"
+
+
+def decode_tokens_col(tokens: Column) -> Column:
+    """decode_tokens_sql as a Column, for a `tokens` Column."""
     return F.decode(
-        F.unhex(F.array_join(F.transform(tokens, lambda x: F.get(_hex_table(), x)), "")),
+        F.unhex(F.array_join(F.transform(tokens, lambda x: F.get(F.expr(_HEX_TABLE), x)), "")),
         "UTF-8",
     )
 
@@ -84,9 +87,8 @@ def encode_tokens_col(line: Column) -> Column:
 
 @F.arrow_udf(T.StringType())
 def decode_tokens_udf(tokens: pa.Array) -> pa.Array:
-    """Arrow-native decode alternative (one flat-buffer pass per batch;
-    no per-row Python arithmetic). Prefer decode_tokens_col; this path is
-    for environments where the Arrow bridge beats JVM string ops."""
+    """Arrow-native decode (one flat-buffer pass per batch; no per-row
+    Python arithmetic): the reference the JVM decode is tested against."""
     la = tokens.combine_chunks() if isinstance(tokens, pa.ChunkedArray) else tokens
     vals = la.values.to_numpy(zero_copy_only=False).astype(np.uint8)
     offs = la.offsets.to_numpy()
@@ -119,18 +121,18 @@ def encode_tokens_udf(lines: pd.Series) -> pd.Series:
     )
 
 
-def _field_col(parts: Column, idx: int, dtype: str, strict: bool) -> Column:
-    # F.get returns NULL out of bounds (fewer values than fields is legal,
+_SQL_TYPES = {"string": "STRING", "long": "BIGINT", "double": "DOUBLE"}
+
+
+def _field_sql(idx: int, dtype: str, strict: bool) -> str:
+    # get() is NULL out of bounds (fewer values than fields is legal,
     # cloudfront_std_log.go:313-315); `-` decodes to NULL (:250-277).
-    raw = F.nullif(F.get(parts, idx), F.lit("-"))
+    raw = f"nullif(get(_parts, {idx}), '-')"
     if dtype == "string":
         return raw
-    target = "BIGINT" if dtype == "long" else "DOUBLE"
-    if strict:
-        # reference fails the whole file on a bad number (:257-277);
-        # under ANSI a plain CAST raises, matching that contract.
-        return raw.cast(target)
-    return raw.try_cast(target)
+    # reference fails the whole file on a bad number (:257-277); under
+    # ANSI a plain CAST raises, matching that contract.
+    return f"{'CAST' if strict else 'TRY_CAST'}({raw} AS {_SQL_TYPES[dtype]})"
 
 
 def parse_cf_lines(
@@ -141,7 +143,8 @@ def parse_cf_lines(
     drop_line: bool = True,
 ) -> DataFrame:
     """Project a raw tab-separated CloudFront log line column into the typed
-    nullable record plus derived columns.
+    nullable record plus derived columns: two projections, the tab split
+    and the fields.
 
     `field_order` is the `#Fields:` header (raw names, positional); defaults
     to the canonical 33-field v1.0 header. Unknown names are skipped with the
@@ -153,56 +156,53 @@ def parse_cf_lines(
     for i, name in enumerate(field_order):
         pos.setdefault(name, i)
 
-    parts = F.split(F.col(line_col), "\t", -1)
+    line = sql_ident(line_col)
+    parts = f"split({line}, '\\t', -1)"
     if strict:
         # more values than header fields is a hard error (:305-307); the
         # guard must stay IN the dataflow (a side column would be pruned
         # by Catalyst), so the parts array itself is gated.
-        parts = F.when(
-            F.size(parts) > F.lit(len(field_order)),
-            F.raise_error(
-                F.concat(
-                    F.lit("log line has more fields than expected: "),
-                    F.col(line_col),
-                )
-            ).cast("array<string>"),
-        ).otherwise(parts)
-    out = df.withColumn("_parts", parts)
+        parts = (
+            f"CASE WHEN size({parts}) > {len(field_order)} THEN CAST(raise_error(concat("
+            f"'log line has more fields than expected: ', {line})) AS ARRAY<STRING>) "
+            f"ELSE {parts} END"
+        )
+    split = df.selectExpr(*map(sql_ident, df.columns), f"{parts} AS _parts")
 
-    cols: list[Column] = []
-    for f in CF_FIELDS:
-        if f.raw in pos:
-            c = _field_col(F.col("_parts"), pos[f.raw], f.dtype, strict)
-        else:
-            spark_t = {"string": "STRING", "long": "BIGINT", "double": "DOUBLE"}[f.dtype]
-            c = F.lit(None).cast(spark_t)
-        cols.append(c.alias(f.col))
-
-    keep = [c for c in df.columns if c != line_col or not drop_line]
-    out = out.select(*keep, *cols)
-    return _derive(out, strict=strict)
-
-
-def _derive(df: DataFrame, strict: bool) -> DataFrame:
-    """Derived fields (cloudfront_std_log.go:59-80, :109-119, :124-134, :308-310)."""
-    ts_raw = F.concat_ws(" ", F.col("date"), F.col("time"))
-    ts = (
-        F.to_timestamp(ts_raw, "yyyy-MM-dd HH:mm:ss")
-        if strict
-        else F.try_to_timestamp(ts_raw, F.lit("yyyy-MM-dd HH:mm:ss"))
+    fields = {
+        f.col: _field_sql(pos[f.raw], f.dtype, strict)
+        if f.raw in pos
+        else f"CAST(NULL AS {_SQL_TYPES[f.dtype]})"
+        for f in CF_FIELDS
+    }
+    keep = [sql_ident(c) for c in df.columns if c != line_col or not drop_line]
+    return split.selectExpr(
+        *keep, *(f"{sql} AS {c}" for c, sql in _derive(fields, strict).items())
     )
-    ts = F.when(F.col("date").isNotNull() & F.col("time").isNotNull(), ts)
+
+
+def _derive(fields: dict[str, str], strict: bool) -> dict[str, str]:
+    """`fields` (column -> SQL) with the derived fields (cloudfront_std_log.go:
+    59-80, :109-119, :124-134, :308-310): the user agent unescaped in
+    place, then type, timestamp and status category."""
+    date, time = fields["date"], fields["time"]
+    ts_raw = f"concat_ws(' ', {date}, {time})"
+    ts = (
+        f"to_timestamp({ts_raw}, 'yyyy-MM-dd HH:mm:ss')"
+        if strict
+        else f"try_to_timestamp({ts_raw}, 'yyyy-MM-dd HH:mm:ss')"
+    )
     # Go url.QueryUnescape == application/x-www-form-urlencoded decode
     # (%XX and '+' -> space); Spark url_decode matches. '-' was already
     # NULLed before unescaping (:126-128).
-    ua = F.url_decode(F.col("cs_user_agent")) if strict else F.try_url_decode(F.col("cs_user_agent"))
-    cat = F.concat((F.col("sc_status").cast("bigint") / 100).cast("bigint").cast("string"), F.lit("xx"))
-    return (
-        df.withColumn("type", F.lit("CloudFront Standard Log"))
-        .withColumn("timestamp", ts)
-        .withColumn("sc_status_category", cat)
-        .withColumn("cs_user_agent", ua)
-    )
+    ua = f"{'url_decode' if strict else 'try_url_decode'}({fields['cs_user_agent']})"
+    status = fields["sc_status"]
+    return fields | {
+        "cs_user_agent": ua,
+        "type": "'CloudFront Standard Log'",
+        "timestamp": f"CASE WHEN {date} IS NOT NULL AND {time} IS NOT NULL THEN {ts} END",
+        "sc_status_category": f"concat(CAST(CAST(CAST({status} AS BIGINT) / 100 AS BIGINT) AS STRING), 'xx')",
+    }
 
 
 def malformed_stats(df: DataFrame, line_col: str = "line") -> dict[str, int]:
@@ -254,30 +254,21 @@ def decode_and_parse(
     field_order: list[str] | None = None,
     strict: bool = False,
     keep_payload: bool = True,
-    decode_impl: str = "native",
 ) -> DataFrame:
-    """tokenized input (doc_id, tokens, n_tok, source) -> parsed log records.
+    """tokenized input (doc_id, tokens, n_tok, source) -> parsed log records:
+    the decode projection, then parse_cf_lines.
 
     Payload columns pass through untouched — per-row token-array equality is
     the pipeline invariant (BASELINE.json input_hint).
-
-    decode_impl: 'native' (JVM hex path, default) or 'arrow' (Python UDF).
     """
-    tokens = F.col("tokens")
+    tokens = "tokens"
     if strict:
-        # native decode assumes byte-domain values; fail loudly otherwise
-        tokens = F.when(
-            F.exists(tokens, lambda x: (x < 0) | (x > 255)),
-            F.raise_error(F.lit("token value outside byte range [0,255]")).cast(
-                "array<int>"
-            ),
-        ).otherwise(tokens)
-    line = (
-        decode_tokens_col(tokens)
-        if decode_impl == "native"
-        else decode_tokens_udf(tokens)
-    )
-    out = df.withColumn("line", line)
-    if not keep_payload:
-        out = out.drop("tokens", "n_tok")
+        # the decode assumes byte-domain values; fail loudly otherwise
+        tokens = (
+            "CASE WHEN exists(tokens, x -> x < 0 OR x > 255) THEN CAST(raise_error("
+            "'token value outside byte range [0,255]') AS ARRAY<INT>) ELSE tokens END"
+        )
+    drop = {"line"} | (set() if keep_payload else {"tokens", "n_tok"})
+    keep = [sql_ident(c) for c in df.columns if c not in drop]
+    out = df.selectExpr(*keep, f"{decode_tokens_sql(tokens)} AS line")
     return parse_cf_lines(out, "line", field_order, strict=strict)

@@ -2,18 +2,26 @@
 
 The production input is an Iceberg table with columns
 (doc_id:string, tokens:array<int32>, n_tok:int32, source:string)
-(BASELINE.json input_hint). In this sandbox there is no Iceberg catalog
-jar, so `read_tokenized` falls through format options: iceberg -> parquet
-path. The payload invariant — per-row token-array equality end-to-end — is
-enforced by tests and `verify_token_passthrough`.
+(BASELINE.json input_hint). `read_tokenized` falls through format options:
+iceberg -> parquet path. Where no `iceberg` data source is on the
+classpath, a session finds that out on its first read and reads parquet
+directly from then on: the failed lookup costs a small object's read
+several times over. The payload invariant — per-row token-array equality
+end-to-end — is enforced by tests and `verify_token_passthrough`.
 """
 
 from __future__ import annotations
+
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import tokenized_input_schema
+
+
+# the sessions in which the `iceberg` data source did not resolve
+_WITHOUT_ICEBERG: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def read_tokenized(spark: SparkSession, path_or_table: str) -> DataFrame:
@@ -22,10 +30,13 @@ def read_tokenized(spark: SparkSession, path_or_table: str) -> DataFrame:
     """
     if "/" not in path_or_table:
         return spark.table(path_or_table)
-    try:
-        return spark.read.format("iceberg").load(path_or_table)
-    except Exception:
-        return spark.read.schema(tokenized_input_schema()).parquet(path_or_table)
+    if spark not in _WITHOUT_ICEBERG:
+        try:
+            return spark.read.format("iceberg").load(path_or_table)
+        except Exception as exc:  # not an Iceberg table: read it as parquet
+            if "DATA_SOURCE_NOT_FOUND" in str(exc):
+                _WITHOUT_ICEBERG.add(spark)
+    return spark.read.schema(tokenized_input_schema()).parquet(path_or_table)
 
 
 def lines_to_rows(lines: list[str], source: str) -> list[tuple]:

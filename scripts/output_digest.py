@@ -14,6 +14,13 @@ The encoders order their output by construction, so the first four hash
 the text as emitted. Sink rows follow the order Spark collects the data
 points in, which is no contract, so those two hash their rows sorted.
 
+The corpus is the generator's rows (2024), plus rows every config keeps:
+generator rows of 2019-12-01, inside `has_filter.json`'s time range, and a
+few hand-written lines whose `x-host-header` is not a `*.cloudfront.net`
+host, which `switch_with_cel_value.json` counts. The script exits
+non-zero when any config's protobuf output is empty: a digest of empty
+output shows nothing.
+
 Two trees that print the same lines hand out the same bytes: run this at
 two commits, and under two `TZ` values, and diff what it prints.
 
@@ -32,6 +39,25 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+OTHER_HOST_SOURCE = "logs/E2OTHERHOST.2024-03-01-00.OTHERHOST1.gz"
+# tab-separated CloudFront lines (FIXTURES.md §2 field order) served under
+# hosts outside *.cloudfront.net
+OTHER_HOST_LINES = [
+    "\t".join([
+        "2024-03-01", t, "LAX1", "392", "192.0.2.100", "GET", "www.example.com",
+        "/index.html", status, "-", "curl/7.55.1", "-", "-", "Hit", "OTHERHOST" + t[-2:],
+        host, "https", "23", "0.001", "-", "TLSv1.2", "ECDHE-RSA-AES128-GCM-SHA256", "Hit",
+        "HTTP/2.0", "-", "-", "11040", "0.001", "Hit", "text/html", "78", "-", "-",
+    ])
+    for t, status, host in [
+        ("00:00:01", "200", "www.example.com"),
+        ("00:00:02", "502", "www.example.com"),
+        ("00:00:03", "200", "static.example.org"),
+        ("00:01:04", "404", "www.example.com"),
+    ]
+]
 
 
 def _sha(data: str | bytes) -> str:
@@ -74,22 +100,33 @@ def main() -> None:
     from cflog2otel_spark.pipeline import run_pipeline, write_sinks
     from cflog2otel_spark.session import get_spark
     from cflog2otel_spark.sources.generator import generate_tokenized
+    from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
     spark = get_spark(master=args.master, app_name="output_digest", shuffle_partitions=4)
+    empty = []
     try:
-        tok = generate_tokenized(
-            spark, args.rows, seed=args.seed, n_hours=2, rows_per_file=500
-        ).cache()
+        tok = (
+            generate_tokenized(spark, args.rows, seed=args.seed, n_hours=2, rows_per_file=500)
+            .unionByName(generate_tokenized(
+                spark, args.rows // 6, seed=args.seed, n_hours=2, rows_per_file=500,
+                start_ts="2019-12-01 00:00:00",
+            ))
+            .unionByName(tokenized_df_from_lines(spark, OTHER_HOST_LINES, OTHER_HOST_SOURCE))
+            .cache()
+        )
         for path in sorted(glob.glob(os.path.join(REPO, "configs", "*.json"))):
             name = os.path.basename(path)
             cfg = Config.load(path)
             res = run_pipeline(spark, cfg, tok)
             reqs = encode_otlp(res, cfg)
+            proto = b"".join(encode_export_request(to_wire(r)) for r in reqs)
+            if not proto:
+                empty.append(name)
             lines = [
                 ("golden", _sha(json.dumps(encode_golden(res, cfg)))),
                 ("otlp", _sha(json.dumps(reqs))),
                 ("wire", _sha(json.dumps([to_wire(r) for r in reqs]))),
-                ("protobuf", _sha(b"".join(encode_export_request(to_wire(r)) for r in reqs))),
+                ("protobuf", _sha(proto)),
             ]
             with tempfile.TemporaryDirectory() as out:
                 for fmt, label in (("json", "json_sink"), ("parquet", "parquet")):
@@ -102,6 +139,8 @@ def main() -> None:
         tok.unpersist()
     finally:
         spark.stop()
+    if empty:
+        sys.exit(f"empty protobuf output for {', '.join(empty)}")
 
 
 if __name__ == "__main__":

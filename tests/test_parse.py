@@ -1,5 +1,6 @@
-"""Parser unit tests — full-record equality for the reference fixture lines,
-mirroring /root/reference/cloudfront_std_log_test.go:25-264."""
+"""Parser unit tests — full-record equality for a CloudFront log line,
+mirroring /root/reference/cloudfront_std_log_test.go:25-264 — and the
+shape of the plan the read -> parse -> enrich prefix builds."""
 
 from datetime import datetime
 
@@ -12,14 +13,23 @@ from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
 from .conftest import SOURCE1
 
+# one 33-field line in the FIXTURES.md §2 field order, the user agent
+# %20-escaped as CloudFront writes it
+FIRST_LINE = "\t".join([
+    "2019-12-01", "22:42:31", "LAX1", "392", "192.0.2.100", "GET",
+    "d111111abcdef8.cloudfront.net", "/index.html", "200", "-",
+    "Mozilla/5.0%20(Windows%20NT%2010.0;%20Win64;%20x64)%20AppleWebKit/537.36"
+    "%20(KHTML,%20like%20Gecko)%20Chrome/78.0.3904.108%20Safari/537.36",
+    "-", "-", "Hit", "SOX4xwn4XV6Q4rgb7XiVGOHms_BGlTAC4KyHmureZmBNrjGdRLiNIQ==",
+    "d111111abcdef8.cloudfront.net", "https", "23", "0.001", "-", "TLSv1.2",
+    "ECDHE-RSA-AES128-GCM-SHA256", "Hit", "HTTP/2.0", "-", "-", "11040", "0.001",
+    "Hit", "text/html", "78", "-", "-",
+])
 
-def test_first_record_full_equality(spark, cf_fixture_df):
-    rows = (
-        enrich(decode_and_parse(cf_fixture_df))
-        .orderBy("doc_id")
-        .collect()
-    )
-    r = rows[0].asDict()
+
+def test_first_record_full_equality(spark):
+    (r,) = enrich(decode_and_parse(tokenized_df_from_lines(spark, [FIRST_LINE], SOURCE1))).collect()
+    r = r.asDict()
     assert r["date"] == "2019-12-01"
     assert r["time"] == "22:42:31"
     assert r["timestamp"] == datetime(2019, 12, 1, 22, 42, 31)
@@ -40,6 +50,7 @@ def test_first_record_full_equality(spark, cf_fixture_df):
     assert r["cs_uri_query"] is None
     assert r["cs_cookie"] is None
     assert r["x_edge_result_type"] == "Hit"
+    assert r["x_edge_request_id"] == "SOX4xwn4XV6Q4rgb7XiVGOHms_BGlTAC4KyHmureZmBNrjGdRLiNIQ=="
     assert r["x_host_header"] == "d111111abcdef8.cloudfront.net"
     assert r["cs_protocol"] == "https"
     assert r["cs_bytes"] == 23
@@ -62,12 +73,8 @@ def test_first_record_full_equality(spark, cf_fixture_df):
     # enrichment from the source key (app.go:434-450)
     assert r["distribution_id"] == "EMLARXS9EXAMPLE"
     assert r["datehour"] == "2019-12-01-22"
-    # 502 rows
-    r5 = rows[5].asDict()
-    assert r5["sc_status"] == 502
-    assert r5["sc_status_category"] == "5xx"
-    assert r5["cs_user_agent"] == "curl/7.55.1"
-    assert r5["x_host_header"] == "www.example.com"
+    assert r["object_hash"] == "RT4KCN4SGK9"
+    assert r["bucket_name"] is None  # no S3 event
 
 
 def test_fewer_fields_than_header_ok(spark):
@@ -134,7 +141,7 @@ def test_utf8_multibyte_token_roundtrip(spark):
     assert bytes(r["tokens"]) .decode("utf-8") == line
 
 
-def test_decode_impls_agree(spark, cf_fixture_df):
+def test_decode_impls_agree(spark):
     """JVM hex decode == Arrow UDF decode, byte-exact, incl. multibyte."""
     from pyspark.sql import functions as F
 
@@ -178,3 +185,64 @@ def test_strict_token_out_of_range_raises(spark):
         decode_and_parse(df, strict=True).collect()
     # lenient path doesn't raise
     decode_and_parse(df).collect()
+
+
+def _ops_above_relation(df) -> int:
+    """Operators between the analysed plan's root and its one leaf."""
+    node, n = df._jdf.queryExecution().analyzed(), 0
+    while node.children().size() > 0:
+        assert node.children().size() == 1, node.treeString()
+        node, n = node.children().apply(0), n + 1
+    return n
+
+
+def test_prefix_plan_is_small_and_prunes_one_object(spark, tmp_path):
+    """read -> parse -> enrich builds at most 5 operators above the scan
+    (decode, split, fields; the skip filter, the context columns), and a
+    per-object scope still prunes the scan to the object's partition."""
+    from cflog2otel_spark.operators.enrich import with_event_context
+    from cflog2otel_spark.sources.generator import generate_tokenized, write_corpus
+    from cflog2otel_spark.sources.tokenized import read_tokenized
+
+    path = str(tmp_path / "tok")
+    write_corpus(generate_tokenized(spark, 200, seed=3, n_hours=1, rows_per_file=50), path)
+    parsed = enrich(decode_and_parse(read_tokenized(spark, path)), on_bad_key="skip")
+    assert _ops_above_relation(parsed) <= 5, parsed._jdf.queryExecution().analyzed().treeString()
+
+    key = parsed.select("source").first()["source"]
+    scoped = with_event_context(parsed, {"source": key, "bucket_name": "b"}).filter(
+        F.col("source") == key
+    )
+    plan = scoped._jdf.queryExecution().executedPlan().toString()
+    (scan,) = [ln for ln in plan.split("\n") if "FileScan" in ln]
+    pushed = scan[scan.index("PartitionFilters"):]
+    assert key in pushed, scan
+    assert {r["bucket_name"] for r in scoped.collect()} == {"b"}
+
+
+def test_read_tokenized_looks_for_iceberg_once_per_session(spark, tmp_path, monkeypatch):
+    """Without an Iceberg source, a session tries the `iceberg` format on
+    its first read only and reads the path as parquet; a table name (no
+    `/`) goes to the catalog."""
+    from cflog2otel_spark.sources.tokenized import read_tokenized
+
+    session = spark.newSession()  # a session that has not read yet
+    reader = type(session.read)
+    formats = []
+    real_format = reader.format
+
+    def counting(self, source):
+        formats.append(source)
+        return real_format(self, source)
+
+    monkeypatch.setattr(reader, "format", counting)
+    path = str(tmp_path / "tok")
+    tok = tokenized_df_from_lines(spark, [FIRST_LINE, "2019-12-01\t22:42:32"], SOURCE1)
+    tok.write.parquet(path)
+    for _ in range(3):
+        assert read_tokenized(session, path).count() == 2
+    assert formats.count("iceberg") <= 1, formats
+
+    session.read.parquet(path).createOrReplaceTempView("tokenized_view")
+    assert read_tokenized(session, "tokenized_view").count() == 2
+    assert formats.count("iceberg") <= 1, formats

@@ -340,7 +340,9 @@ def test_validation_is_memoized_only_on_success(spark, monkeypatch):
 
 
 def test_config_attribute_types_match_per_list_probes(spark, tokenized):
-    from cflog2otel_spark.operators.aggregate import attribute_types, config_attribute_types
+    """The attribute types aggregate_points reads off the config's
+    validation (against the declared parsed-log schema) are the types the
+    expressions have over a real parsed record set."""
     from cflog2otel_spark.operators.enrich import enrich
     from cflog2otel_spark.operators.parse import decode_and_parse
 
@@ -358,7 +360,11 @@ def test_config_attribute_types_match_per_list_probes(spark, tokenized):
         ],
     })
     parsed = enrich(decode_and_parse(tokenized), on_bad_key="skip")
-    types = config_attribute_types(parsed, cfg)
-    assert types.resource == attribute_types(parsed, cfg.resource_attributes)
-    assert types.metrics == {m.name: attribute_types(parsed, m.attributes) for m in cfg.metrics}
-    assert types.metrics["typed"] == ["INT64", "BOOL"]
+
+    def probe(attrs) -> list[str]:
+        return [t for _, t in parsed.selectExpr(*(a.value.sql for a in attrs)).dtypes]
+
+    resource, metrics = cfg.attribute_types(spark)
+    assert resource == probe(cfg.resource_attributes)
+    assert metrics == [probe(m.attributes) for m in cfg.metrics]
+    assert metrics[1] == ["bigint", "boolean"]
