@@ -598,6 +598,22 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_literal(v) -> str:
+    """A JSON scalar `v` as a Spark SQL literal: NULL, a boolean, a string,
+    a BIGINT or a DOUBLE."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, str):
+        return sql_str(v)
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        return f"CAST({v!r} AS DOUBLE)"
+    if v is None:
+        return "NULL"
+    raise CELTranslationError(f"unsupported literal {v!r}")
+
+
 def sql_ident(name: str) -> str:
     """Column `name` as a quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
@@ -625,14 +641,19 @@ def validate_against_schema(spark, sql_exprs: dict[str, str]) -> dict[str, str]:
     mirroring the reference's load-time probe eval (cel.go:222-237).
 
     Returns {name: spark_type_simpleString}; raises CELTranslationError on
-    analysis failure.
+    analysis failure. One analysis of every expression together; only a
+    failure re-analyses them one by one, to name the one that fails.
     """
+    if not sql_exprs:
+        return {}
     empty = spark.createDataFrame([], parsed_log_schema())
-    out: dict[str, str] = {}
-    for name, sql in sql_exprs.items():
-        try:
-            probe = empty.selectExpr(f"({sql}) AS probe")
-        except Exception as exc:  # AnalysisException
-            raise CELTranslationError(f"expression {name!r} fails analysis: {exc}") from exc
-        out[name] = probe.schema[0].dataType.simpleString()
-    return out
+    try:
+        probe = empty.selectExpr(*(f"({sql}) AS p{k}" for k, sql in enumerate(sql_exprs.values())))
+    except Exception:  # AnalysisException
+        for name, sql in sql_exprs.items():
+            try:
+                empty.selectExpr(f"({sql}) AS probe")
+            except Exception as exc:
+                raise CELTranslationError(f"expression {name!r} fails analysis: {exc}") from exc
+        raise
+    return {name: f.dataType.simpleString() for name, f in zip(sql_exprs, probe.schema)}

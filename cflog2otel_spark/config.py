@@ -30,10 +30,10 @@ from __future__ import annotations
 
 import json
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
-from .celtrans import CELTranslationError, parse_go_duration, sql_str, translate
+from .celtrans import CELTranslationError, parse_go_duration, sql_literal, translate
 
 logger = logging.getLogger(__name__)
 
@@ -57,20 +57,6 @@ def parse_duration(s: str) -> float:
         return parse_go_duration(s)
     except ValueError as exc:
         raise ConfigError(str(exc)) from exc
-
-
-def _sql_literal(v: Any) -> str:
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, str):
-        return sql_str(v)
-    if isinstance(v, int):
-        return f"{v}L"
-    if isinstance(v, float):
-        return f"CAST({v!r} AS DOUBLE)"
-    if v is None:
-        return "NULL"
-    raise ConfigError(f"unsupported literal {v!r}")
 
 
 @dataclass
@@ -107,7 +93,7 @@ class CELCapable:
             if keys == {"switch"}:
                 return cls(sql=_switch_to_sql(v["switch"], where, switch_zero), raw=v)
             raise ConfigError(f"{where}: unknown object shape {sorted(keys)}")
-        return cls(sql=_sql_literal(v), is_literal=True, literal=v, raw=v)
+        return cls(sql=_value_sql(v, where), is_literal=True, literal=v, raw=v)
 
 
 def _switch_to_sql(cases: Any, where: str, zero_sql: str | None = None) -> str:
@@ -170,7 +156,10 @@ def _value_sql(v: Any, where: str) -> str:
         if set(v.keys()) == {"expr"}:
             return translate(v["expr"])
         raise ConfigError(f"{where}: unexpected object")
-    return _sql_literal(v)
+    try:
+        return sql_literal(v)
+    except CELTranslationError as exc:
+        raise ConfigError(f"{where}: {exc}") from exc
 
 
 def _check_fields(d: dict, allowed: set[str], where: str) -> None:
@@ -522,6 +511,21 @@ class Config:
                 for i, m in enumerate(self.metrics)
             ],
         )
+
+    def only_metric(self, spark, i: int) -> "Config":
+        """This config with metrics[i] alone, carrying what this config's
+        validate_expressions found for it: once this config is validated,
+        validating or planning the copy costs no analysis."""
+        types = self.validate_expressions(spark)
+        one = replace(self, metrics=[self.metrics[i]])
+        at = f"metrics[{i}]."
+        one._types = {
+            k.replace(at, "metrics[0].", 1): t
+            for k, t in types.items()
+            if k.startswith(at) or not k.startswith("metrics[")
+        }
+        one._validated = one.expressions()
+        return one
 
     def validate_expressions(self, spark) -> dict[str, str]:
         """Load-time analysis probe, mirroring cel.go:222-237; returns each

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import logging
 import math
-from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -277,6 +276,8 @@ def aggregate_points(parsed: DataFrame, cfg: Config, lineage: bool = False) -> D
 
 
 def aggregate_metric(parsed: DataFrame, cfg: Config, m: MetricsConfig) -> DataFrame:
-    """One metric config -> one sink DataFrame of data points: the
-    aggregate_points plan over a one-metric config."""
-    return aggregate_points(parsed, replace(cfg, metrics=[m])).selectExpr("inline(p0)")
+    """One metric of `cfg` -> one sink DataFrame of data points: the
+    aggregate_points plan over the one-metric config (Config.only_metric,
+    so `cfg`'s validation is reused)."""
+    one = cfg.only_metric(parsed.sparkSession, cfg.metrics.index(m))
+    return aggregate_points(parsed, one).selectExpr("inline(p0)")

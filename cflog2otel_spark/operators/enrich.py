@@ -8,17 +8,18 @@ per-file constant in practice, so Catalyst folds it cheaply; at 100 TB it
 costs one regex per row with no shuffle. The event's fields are literal
 columns, NULL for a run with no event; schemas.CEL_FIELDS declares them.
 
-Each function is built from SQL text: one `selectExpr` that replaces or
-appends its columns, after one `where` for the "skip" rule, so `enrich`
-costs two analyses and `with_event_context` one.
+Each function is built from SQL text: one `withColumns` projection of
+`F.expr` columns that replaces or appends its columns, after one `where`
+for the "skip" rule, so `enrich` costs two analyses and
+`with_event_context` one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..celtrans import sql_ident, sql_str
+from ..celtrans import sql_ident, sql_literal, sql_str
 from ..schemas import CEL_FIELDS
 
 # basename(source) minus .gz, then SplitN(".", 3): distID . datehour . hash
@@ -27,19 +28,11 @@ _BASE = sql_str(r"([^/]+)\.gz$")
 _DOT = sql_str(r"\.")
 
 
-def _with_columns(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-    """`df` with each column of `cols` (name -> SQL) replaced in place or
-    appended, as withColumns does, in one projection."""
-    kept = [f"{cols[c]} AS {sql_ident(c)}" if c in cols else sql_ident(c) for c in df.columns]
-    added = [f"{sql} AS {sql_ident(c)}" for c, sql in cols.items() if c not in df.columns]
-    return df.selectExpr(*kept, *added)
-
-
 def _key_columns(
     df: DataFrame, source_col: str, on_bad_key: str
-) -> tuple[DataFrame, dict[str, str]]:
-    """`df` with the "skip" rule's filter, and the SQL of the object-key
-    columns (plus, for "fail", of the asserting `timestamp`)."""
+) -> tuple[DataFrame, dict[str, Column]]:
+    """`df` with the "skip" rule's filter, and the object-key columns
+    (plus, for "fail", the asserting `timestamp`), each from SQL text."""
     src = sql_ident(source_col)
     base = f"regexp_extract({src}, {_BASE}, 1)"
     # SplitN(".", 3): first two dots split, remainder (incl. dots) is hash
@@ -53,24 +46,17 @@ def _key_columns(
         cols["timestamp"] = f"CASE WHEN assert_true({valid}, {msg}) IS NULL THEN `timestamp` END"
     for i, c in enumerate(("distribution_id", "datehour", "object_hash")):
         cols[c] = f"CASE WHEN {valid} THEN get({parts}, {i}) END"
-    return df, cols
+    return df, {c: F.expr(sql) for c, sql in cols.items()}
 
 
-def _event_columns(ctx: dict) -> dict[str, str]:
-    """SQL of the event fields of schemas.CEL_FIELDS, each from `ctx` or
+def _event_columns(ctx: dict) -> dict[str, Column]:
+    """The event fields of schemas.CEL_FIELDS, each a literal from `ctx` or
     NULL."""
-    def literal(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, str):
-            return sql_str(v)
-        if isinstance(v, bool):
-            return str(v).upper()
-        if isinstance(v, int):
-            return str(v)
-        return f"CAST({sql_str(repr(float(v)))} AS DOUBLE)"
-
-    return {f.col: f"CAST({literal(ctx.get(f.col))} AS {f.dtype})" for f in CEL_FIELDS if f.event}
+    return {
+        f.col: F.expr(f"CAST({sql_literal(ctx.get(f.col))} AS {f.dtype})")
+        for f in CEL_FIELDS
+        if f.event
+    }
 
 
 def parse_source_key(
@@ -89,7 +75,8 @@ def parse_source_key(
         aggregation consumes, so column pruning can never drop it, and it
         costs no extra scan
     """
-    return _with_columns(*_key_columns(df, source_col, on_bad_key))
+    df, cols = _key_columns(df, source_col, on_bad_key)
+    return df.withColumns(cols)
 
 
 def with_event_context(df: DataFrame, ctx: dict) -> DataFrame:
@@ -97,14 +84,14 @@ def with_event_context(df: DataFrame, ctx: dict) -> DataFrame:
     schemas.CEL_FIELDS, cel.go:48-69) as literal columns, each from `ctx`
     (sources.events.s3_record_context) or NULL when `ctx` lacks it.
     Constant-folded by Catalyst; zero runtime cost."""
-    return _with_columns(df, _event_columns(ctx))
+    return df.withColumns(_event_columns(ctx))
 
 
 def enrich(df: DataFrame, on_bad_key: str = "null") -> DataFrame:
     """Every CEL context column: the object-key fields (parse_source_key),
     and the event fields NULL, as for a run with no S3 event."""
     df, cols = _key_columns(df, "source", on_bad_key)
-    return _with_columns(df, cols | _event_columns({}))
+    return df.withColumns(cols | _event_columns({}))
 
 
 def broadcast_lookup(

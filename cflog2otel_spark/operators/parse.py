@@ -62,12 +62,9 @@ def decode_tokens_sql(tokens: str) -> str:
     return f"decode(unhex(array_join(transform({tokens}, x -> get({_HEX_TABLE}, x)), '')), 'UTF-8')"
 
 
-def decode_tokens_col(tokens: Column) -> Column:
-    """decode_tokens_sql as a Column, for a `tokens` Column."""
-    return F.decode(
-        F.unhex(F.array_join(F.transform(tokens, lambda x: F.get(F.expr(_HEX_TABLE), x)), "")),
-        "UTF-8",
-    )
+def decode_tokens_col(tokens: str) -> Column:
+    """decode_tokens_sql as a Column, for `tokens` a column name or SQL."""
+    return F.expr(decode_tokens_sql(tokens))
 
 
 def encode_tokens_col(line: Column) -> Column:

@@ -445,7 +445,7 @@ def q_cf_roundtrip_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.parse import decode_tokens_col, encode_tokens_col
 
     parsed = _parsed(spark, sf_dir)  # keeps tokens/n_tok (payload columns)
-    reencoded = encode_tokens_col(decode_tokens_col(F.col("tokens")))
+    reencoded = encode_tokens_col(decode_tokens_col("tokens"))
     mismatch = F.sum(
         F.when(
             (~(reencoded == F.col("tokens")))

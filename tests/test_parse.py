@@ -155,7 +155,7 @@ def test_decode_impls_agree(spark):
     lines = ["plain ascii line", "ünïcodé 日本語 ✓", ""]
     df = tokenized_df_from_lines(spark, lines, SOURCE1)
     got = df.select(
-        decode_tokens_col(F.col("tokens")).alias("a"),
+        decode_tokens_col("tokens").alias("a"),
         decode_tokens_udf(F.col("tokens")).alias("b"),
     ).collect()
     for r, line in zip(got, lines):

@@ -339,6 +339,35 @@ def test_validation_is_memoized_only_on_success(spark, monkeypatch):
     assert len(calls) == 3
 
 
+def test_aggregate_metric_reuses_the_config_validation(spark, tokenized, monkeypatch):
+    """aggregate_metric plans a metric of an already validated config with
+    no further validation, and its sink is that metric's share of the
+    all-metrics aggregation."""
+    import cflog2otel_spark.celtrans as celtrans
+    from cflog2otel_spark.operators.aggregate import aggregate_metric, aggregate_points
+    from cflog2otel_spark.operators.enrich import enrich
+    from cflog2otel_spark.operators.parse import decode_and_parse
+
+    cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
+    cfg.validate_expressions(spark)
+    parsed = enrich(decode_and_parse(tokenized), on_bad_key="skip")
+
+    calls = []
+    real = celtrans.validate_against_schema
+
+    def counting(spark_, exprs):
+        calls.append(exprs)
+        return real(spark_, exprs)
+
+    monkeypatch.setattr(celtrans, "validate_against_schema", counting)
+    sinks = [aggregate_metric(parsed, cfg, m) for m in (cfg.metrics[0], cfg.metrics[1], cfg.metrics[0])]
+    assert calls == []
+
+    want = sorted(map(repr, aggregate_points(parsed, cfg).selectExpr("inline(p1)").collect()))
+    assert want
+    assert sorted(map(repr, sinks[1].collect())) == want
+
+
 def test_config_attribute_types_match_per_list_probes(spark, tokenized):
     """The attribute types aggregate_points reads off the config's
     validation (against the declared parsed-log schema) are the types the

@@ -120,7 +120,7 @@ def test_malformed_stats_counts_out_of_range_tokens(spark):
     # the corruption really is silent: the poisoned rows decode to a
     # SHORTER string (dropped bytes), not to NULL or an error
     short = raw.filter(F.col("doc_id").startswith("bad")).select(
-        F.length(decode_tokens_col(F.col("tokens"))).alias("n"), "n_tok"
+        F.length(decode_tokens_col("tokens")).alias("n"), "n_tok"
     ).collect()
     assert all(r["n"] == r["n_tok"] - 1 for r in short)
 
