@@ -1,7 +1,9 @@
-"""Backfill / bounded-lateness selection (reference: app.go:322-368).
+"""Invocation scoping and the backfill gates (reference: app.go:322-368).
 
-Semantics on an S3 event for trigger object X with key
-{prefix}{distID}.{datehour}.{hash}.gz, backfill enabled, tolerance T:
+One invocation is one S3 record: the trigger object X, its event time and,
+with backfill on, the listing of X's siblings. `invocation_rows` returns
+the rows it aggregates. For an object key {prefix}{distID}.{datehour}.{hash}.gz
+with backfill enabled and tolerance T:
 
   - ALL lines of X are kept (no line gate on the trigger object).
   - Sibling objects sharing {prefix}{distID}.{datehour}. are re-read iff
@@ -11,10 +13,12 @@ Semantics on an S3 event for trigger object X with key
   - Objects under a different (distID, datehour) prefix are out of scope
     (the ListObjectsV2 prefix).
 
+Times without an offset are UTC; times with one are converted to UTC.
+
 Spark mapping: the object manifest (source -> last_modified) is tiny and
-broadcast; selection is a single filter over the corpus — with an Iceberg /
-parquet layout partitioned by source, the IN-list on eligible sources
-becomes partition pruning, so a backfill invocation reads exactly one
+stays on the driver; selection is a single filter over the corpus — with an
+Iceberg / parquet layout partitioned by source, the IN-list on eligible
+sources becomes partition pruning, so a backfill invocation reads exactly one
 (distID, datehour) slice of a 100 TB table. Re-emission per invocation is
 idempotent-by-window (delta temporality; T4 in SURVEY.md §2.6) — pair with
 a dynamic-overwrite sink keyed on (window, source-hour).
@@ -22,10 +26,13 @@ a dynamic-overwrite sink keyed on (window, source-hour).
 
 from __future__ import annotations
 
-from datetime import datetime
+import calendar
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..celtrans import sql_literal, sql_str
+from ..config import BackfillConfig
 
 
 def _key_parts(key: str) -> tuple[str, str, str] | None:
@@ -41,13 +48,30 @@ def _key_parts(key: str) -> tuple[str, str, str] | None:
     return prefix, parts[0], parts[1]
 
 
+def _utc(t: str | datetime) -> datetime:
+    """`t` (a datetime or ISO 8601 text) as an aware UTC datetime; a time
+    without an offset is read as UTC."""
+    dt = t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
+    return dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt.astimezone(timezone.utc)
+
+
+def line_gate(event_time: str | datetime, tolerance_seconds: float) -> str:
+    """The line-level lateness gate (app.go:354-361) as a SQL predicate:
+    eventTime - timestamp <= T, both read in whole seconds as
+    `unix_timestamp` does."""
+    ev = calendar.timegm(_utc(event_time).utctimetuple())
+    return (
+        f"`timestamp` IS NOT NULL AND "
+        f"{ev} - unix_timestamp(`timestamp`) <= {sql_literal(float(tolerance_seconds))}"
+    )
+
+
 def backfill_select(
     parsed: DataFrame,
     trigger_source: str,
     event_time: str | datetime,
     tolerance_seconds: float,
     last_modified: dict[str, str | datetime],
-    source_col: str = "source",
 ) -> DataFrame:
     """Select the rows one backfill-enabled invocation would aggregate.
 
@@ -61,35 +85,45 @@ def backfill_select(
     prefix, dist, datehour = kp
     sibling_prefix = f"{prefix}{dist}.{datehour}."
 
-    ev = F.lit(str(event_time)).cast("timestamp")
     # object-level gate, driver-side (the manifest is small metadata)
-    import datetime as _dt
-
-    def _to_dt(x):
-        if isinstance(x, _dt.datetime):
-            return x
-        return _dt.datetime.fromisoformat(str(x).replace("Z", "+00:00"))
-
-    ev_dt = _to_dt(event_time)
+    ev = _utc(event_time)
     eligible = [
         src
         for src, lm in last_modified.items()
         if src != trigger_source
         and src.startswith(sibling_prefix)
-        and (ev_dt - _to_dt(lm).replace(tzinfo=ev_dt.tzinfo)).total_seconds()
-        <= tolerance_seconds
+        and (ev - _utc(lm)).total_seconds() <= tolerance_seconds
     ]
+    keep = f"`source` = {sql_str(trigger_source)}"
+    if eligible:
+        siblings = ", ".join(sql_str(s) for s in eligible)
+        keep += f" OR (`source` IN ({siblings}) AND {line_gate(ev, tolerance_seconds)})"
+    return parsed.where(keep)
 
-    is_trigger = F.col(source_col) == trigger_source
-    is_sibling = F.col(source_col).isin(eligible) if eligible else F.lit(False)
-    line_ok = (
-        F.col("timestamp").isNotNull()
-        & (
-            F.unix_timestamp(ev) - F.unix_timestamp(F.col("timestamp"))
-            <= F.lit(float(tolerance_seconds))
-        )
-    )
-    return parsed.filter(is_trigger | (is_sibling & line_ok))
+
+def invocation_rows(
+    parsed: DataFrame,
+    backfill: BackfillConfig,
+    trigger: str | None = None,
+    event_time: str | datetime | None = None,
+    manifest: dict[str, str | datetime] | None = None,
+) -> DataFrame:
+    """The rows one invocation aggregates:
+
+      - with a `trigger`, its own rows, plus the siblings `backfill_select`
+        admits when backfill is on and both a `manifest` and a non-empty
+        `event_time` are given;
+      - with no trigger, the whole input, line-gated when backfill is on
+        and an `event_time` is given.
+    """
+    tol = backfill.time_tolerance_seconds
+    if trigger is None:
+        if backfill.enabled and event_time:
+            return parsed.where(line_gate(event_time, tol))
+        return parsed
+    if backfill.enabled and manifest is not None and event_time:
+        return backfill_select(parsed, trigger, event_time, tol, manifest)
+    return parsed.where(f"`source` = {sql_str(trigger)}")
 
 
 def manifest_from_listing(base_dir: str, suffix: str = ".gz") -> dict[str, str]:
@@ -101,7 +135,6 @@ def manifest_from_listing(base_dir: str, suffix: str = ".gz") -> dict[str, str]:
     real listing. Driver-side: the manifest is tiny object metadata, never
     row data."""
     import os
-    from datetime import datetime, timezone
 
     out: dict[str, str] = {}
     for root, _dirs, files in os.walk(base_dir):

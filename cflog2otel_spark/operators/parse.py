@@ -250,7 +250,6 @@ def decode_and_parse(
     df: DataFrame,
     field_order: list[str] | None = None,
     strict: bool = False,
-    keep_payload: bool = True,
 ) -> DataFrame:
     """tokenized input (doc_id, tokens, n_tok, source) -> parsed log records:
     the decode projection, then parse_cf_lines.
@@ -265,7 +264,6 @@ def decode_and_parse(
             "CASE WHEN exists(tokens, x -> x < 0 OR x > 255) THEN CAST(raise_error("
             "'token value outside byte range [0,255]') AS ARRAY<INT>) ELSE tokens END"
         )
-    drop = {"line"} | (set() if keep_payload else {"tokens", "n_tok"})
-    keep = [sql_ident(c) for c in df.columns if c not in drop]
+    keep = [sql_ident(c) for c in df.columns if c != "line"]
     out = df.selectExpr(*keep, f"{decode_tokens_sql(tokens)} AS line")
     return parse_cf_lines(out, "line", field_order, strict=strict)

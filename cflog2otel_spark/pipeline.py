@@ -3,7 +3,7 @@
 The reference interleaves all metric configs in one pass over rows, one
 accumulator keyed by (metric, resource set, window, attribute set)
 (the reference's aggregation.go:50-73). So do we: the parse+enrich
-projection, pruned to the columns some metric references plus the payload,
+projection, which Catalyst prunes to the columns the aggregation reads,
 feeds ONE aggregation of every metric (operators/aggregate.aggregate_points)
 with the manifest's per-source stats folded in. It is read once, by that
 aggregation's single job, so nothing is cached.
@@ -20,7 +20,6 @@ from datetime import datetime, timedelta, timezone
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 from .config import Config
@@ -109,7 +108,7 @@ def _table_rows(table: pa.Table, to_ts=None) -> list[dict]:
 
 @dataclass
 class PipelineResult:
-    """One run: the pruned parsed projection and the ONE aggregation of
+    """One run: the parsed projection and the ONE aggregation of
     every metric (`aggregate_points`), with per-source stats when the run
     keeps the payload.
 
@@ -188,25 +187,13 @@ class PipelineResult:
         self._tables = self._stats = self._points = None
 
 
-def _referenced_columns(cfg: Config) -> set[str]:
-    """Column pruning: parse emits all fields, but the projection the
-    aggregation reads keeps only what some expression references (SURVEY.md §4
-    'column pruning — worth exploiting explicitly').
-    """
-    import re
-
-    return set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", " ".join(cfg.expressions().values())))
-
-
-def parse_and_enrich(
-    tokenized: DataFrame, cfg: Config, strict: bool = False, keep_payload: bool = True
-) -> DataFrame:
+def parse_and_enrich(tokenized: DataFrame, cfg: Config, strict: bool = False) -> DataFrame:
     """Tokenized input -> parsed, enriched records, with the config's
     skip-or-fail on unparseable object keys (app.go:306-313): NoSkip=true
     errors the run at the first bad key; otherwise the file's rows are
     skipped, mirroring the reference's per-file skip."""
-    parsed = decode_and_parse(tokenized, strict=strict, keep_payload=keep_payload)
-    return enrich(parsed, on_bad_key="fail" if cfg.no_skip else "skip")
+    return enrich(decode_and_parse(tokenized, strict=strict),
+                  on_bad_key="fail" if cfg.no_skip else "skip")
 
 
 def run_pipeline(
@@ -216,31 +203,20 @@ def run_pipeline(
     strict: bool = False,
     cache: str | None = None,
     keep_payload: bool = True,
-    event_time: str | None = None,
-    trigger_source: str | None = None,
 ) -> PipelineResult:
     """Run every metric config over a tokenized-sequence DataFrame.
 
-    `event_time` + cfg.backfill enable the per-line lateness gate
-    (app.go:354-361): rows with event_time - timestamp > tolerance drop.
-    Pass `trigger_source` to exempt the trigger object's own lines — the
-    reference applies the line gate only inside the sibling re-read loop,
-    never to the trigger file (app.go:324 keeps all trigger lines). Without
-    it the gate is coarse (every row gated) — a documented deviation for
-    callers that don't know the trigger.
-    `keep_payload` keeps doc_id/tokens/n_tok/source on `result.parsed` and
-    folds the manifest's per-source stats into the aggregation.
+    Which rows one invocation aggregates (its trigger object, backfill
+    siblings and lateness gate) is `operators.backfill.invocation_rows`'
+    job; scope the input with it first.
+    `keep_payload` folds the manifest's per-source stats (rows, times and
+    tokens per source) into the aggregation.
     `cache` has no effect: the projection is read once, by the one
     aggregation, so nothing is persisted. It is accepted so existing
     callers still run.
     """
     return run_pipeline_parsed(
-        spark,
-        cfg,
-        parse_and_enrich(tokenized, cfg, strict=strict, keep_payload=keep_payload),
-        keep_payload=keep_payload,
-        event_time=event_time,
-        trigger_source=trigger_source,
+        spark, cfg, parse_and_enrich(tokenized, cfg, strict=strict), keep_payload=keep_payload
     )
 
 
@@ -249,39 +225,15 @@ def run_pipeline_parsed(
     cfg: Config,
     parsed: DataFrame,
     keep_payload: bool = True,
-    event_time: str | None = None,
-    trigger_source: str | None = None,
 ) -> PipelineResult:
     """Every metric over an already-parsed+enriched record set (shared by
-    the tokenized and raw-text sources); options as in run_pipeline."""
+    the tokenized and raw-text sources); options as in run_pipeline. The
+    aggregation reads only the columns it references: Catalyst prunes the
+    rest down to the scan."""
     cfg.validate_expressions(spark)
-
-    if cfg.backfill.enabled and event_time is not None:
-        tol = cfg.backfill.time_tolerance_seconds
-        line_ok = F.col("timestamp").isNotNull() & (
-            F.unix_timestamp(F.lit(event_time).cast("timestamp"))
-            - F.unix_timestamp(F.col("timestamp"))
-            <= F.lit(tol)
-        )
-        if trigger_source is not None:
-            # the trigger object's own lines are never line-gated
-            # (app.go:324 vs :354-361 — the gate lives in the sibling loop)
-            line_ok = (F.col("source") == F.lit(trigger_source)) | line_ok
-        parsed = parsed.filter(line_ok)
-
-    needed = _referenced_columns(cfg)
-    payload = ["doc_id", "tokens", "n_tok", "source"] if keep_payload else []
-    keep = [
-        c
-        for c in parsed.columns
-        if c in needed or c in payload or c == "timestamp"
-    ]
-    parsed = parsed.select(*dict.fromkeys(keep))
-
-    lineage = keep_payload and "source" in parsed.columns
     return PipelineResult(
         parsed=parsed,
-        points_df=aggregate_points(parsed, cfg, lineage=lineage),
+        points_df=aggregate_points(parsed, cfg, lineage=keep_payload and "source" in parsed.columns),
         metric_index={m.name: i for i, m in enumerate(cfg.metrics)},
     )
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..config import Config
 from ..operators.aggregate import aggregate_metric
+from ..operators.backfill import line_gate
 from ..operators.enrich import enrich
 from ..operators.parse import decode_and_parse, encode_tokens_col
 
@@ -472,17 +473,7 @@ def o_cf_roundtrip_integrity() -> str:
 def q_cf_backfill_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-line lateness gate (app.go:354-361): fixed event time, 24h
     tolerance; count surviving rows per hour window."""
-    event_time = "2024-01-31 00:00:00"
-    tol = 24 * 3600
-    parsed = _parsed(spark, sf_dir)
-    gated = parsed.filter(
-        F.col("timestamp").isNotNull()
-        & (
-            F.unix_timestamp(F.lit(event_time).cast("timestamp"))
-            - F.unix_timestamp(F.col("timestamp"))
-            <= F.lit(tol)
-        )
-    )
+    gated = _parsed(spark, sf_dir).where(line_gate("2024-01-31 00:00:00", 24 * 3600))
     return (
         gated.groupBy(F.window("timestamp", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("kept"))

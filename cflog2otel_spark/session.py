@@ -57,9 +57,6 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # prefer shuffled-hash over sort-merge when the planner's size
         # conditions hold, and let AQE rewrite SMJ->SHJ at runtime when
         # every post-shuffle partition is under 128m (guide §3.1): the

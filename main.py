@@ -5,9 +5,17 @@
       --input /data/tokenized_corpus \
       --out /data/sinks \
       [--format parquet|json] [--strict] [--golden-stdout] \
-      [--event-time 2019-12-01T22:56:00Z] \
-      [--config-validate-only] [--render-config] [--local-collector] \
-      [--manifest listing.json | --backfill-auto-manifest DIR]
+      [--s3-event event.json | --s3-url s3://bucket/key |
+       --trigger-source KEY [--event-time 2019-12-01T22:56:00Z]] \
+      [--manifest listing.json | --backfill-auto-manifest DIR] \
+      [--config-validate-only] [--render-config] [--local-collector]
+
+Each S3 record of --s3-event/--s3-url is one invocation, scoped to its
+object; --trigger-source/--event-time is a one-record invocation; with
+neither, the whole input is one. With backfill on, an invocation that has
+a manifest and an event time also reads the trigger's gated siblings, and
+the whole input is line-gated by --event-time
+(cflog2otel_spark/operators/backfill.py).
 
 Mirrors the reference CLI surface (/root/reference/cmd/cflog2otel/main.go:43-51):
   --config-validate-only ≈ -config-validate-only
@@ -15,7 +23,7 @@ Mirrors the reference CLI surface (/root/reference/cmd/cflog2otel/main.go:43-51)
   --local-collector / --golden-stdout ≈ -local-collector (JSON to stdout)
   --s3-url ≈ -s3-url (dummy S3 notification synthesized from the URL);
   --log-level/--log-prettify ≈ -log-level/-log-prettify;
-  --event-time drives the backfill lateness gate;
+  --trigger-source/--event-time ≈ one S3 record's object key and eventTime;
   --backfill-auto-manifest ≈ the ListObjectsV2 sibling listing
   (app.go:322-336), derived from a directory's file mtimes.
 
@@ -124,17 +132,25 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         help="sink file format: one parquet file, or JSON lines, per metric",
     )
     ap.add_argument("--strict", action="store_true", help="fail on malformed rows (reference semantics)")
-    ap.add_argument("--event-time", help="backfill event time (ISO), enables the lateness gate")
+    ap.add_argument(
+        "--event-time",
+        help="invocation event time (ISO 8601, UTC unless it has an offset): "
+        "with backfill on, gates the siblings of --trigger-source, or every "
+        "line of the input without one (app.go:341-361)",
+    )
     ap.add_argument(
         "--trigger-source",
-        help="object key of the triggering file; its lines are exempt from "
-        "the line gate (app.go:324) and it anchors sibling discovery",
+        help="object key of the triggering file: the run aggregates this "
+        "object alone, as for one S3 record, plus its manifest-gated "
+        "siblings with backfill on, --event-time and a manifest; its own "
+        "lines are never line-gated (app.go:324)",
     )
     ap.add_argument(
         "--manifest",
         help="JSON file mapping object key -> LastModified (the S3 listing); "
-        "with --trigger-source and --event-time this runs the reference's "
-        "full object+line backfill gate (app.go:322-368)",
+        "with backfill on, every invocation with a trigger object and an "
+        "event time runs the reference's full object+line backfill gate "
+        "(app.go:322-368)",
     )
     ap.add_argument(
         "--backfill-auto-manifest",
@@ -374,18 +390,41 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
 
+        from cflog2otel_spark.operators.backfill import invocation_rows, manifest_from_listing
+        from cflog2otel_spark.operators.enrich import with_event_context
+
+        # one invocation per S3 record (app.go:179-203), a --trigger-source
+        # object as a one-record invocation, else the whole input as one
+        if args.s3_event or args.s3_url:
+            from cflog2otel_spark.sources.events import (
+                collect_s3_records, dummy_s3_notification, s3_record_context)
+
+            if args.s3_event:
+                with open(args.s3_event) as fh:
+                    event_json = fh.read()
+            else:
+                try:
+                    event_json = dummy_s3_notification(args.s3_url)
+                except ValueError as exc:
+                    print(str(exc), file=sys.stderr)
+                    return 2
+            invocations = [s3_record_context(r) for r in collect_s3_records(event_json)]
+            if not invocations:
+                print("no s3 notifications, skipping", file=sys.stderr)
+                return 0
+        else:
+            invocations = [{"source": args.trigger_source, "event_time": args.event_time}]
         manifest = None
         if args.manifest:
             with open(args.manifest) as fh:
                 manifest = json.load(fh)
         elif args.backfill_auto_manifest:
-            from cflog2otel_spark.operators.backfill import manifest_from_listing
-
             manifest = manifest_from_listing(args.backfill_auto_manifest)
-        use_manifest = bool(
-            manifest is not None and args.trigger_source and args.event_time
-            and cfg.backfill.enabled
-        )
+        elif cfg.backfill.enabled and invocations[0]["source"] is not None:
+            print(
+                "backfill enabled but no --manifest: sibling discovery "
+                "skipped, processing the trigger object only", file=sys.stderr,
+            )
         t0 = time.time()
         if args.text_input:
             from cflog2otel_spark.operators.enrich import enrich
@@ -406,70 +445,13 @@ def main(argv: list[str] | None = None) -> int:
 
             parsed = resume_filter(parsed, args.checkpoint_dir)
 
-        results = []
-        if args.s3_event or args.s3_url:
-            # Lambda-event entry (app.go:179-203): unwrap SQS/SNS wrapping,
-            # each S3 record scopes one run to its object (plus manifest-
-            # gated siblings when backfill is enabled)
-            from pyspark.sql import functions as F
-
-            from cflog2otel_spark.operators.backfill import backfill_select
-            from cflog2otel_spark.operators.enrich import with_event_context
-            from cflog2otel_spark.sources.events import (
-                collect_s3_records, dummy_s3_notification, s3_record_context)
-
-            if args.s3_event:
-                with open(args.s3_event) as fh:
-                    event_json = fh.read()
-            else:
-                try:
-                    event_json = dummy_s3_notification(args.s3_url)
-                except ValueError as exc:
-                    print(str(exc), file=sys.stderr)
-                    return 2
-            records = collect_s3_records(event_json)
-            if not records:
-                print("no s3 notifications, skipping", file=sys.stderr)
-                return 0
-            for rec in records:
-                ctx = s3_record_context(rec)
-                scoped = with_event_context(parsed, ctx)
-                if cfg.backfill.enabled and manifest is not None:
-                    scoped = backfill_select(
-                        scoped, ctx["source"], ctx["event_time"],
-                        cfg.backfill.time_tolerance_seconds, manifest,
-                    )
-                else:
-                    if cfg.backfill.enabled:
-                        print(
-                            "backfill enabled but no --manifest: sibling "
-                            "discovery skipped, processing the trigger "
-                            "object only", file=sys.stderr,
-                        )
-                    scoped = scoped.filter(F.col("source") == ctx["source"])
-                results.append(run_pipeline_parsed(spark, cfg, scoped))
-        elif use_manifest:
-            # full object+line gate: sibling objects admitted by the
-            # LastModified manifest, their lines by the lateness gate, the
-            # trigger's lines unconditionally (app.go:322-368)
-            from cflog2otel_spark.operators.backfill import backfill_select
-
-            parsed = backfill_select(
-                parsed,
-                args.trigger_source,
-                args.event_time,
-                cfg.backfill.time_tolerance_seconds,
-                manifest,
-            )
-            results.append(run_pipeline_parsed(spark, cfg, parsed))
-        else:
-            results.append(run_pipeline_parsed(
-                spark,
-                cfg,
-                parsed,
-                event_time=args.event_time,
-                trigger_source=args.trigger_source,
+        results = [
+            run_pipeline_parsed(spark, cfg, invocation_rows(
+                with_event_context(parsed, ctx), cfg.backfill,
+                ctx["source"], ctx["event_time"], manifest,
             ))
+            for ctx in invocations
+        ]
         n_rows = None
         if args.checkpoint_dir:
             from cflog2otel_spark.lineage import write_run_manifest

@@ -84,7 +84,9 @@ def test_flagship_plan_has_no_python_and_prunes_scan(spark, tmp_path, monkeypatc
     """Regression guard for the perf-critical plan shape: the data points
     of the whole config are collected by ONE plan with one shuffle, over
     an uncached projection, with no Python eval nodes and the parquet scan
-    pruned to the columns the config needs."""
+    pruned to the columns the config needs — by Catalyst alone, with and
+    without the lineage stats (`keep_payload`), which add `n_tok` and
+    `source` but never `doc_id`."""
     from cflog2otel_spark.pipeline import run_pipeline
 
     plans = []
@@ -100,13 +102,17 @@ def test_flagship_plan_has_no_python_and_prunes_scan(spark, tmp_path, monkeypatc
     path = str(tmp_path / "corpus")
     tokenized_df_from_lines(spark, generated_lines(spark, 300, seed=3), SOURCE1).write.parquet(path)
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
-    res = run_pipeline(spark, cfg, spark.read.parquet(path), keep_payload=False)
-    assert all(res.points().values())
-    assert len(plans) == 1, plans
-    plan = plans[0]
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "InMemoryTableScan" not in plan
-    assert "Python" not in plan and "HashAggregate" in plan
-    read_schema = [line for line in plan.split("\n") if "ReadSchema" in line]
-    assert len(read_schema) == 1 and "tokens" in read_schema[0], plan
-    assert "doc_id" not in read_schema[0]
+    for keep_payload in (False, True):
+        plans.clear()
+        res = run_pipeline(spark, cfg, spark.read.parquet(path), keep_payload=keep_payload)
+        assert all(res.points().values())
+        assert len(plans) == 1, plans
+        plan = plans[0]
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "InMemoryTableScan" not in plan
+        assert "Python" not in plan and "HashAggregate" in plan
+        read_schema = [line for line in plan.split("\n") if "ReadSchema" in line]
+        assert len(read_schema) == 1 and "tokens" in read_schema[0], plan
+        assert "doc_id" not in read_schema[0]
+        if keep_payload:
+            assert "n_tok" in read_schema[0] and "source" in read_schema[0], plan
