@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import json
 import logging
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Any
 
 from .celtrans import CELTranslationError, parse_go_duration, sql_literal, translate
@@ -511,21 +511,6 @@ class Config:
                 for i, m in enumerate(self.metrics)
             ],
         )
-
-    def only_metric(self, spark, i: int) -> "Config":
-        """This config with metrics[i] alone, carrying what this config's
-        validate_expressions found for it: once this config is validated,
-        validating or planning the copy costs no analysis."""
-        types = self.validate_expressions(spark)
-        one = replace(self, metrics=[self.metrics[i]])
-        at = f"metrics[{i}]."
-        one._types = {
-            k.replace(at, "metrics[0].", 1): t
-            for k, t in types.items()
-            if k.startswith(at) or not k.startswith("metrics[")
-        }
-        one._validated = one.expressions()
-        return one
 
     def validate_expressions(self, spark) -> dict[str, str]:
         """Load-time analysis probe, mirroring cel.go:222-237; returns each

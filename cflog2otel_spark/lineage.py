@@ -22,6 +22,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import utc_text
+
 
 def skew_metrics(stats: list[dict]) -> dict:
     counts = sorted((s["rows"] for s in stats), reverse=True)
@@ -38,8 +40,8 @@ def skew_metrics(stats: list[dict]) -> dict:
     }
 
 
-def _str_or_none(v):
-    return None if v is None else str(v)
+def _utc_or_none(micros: int | None) -> str | None:
+    return None if micros is None else utc_text(micros, "%Y-%m-%d %H:%M:%S")
 
 
 def write_run_manifest(
@@ -54,7 +56,8 @@ def write_run_manifest(
     Pass the pipeline's wall time as elapsed_sec to record throughput
     alongside the skew metrics.
 
-    `sources` are `result.source_stats()` and `sink_rows` counts the rows
+    `sources` are `result.source_stats()`, times as UTC text whatever the
+    driver's TZ, and `sink_rows` counts the rows
     of `result.tables()`: the one aggregation that computes both is
     collected to the driver here and held on the result until
     `unpersist()`, so a later sink write, golden or OTLP encode of the same
@@ -64,7 +67,7 @@ def write_run_manifest(
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
     stats = [
-        {**s, "min_ts": _str_or_none(s["min_ts"]), "max_ts": _str_or_none(s["max_ts"])}
+        {**s, "min_ts": _utc_or_none(s["min_ts"]), "max_ts": _utc_or_none(s["max_ts"])}
         for s in result.source_stats()
     ]
     sink_counts = {name: t.num_rows for name, t in result.tables().items()}

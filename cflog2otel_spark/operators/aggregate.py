@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..celtrans import sql_str
-from ..config import Config, MetricsConfig
+from ..config import Config
 
 # seconds from 0001-01-01T00:00:00Z (Go time.Time zero) to the Unix epoch
 GO_ZERO_EPOCH_OFFSET = 62135596800
@@ -275,9 +275,12 @@ def aggregate_points(parsed: DataFrame, cfg: Config, lineage: bool = False) -> D
     return agged.selectExpr(*out)
 
 
-def aggregate_metric(parsed: DataFrame, cfg: Config, m: MetricsConfig) -> DataFrame:
-    """One metric of `cfg` -> one sink DataFrame of data points: the
-    aggregate_points plan over the one-metric config (Config.only_metric,
-    so `cfg`'s validation is reused)."""
-    one = cfg.only_metric(parsed.sparkSession, cfg.metrics.index(m))
-    return aggregate_points(parsed, one).selectExpr("inline(p0)")
+def aggregate_metric(parsed: DataFrame, cfg: Config) -> DataFrame:
+    """The sink DataFrame of data points of a one-metric config: the
+    aggregate_points plan, unnested."""
+    if len(cfg.metrics) != 1:
+        raise ValueError(
+            f"aggregate_metric takes a one-metric config, got {len(cfg.metrics)} "
+            "metrics: use aggregate_points"
+        )
+    return aggregate_points(parsed, cfg).selectExpr("inline(p0)")

@@ -126,20 +126,20 @@ def invocation_rows(
     return parsed.where(f"`source` = {sql_str(trigger)}")
 
 
-def manifest_from_listing(base_dir: str, suffix: str = ".gz") -> dict[str, str]:
+def manifest_from_listing(base_dir: str) -> dict[str, str]:
     """Build the backfill manifest (object key -> LastModified) from a
     local directory listing — the deployment stand-in for the reference's
-    ListObjectsV2 flow (app.go:322-336): keys are file paths relative to
-    `base_dir`, LastModified is the file mtime (UTC). An Iceberg deployment
-    derives the same map from snapshot file metadata; an S3 one from the
-    real listing. Driver-side: the manifest is tiny object metadata, never
+    ListObjectsV2 flow (app.go:322-336): keys are the paths of the `.gz`
+    files relative to `base_dir`, LastModified is the file mtime (UTC). An
+    Iceberg deployment derives the same map from snapshot file metadata;
+    an S3 one from the real listing. Driver-side: the manifest is tiny object metadata, never
     row data."""
     import os
 
     out: dict[str, str] = {}
     for root, _dirs, files in os.walk(base_dir):
         for f in files:
-            if suffix and not f.endswith(suffix):
+            if not f.endswith(".gz"):
                 continue
             full = os.path.join(root, f)
             key = os.path.relpath(full, base_dir)

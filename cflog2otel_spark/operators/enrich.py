@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..celtrans import sql_ident, sql_literal, sql_str
+from ..celtrans import sql_literal, sql_str
 from ..schemas import CEL_FIELDS
 
 # basename(source) minus .gz, then SplitN(".", 3): distID . datehour . hash
@@ -28,13 +28,11 @@ _BASE = sql_str(r"([^/]+)\.gz$")
 _DOT = sql_str(r"\.")
 
 
-def _key_columns(
-    df: DataFrame, source_col: str, on_bad_key: str
-) -> tuple[DataFrame, dict[str, Column]]:
-    """`df` with the "skip" rule's filter, and the object-key columns
-    (plus, for "fail", the asserting `timestamp`), each from SQL text."""
-    src = sql_ident(source_col)
-    base = f"regexp_extract({src}, {_BASE}, 1)"
+def _key_columns(df: DataFrame, on_bad_key: str) -> tuple[DataFrame, dict[str, Column]]:
+    """`df` with the "skip" rule's filter, and the object-key columns of
+    `source` (plus, for "fail", the asserting `timestamp`), each from SQL
+    text."""
+    base = f"regexp_extract(`source`, {_BASE}, 1)"
     # SplitN(".", 3): first two dots split, remainder (incl. dots) is hash
     parts = f"split({base}, {_DOT}, 3)"
     valid = f"({base} != '' AND size({parts}) = 3)"
@@ -42,7 +40,7 @@ def _key_columns(
     if on_bad_key == "skip":
         df = df.where(valid)
     elif on_bad_key == "fail":
-        msg = f"concat('failed to parse object key: ', coalesce({src}, '<null>'))"
+        msg = "concat('failed to parse object key: ', coalesce(`source`, '<null>'))"
         cols["timestamp"] = f"CASE WHEN assert_true({valid}, {msg}) IS NULL THEN `timestamp` END"
     for i, c in enumerate(("distribution_id", "datehour", "object_hash")):
         cols[c] = f"CASE WHEN {valid} THEN get({parts}, {i}) END"
@@ -59,10 +57,18 @@ def _event_columns(ctx: dict) -> dict[str, Column]:
     }
 
 
-def parse_source_key(
-    df: DataFrame, source_col: str = "source", on_bad_key: str = "null"
-) -> DataFrame:
-    """Derive (distribution_id, datehour, object_hash) from the object key.
+def with_event_context(df: DataFrame, ctx: dict) -> DataFrame:
+    """Bind the S3 event's CEL context (the bucket.* and object.* fields of
+    schemas.CEL_FIELDS, cel.go:48-69) as literal columns, each from `ctx`
+    (sources.events.s3_record_context) or NULL when `ctx` lacks it.
+    Constant-folded by Catalyst; zero runtime cost."""
+    return df.withColumns(_event_columns(ctx))
+
+
+def enrich(df: DataFrame, on_bad_key: str = "null") -> DataFrame:
+    """Every CEL context column: (distribution_id, datehour, object_hash)
+    from the object key in `source`, and the event fields NULL, as for a
+    run with no S3 event.
 
     on_bad_key maps the reference's skip-or-fail (app.go:306-313):
       - "null": context columns NULL for unparseable keys (lenient default
@@ -75,22 +81,7 @@ def parse_source_key(
         aggregation consumes, so column pruning can never drop it, and it
         costs no extra scan
     """
-    df, cols = _key_columns(df, source_col, on_bad_key)
-    return df.withColumns(cols)
-
-
-def with_event_context(df: DataFrame, ctx: dict) -> DataFrame:
-    """Bind the S3 event's CEL context (the bucket.* and object.* fields of
-    schemas.CEL_FIELDS, cel.go:48-69) as literal columns, each from `ctx`
-    (sources.events.s3_record_context) or NULL when `ctx` lacks it.
-    Constant-folded by Catalyst; zero runtime cost."""
-    return df.withColumns(_event_columns(ctx))
-
-
-def enrich(df: DataFrame, on_bad_key: str = "null") -> DataFrame:
-    """Every CEL context column: the object-key fields (parse_source_key),
-    and the event fields NULL, as for a run with no S3 event."""
-    df, cols = _key_columns(df, "source", on_bad_key)
+    df, cols = _key_columns(df, on_bad_key)
     return df.withColumns(cols | _event_columns({}))
 
 

@@ -134,14 +134,12 @@ def _field_sql(idx: int, dtype: str, strict: bool) -> str:
 
 def parse_cf_lines(
     df: DataFrame,
-    line_col: str = "line",
     field_order: list[str] | None = None,
     strict: bool = False,
-    drop_line: bool = True,
 ) -> DataFrame:
-    """Project a raw tab-separated CloudFront log line column into the typed
-    nullable record plus derived columns: two projections, the tab split
-    and the fields.
+    """Project the raw tab-separated CloudFront log line column `line` into
+    the typed nullable record plus derived columns, in place of `line`: two
+    projections, the tab split and the fields.
 
     `field_order` is the `#Fields:` header (raw names, positional); defaults
     to the canonical 33-field v1.0 header. Unknown names are skipped with the
@@ -153,15 +151,14 @@ def parse_cf_lines(
     for i, name in enumerate(field_order):
         pos.setdefault(name, i)
 
-    line = sql_ident(line_col)
-    parts = f"split({line}, '\\t', -1)"
+    parts = "split(`line`, '\\t', -1)"
     if strict:
         # more values than header fields is a hard error (:305-307); the
         # guard must stay IN the dataflow (a side column would be pruned
         # by Catalyst), so the parts array itself is gated.
         parts = (
             f"CASE WHEN size({parts}) > {len(field_order)} THEN CAST(raise_error(concat("
-            f"'log line has more fields than expected: ', {line})) AS ARRAY<STRING>) "
+            f"'log line has more fields than expected: ', `line`)) AS ARRAY<STRING>) "
             f"ELSE {parts} END"
         )
     split = df.selectExpr(*map(sql_ident, df.columns), f"{parts} AS _parts")
@@ -172,7 +169,7 @@ def parse_cf_lines(
         else f"CAST(NULL AS {_SQL_TYPES[f.dtype]})"
         for f in CF_FIELDS
     }
-    keep = [sql_ident(c) for c in df.columns if c != line_col or not drop_line]
+    keep = [sql_ident(c) for c in df.columns if c != "line"]
     return split.selectExpr(
         *keep, *(f"{sql} AS {c}" for c, sql in _derive(fields, strict).items())
     )
@@ -202,7 +199,7 @@ def _derive(fields: dict[str, str], strict: bool) -> dict[str, str]:
     }
 
 
-def malformed_stats(df: DataFrame, line_col: str = "line") -> dict[str, int]:
+def malformed_stats(df: DataFrame) -> dict[str, int]:
     """Lenient-mode malformed-row accounting (the counter the reference's
     hard-fail behavior implies, cloudfront_std_log.go:257-277): for every
     numeric field, count rows where the raw value was present (not '-')
@@ -214,10 +211,10 @@ def malformed_stats(df: DataFrame, line_col: str = "line") -> dict[str, int]:
     r3 #4 wanted the lenient path visible too).
     One aggregation pass; returns {field: bad_rows}.
 
-    Requires the line column retained (drop_line=False in parse_cf_lines
-    or re-parse) — raw values come from re-splitting the line.
+    Requires a `line` column next to the parsed fields (parse_cf_lines
+    replaces it, so add it back) — raw values come from re-splitting it.
     """
-    parts = F.split(F.col(line_col), "\t", -1)
+    parts = F.split(F.col("line"), "\t", -1)
     aggs = []
     names = []
     if "tokens" in df.columns:
@@ -246,13 +243,9 @@ def malformed_stats(df: DataFrame, line_col: str = "line") -> dict[str, int]:
     return {n: int(row[i] or 0) for i, n in enumerate(names)}
 
 
-def decode_and_parse(
-    df: DataFrame,
-    field_order: list[str] | None = None,
-    strict: bool = False,
-) -> DataFrame:
-    """tokenized input (doc_id, tokens, n_tok, source) -> parsed log records:
-    the decode projection, then parse_cf_lines.
+def decode_and_parse(df: DataFrame, strict: bool = False) -> DataFrame:
+    """tokenized input (doc_id, tokens, n_tok, source) -> parsed log records
+    under the canonical header: the decode projection, then parse_cf_lines.
 
     Payload columns pass through untouched — per-row token-array equality is
     the pipeline invariant (BASELINE.json input_hint).
@@ -266,4 +259,4 @@ def decode_and_parse(
         )
     keep = [sql_ident(c) for c in df.columns if c != "line"]
     out = df.selectExpr(*keep, f"{decode_tokens_sql(tokens)} AS line")
-    return parse_cf_lines(out, "line", field_order, strict=strict)
+    return parse_cf_lines(out, strict=strict)

@@ -164,10 +164,6 @@ def _metric(m: dict) -> bytes:
         body += _varint_field(2, d["aggregationTemporality"])
         body += _bool_field(3, d.get("isMonotonic", False))
         out += _len_field(7, body)
-    elif "gauge" in m:
-        d = m["gauge"]
-        body = b"".join(_len_field(1, _number_dp(dp)) for dp in d["dataPoints"])
-        out += _len_field(5, body)
     elif "histogram" in m:
         d = m["histogram"]
         body = b"".join(_len_field(1, _histogram_dp(dp)) for dp in d["dataPoints"])

@@ -159,13 +159,13 @@ class PipelineResult:
 
             self._tables = {name: rows_of(f"p{i}") for name, i in self.metric_index.items()}
             if "stats" in t.column_names:
-                self._stats = _table_rows(rows_of("stats"))
+                self._stats = _table_rows(rows_of("stats"), int)
         return self._tables
 
     def source_stats(self) -> list[dict]:
-        """Per source: `source`, `rows`, `min_ts`/`max_ts` (as `collect()`
-        gives them) and, with a token column, `tokens`; collected with the
-        data points by `tables()`."""
+        """Per source: `source`, `rows`, `min_ts`/`max_ts` (Unix
+        microseconds) and, with a token column, `tokens`; collected with
+        the data points by `tables()`."""
         self.tables()
         if self._stats is None:
             raise ValueError(

@@ -170,7 +170,7 @@ def q_cf_count_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select(
         F.col("window_start"),
         F.element_at("attrs", 1).getField("value").alias("status_category"),
@@ -195,7 +195,7 @@ def q_cf_count_5xx(spark: SparkSession, sf_dir: str) -> DataFrame:
             "filter": {"expr": 'log.scStatusCategory == "5xx"'},
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select("window_start", F.col("value").alias("requests"))
 
 
@@ -218,7 +218,7 @@ def q_cf_sum_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_monotonic": True,
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select(
         "window_start",
         F.element_at("attrs", 1).getField("value").alias("status_category"),
@@ -248,7 +248,7 @@ def q_cf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "boundaries": _HIST_BOUNDS,
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     sel = [
         F.col("window_start"),
         F.col("count").alias("n"),
@@ -312,7 +312,7 @@ def q_cf_switch_origin(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select(
         "window_start",
         F.element_at("attrs", 1).getField("value").alias("origin"),
@@ -344,7 +344,7 @@ def q_cf_filter_host_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         }
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select(
         "window_start",
         F.element_at("attrs", 1).getField("value").alias("host"),
@@ -372,7 +372,7 @@ def q_cf_resource_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"key": "aws.cloudfront.distribution_id", "value": {"expr": "cloudfront.distributionId"}}
         ],
     )
-    sink = aggregate_metric(_parsed(spark, sf_dir), cfg, cfg.metrics[0])
+    sink = aggregate_metric(_parsed(spark, sf_dir), cfg)
     return sink.select(
         F.element_at("resource_attrs", 1).getField("value").alias("distribution_id"),
         "window_start",

@@ -48,6 +48,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A local session sized from the host, setting only the confs below;
+    `extra` confs are set last. The join, file-split and Arrow confs once
+    set here stay at Spark's defaults: over the 57 registry queries at
+    sf0.01 and sf0.1, none changes an AQE final plan (every join ends as a
+    broadcast), `preferSortMergeJoin=false` changes 3 static plans but no
+    timing outside noise, and the rest change no plan at all
+    (plans/r11/engine_confs.json, from scripts/engine_conf_plans.py)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     master = master or f"local[{cpus}]"
@@ -56,33 +63,17 @@ def get_spark(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        # one shuffle partition per task slot, not Spark's 200 tiny tasks
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # prefer shuffled-hash over sort-merge when the planner's size
-        # conditions hold, and let AQE rewrite SMJ->SHJ at runtime when
-        # every post-shuffle partition is under 128m (guide §3.1): the
-        # engine's joins are id/digest equi-joins whose sort adds nothing.
-        # Both knobs are size-gated, so a partition that would not fit a
-        # hash table still gets sort-merge. Measured: iterative CC
-        # (docs_dedup_clusters) 4.6s -> 1.9s warm at sf0.1 (each label-prop
-        # round drops two sorts); pack emit 2.4 -> 1.9.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m"
-        )
+        # CloudFront log times are UTC; so is every time the engine renders
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bigger Arrow batches = fewer JVM<->Python crossings; measured 2.2x
-        # on the token-decode UDF path (36.6s vs 79.7s per 2M rows)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.sql.files.maxPartitionBytes", "256m")
+        # a batch or per-object run has nobody to look at a web UI
         .config("spark.ui.enabled", "false")
         # local mode: the driver heap IS the executor heap; sized from the
         # host unless SPARK_DRIVER_MEMORY says otherwise
         .config("spark.driver.memory", driver_mem)
-        # preset the heap: growing from the default -Xms under a 32-thread
-        # allocation storm dominated the first full-scale run (measured on
-        # the flagship: cold 113.5 s -> 67.0 s, warm 13.1 s -> 8.3 s with
-        # -Xms14g). 3/4 of -Xmx, never above it.
+        # preset the heap at 3/4 of -Xmx: growing it under load dominated
+        # the first full-scale run (flagship cold 113.5 s -> 67.0 s)
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", _xms_for(driver_mem)),

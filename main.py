@@ -428,9 +428,20 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.time()
         if args.text_input:
             from cflog2otel_spark.operators.enrich import enrich
-            from cflog2otel_spark.sources.cf_text import read_cf_text
+            from cflog2otel_spark.sources.cf_text import object_files, read_cf_text
 
-            parsed = enrich(read_cf_text(spark, args.text_input, strict=args.strict))
+            # an invocation's object key names the --text-input file that
+            # holds its lines, which then carries the key as its source;
+            # with no key, every file is read
+            files = args.text_input
+            keys = {ctx["source"] for ctx in invocations} - {None}
+            if keys:
+                try:
+                    files = object_files(files, keys)
+                except ValueError as exc:
+                    print(str(exc), file=sys.stderr)
+                    return 2
+            parsed = enrich(read_cf_text(spark, files, strict=args.strict))
         else:
             from cflog2otel_spark.sources.tokenized import read_tokenized
 
@@ -499,6 +510,7 @@ def main(argv: list[str] | None = None) -> int:
                 n += export_otlp_http(
                     encode_otlp(res, cfg), endpoint,
                     gzip=bool(cfg.otel.get("gzip")),
+                    headers=cfg.otel.get("headers") or None,
                     encoding=args.otlp_encoding,
                 )
             print(jd({"exported": n}), file=sys.stderr)

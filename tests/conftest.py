@@ -192,7 +192,7 @@ def metric_windows(spark, epoch_us: list[int], interval: float) -> dict:
     parsed = spark.createDataFrame([(u,) for u in epoch_us], "us long").select(
         F.timestamp_micros("us").alias("timestamp")
     )
-    rows = aggregate_metric(parsed, cfg, cfg.metrics[0]).select(
+    rows = aggregate_metric(parsed, cfg).select(
         F.unix_micros("window_start").alias("start"),
         F.unix_micros("window_end").alias("end"),
         "value",

@@ -58,7 +58,7 @@ def _run_metric(spark, metric, rows):
     df = spark.createDataFrame(rows, ["timestamp", "time_taken", "x_edge_location"])
     df = df.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
     cfg = _mini_cfg(metric)
-    return aggregate_metric(df, cfg, cfg.metrics[0]).collect()
+    return aggregate_metric(df, cfg).collect()
 
 
 def test_histogram_bucket_rule_upper_exclusive(spark):

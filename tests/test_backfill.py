@@ -35,7 +35,7 @@ def test_backfill_e2e(spark):
     selected = backfill_select(
         parsed, SOURCE1, EVENT_TIME, cfg.backfill.time_tolerance_seconds, LAST_MODIFIED
     )
-    sink = aggregate_metric(selected, cfg, cfg.metrics[0])
+    sink = aggregate_metric(selected, cfg)
     rows = {
         (r["window_start"], r["attrs"][0]["value"]): r["value"]
         for r in sink.collect()

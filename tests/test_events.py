@@ -17,6 +17,7 @@ from cflog2otel_spark.sources.events import (
 from .conftest import (
     CF_LINES,
     CF_LINES2,
+    CF_LOG_TEXT,
     CONFIGS,
     REPO,
     S3_NOTIFICATION,
@@ -242,6 +243,46 @@ def test_cli_s3_url_scopes_and_matches_golden(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert _golden_points(proc.stdout) == GOLDEN_CONFIG1
+
+
+def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
+    """With --text-input, an S3 record's key names the file that holds its
+    lines (a path ending in `/<key>`): the run aggregates that file alone,
+    with the key as its object key, and a key that names no file exits 2
+    naming the key."""
+    import gzip
+    import os
+
+    header = "".join(CF_LOG_TEXT.splitlines(keepends=True)[:2])
+    texts = {SOURCE1: CF_LOG_TEXT, SOURCE2: header + "".join(f"{x}\n" for x in CF_LINES2)}
+    paths = []
+    for key, text in texts.items():
+        path = tmp_path / key
+        os.makedirs(path.parent, exist_ok=True)
+        path.write_bytes(gzip.compress(text.encode()))
+        paths.append(str(path))
+
+    def run(key: str) -> subprocess.CompletedProcess:
+        return subprocess.run(
+            [
+                sys.executable, "main.py",
+                "--config", f"{CONFIGS}/request_count_by_status_category.json",
+                "--text-input", *paths,
+                "--s3-url", f"s3://example-bucket/{key}",
+                "--golden-stdout",
+                "--master", "local[2]",
+            ],
+            cwd=REPO, capture_output=True, text=True, timeout=420,
+        )
+
+    proc = run(SOURCE1)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert _golden_points(proc.stdout) == GOLDEN_CONFIG1
+
+    missing = SOURCE1.replace("RT4", "RT9")
+    proc = run(missing)
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert repr(missing) in proc.stderr and proc.stdout == ""
 
 
 def test_env_to_flag_fallback(monkeypatch):

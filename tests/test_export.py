@@ -86,19 +86,26 @@ def test_export_posts_to_collector(spark, generated_df):
 
 def test_cli_export_otlp(spark, cf_fixture_df, tmp_path):
     """main.py --export-otlp posts every aggregated request to the
-    collector endpoint (config otel.gzip honored end-to-end)."""
+    collector endpoint (config otel.gzip and otel.headers honored
+    end-to-end)."""
     import subprocess
     import sys
 
     corpus_path = str(tmp_path / "corpus")
     cf_fixture_df.write.parquet(corpus_path)
+    with open(f"{CONFIGS}/multi_metrics.json") as fh:
+        doc = json.load(fh)  # otel.gzip: true
+    doc["otel"]["headers"] = {"X-Scope-OrgID": "tenant-a"}
+    config = str(tmp_path / "config.json")
+    with open(config, "w") as fh:
+        json.dump(doc, fh)
     srv, base = _serve()
     try:
         _Collector.received.clear()
         proc = subprocess.run(
             [
                 sys.executable, "main.py",
-                "--config", f"{CONFIGS}/multi_metrics.json",  # otel.gzip: true
+                "--config", config,
                 "--input", corpus_path,
                 "--export-otlp", base,
                 "--master", "local[2]",
@@ -110,6 +117,9 @@ def test_cli_export_otlp(spark, cf_fixture_df, tmp_path):
         path, headers, body = _Collector.received[0]
         assert path == "/v1/metrics"
         assert headers.get("Content-Encoding") == "gzip"
+        # urllib normalises the name's case; HTTP header names are
+        # case-insensitive
+        assert {k.lower(): v for k, v in headers.items()}["x-scope-orgid"] == "tenant-a"
         names = {
             m["name"]
             for m in body["resourceMetrics"][0]["scopeMetrics"][0]["metrics"]

@@ -6,18 +6,19 @@ from pyspark.sql import functions as F
 
 from cflog2otel_spark.config import Config
 from cflog2otel_spark.pipeline import run_pipeline
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CF_LOG, SOURCE1
+from .conftest import CF_LINES, SOURCE1
 
 BAD_SOURCE = "logs/not-a-cf-key.txt"  # no .gz, no dist.datehour.hash shape
 
 
 def _corpus(spark):
-    _, lines = read_cf_log_file(CF_LOG)
-    good = tokenized_df_from_lines(spark, lines, SOURCE1)
-    bad = tokenized_df_from_lines(spark, lines, BAD_SOURCE)
-    return good.union(bad), len(lines)
+    """SOURCE1's 6 FIXTURES.md §1 lines, and the same lines under a key
+    that does not parse."""
+    good = tokenized_df_from_lines(spark, CF_LINES, SOURCE1)
+    bad = tokenized_df_from_lines(spark, CF_LINES, BAD_SOURCE)
+    return good.union(bad), 6
 
 
 def _count_cfg(no_skip: bool = False) -> Config:
@@ -36,7 +37,7 @@ def test_bad_key_file_skipped_when_no_skip_false(spark):
     corpus, n_lines = _corpus(spark)
     result = run_pipeline(spark, _count_cfg(no_skip=False), corpus)
     total = result.sinks["requests"].agg(F.sum("value")).first()[0]
-    assert total == n_lines  # only SOURCE1's lines
+    assert total == n_lines  # only SOURCE1's 6 lines
 
 
 def test_bad_key_errors_when_no_skip_true(spark):
@@ -50,19 +51,17 @@ def test_bad_key_errors_when_no_skip_true(spark):
 
 def test_no_skip_true_clean_corpus_passes(spark):
     """The assert must be invisible when every key parses."""
-    _, lines = read_cf_log_file(CF_LOG)
-    corpus = tokenized_df_from_lines(spark, lines, SOURCE1)
+    corpus = tokenized_df_from_lines(spark, CF_LINES, SOURCE1)
     result = run_pipeline(spark, _count_cfg(no_skip=True), corpus)
     total = result.sinks["requests"].agg(F.sum("value")).first()[0]
-    assert total == len(lines)
+    assert total == 6
 
 
 def test_switch_value_zero_keeps_row_at_zero(spark):
     """A default-less switch in `value` (CELCapable[float64]) contributes
     0.0 for non-matching rows — the row still aggregates (count includes
     it, sum adds 0), unlike a NULL which Spark's sum/count(v) would skip."""
-    _, lines = read_cf_log_file(CF_LOG)
-    corpus = tokenized_df_from_lines(spark, lines, SOURCE1)
+    corpus = tokenized_df_from_lines(spark, CF_LINES, SOURCE1)
     cfg = Config.from_json(
         {
             "scope": {"name": "t"},
@@ -84,6 +83,6 @@ def test_switch_value_zero_keeps_row_at_zero(spark):
     )
     result = run_pipeline(spark, cfg, corpus)
     row = result.sinks["hist"].first()
-    assert row["count"] == len(lines)  # every row aggregated at 0.0
+    assert row["count"] == 6  # every row aggregated at 0.0
     assert row["sum"] == 0.0
-    assert row["bucket_counts"][0] == len(lines)  # all in (-inf, 0.5)
+    assert row["bucket_counts"][0] == 6  # all in (-inf, 0.5)

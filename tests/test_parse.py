@@ -116,7 +116,7 @@ def test_custom_field_order(spark):
     (cloudfront_std_log.go:287-324)."""
     df = spark.createDataFrame([("200\t9.5\tbogus",)], ["line"])
     out = parse_cf_lines(
-        df, "line", field_order=["sc-status", "time-taken", "mystery-field"]
+        df, field_order=["sc-status", "time-taken", "mystery-field"]
     ).collect()[0]
     assert out["sc_status"] == 200
     assert out["time_taken"] == 9.5

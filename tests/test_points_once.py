@@ -144,15 +144,16 @@ def test_one_run_starts_at_most_two_jobs(spark, tokenized, tmp_path):
 
     direct = enrich(decode_and_parse(tokenized), on_bad_key="skip").groupBy("source").agg(
         F.count(F.lit(1)).alias("rows"),
-        F.min("timestamp").alias("min_ts"),
-        F.max("timestamp").alias("max_ts"),
+        # in the session time zone, UTC, as the manifest writes them
+        F.date_format(F.min("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("min_ts"),
+        F.date_format(F.max("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("max_ts"),
         F.sum("n_tok").alias("tokens"),
     ).collect()
     assert len(direct) > 1
     assert manifest["sources"] == {
         r["source"]: {
-            "source": r["source"], "rows": r["rows"], "min_ts": str(r["min_ts"]),
-            "max_ts": str(r["max_ts"]), "tokens": r["tokens"], "status": "done",
+            "source": r["source"], "rows": r["rows"], "min_ts": r["min_ts"],
+            "max_ts": r["max_ts"], "tokens": r["tokens"], "status": "done",
         }
         for r in direct
     }
@@ -285,21 +286,29 @@ def test_overwrite_replaces_only_its_own_directory(spark, mixed, tmp_path):
     assert spark.read.parquet(d).count() == n
 
 
-def test_golden_and_otlp_times_do_not_depend_on_driver_tz(spark, tokenized, mixed):
+def test_golden_and_otlp_times_do_not_depend_on_driver_tz(spark, tokenized, mixed, tmp_path):
     """PySpark returns naive datetimes in the driver's local time; the
-    encoders read them as local time, so a non-UTC driver encodes the same
-    instants."""
+    golden and OTLP encoders and the run manifest's per-source times do not
+    read them, so a non-UTC driver writes the same instants."""
     cfg, res = mixed
-    want = encode_golden(res, cfg), encode_otlp(res, cfg)
+
+    def outputs(r, run_id: str) -> tuple:
+        m = _manifest(spark, r, str(tmp_path), run_id)
+        return encode_golden(r, cfg), encode_otlp(r, cfg), m["sources"], m["sink_rows"]
+
+    def first_window(r):
+        return min(p["window_start"] for p in r.points()[cfg.metrics[0].name])
+
+    want = outputs(res, "utc")
+    first = [first_window(res)]
     tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
     try:
         fresh = run_pipeline(spark, cfg, tokenized)
         try:
-            got = encode_golden(fresh, cfg), encode_otlp(fresh, cfg)
-            first = [min(r["window_start"] for r in x.points()[cfg.metrics[0].name])
-                     for x in (res, fresh)]
+            got = outputs(fresh, "new_york")
+            first.append(first_window(fresh))
         finally:
             fresh.unpersist()
     finally:
@@ -340,15 +349,16 @@ def test_validation_is_memoized_only_on_success(spark, monkeypatch):
 
 
 def test_aggregate_metric_reuses_the_config_validation(spark, tokenized, monkeypatch):
-    """aggregate_metric plans a metric of an already validated config with
-    no further validation, and its sink is that metric's share of the
-    all-metrics aggregation."""
+    """aggregate_metric plans an already validated one-metric config with
+    no further validation, its sink is the aggregation's `inline(p0)`, and
+    a config of more metrics is refused."""
     import cflog2otel_spark.celtrans as celtrans
     from cflog2otel_spark.operators.aggregate import aggregate_metric, aggregate_points
     from cflog2otel_spark.operators.enrich import enrich
     from cflog2otel_spark.operators.parse import decode_and_parse
 
-    cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
+    multi = Config.load(f"{CONFIGS}/multi_metrics.json")
+    cfg = Config.from_json({**multi.to_json(), "metrics": [multi.to_json()["metrics"][1]]})
     cfg.validate_expressions(spark)
     parsed = enrich(decode_and_parse(tokenized), on_bad_key="skip")
 
@@ -360,12 +370,14 @@ def test_aggregate_metric_reuses_the_config_validation(spark, tokenized, monkeyp
         return real(spark_, exprs)
 
     monkeypatch.setattr(celtrans, "validate_against_schema", counting)
-    sinks = [aggregate_metric(parsed, cfg, m) for m in (cfg.metrics[0], cfg.metrics[1], cfg.metrics[0])]
+    sinks = [aggregate_metric(parsed, cfg) for _ in range(3)]
     assert calls == []
 
-    want = sorted(map(repr, aggregate_points(parsed, cfg).selectExpr("inline(p1)").collect()))
+    want = sorted(map(repr, aggregate_points(parsed, multi).selectExpr("inline(p1)").collect()))
     assert want
     assert sorted(map(repr, sinks[1].collect())) == want
+    with pytest.raises(ValueError, match="one-metric config, got 2 metrics"):
+        aggregate_metric(parsed, multi)
 
 
 def test_config_attribute_types_match_per_list_probes(spark, tokenized):

@@ -4,9 +4,9 @@ joins (no fact-side shuffle)."""
 
 from pyspark.sql import functions as F
 
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CF_LOG, CF_LOG2, SOURCE1, SOURCE2
+from .conftest import CF_LINES, CF_LINES2, SOURCE1, SOURCE2
 
 
 def _plan(df) -> str:
@@ -18,10 +18,8 @@ def test_source_partitioned_layout_prunes(spark, tmp_path):
     for Iceberg (source, hours(ts)) partitioning — a backfill/resume
     source filter becomes a PartitionFilter: the scan never touches other
     sources' files."""
-    _, l1 = read_cf_log_file(CF_LOG)
-    _, l2 = read_cf_log_file(CF_LOG2)
-    corpus = tokenized_df_from_lines(spark, l1, SOURCE1).union(
-        tokenized_df_from_lines(spark, l2, SOURCE2)
+    corpus = tokenized_df_from_lines(spark, CF_LINES, SOURCE1).union(
+        tokenized_df_from_lines(spark, CF_LINES2, SOURCE2)
     )
     path = str(tmp_path / "part_corpus")
     corpus.write.partitionBy("source").parquet(path)

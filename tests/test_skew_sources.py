@@ -75,6 +75,22 @@ def test_read_cf_text_multi_header(spark, tmp_path):
     assert parsed.filter(F.col("source").contains("a.gz")).count() == 6
 
 
+def test_object_files_names_exactly_one_file():
+    """An object key names the input file equal to it or ending in
+    `/<key>`; a key naming none, or two, is refused."""
+    import pytest
+
+    from cflog2otel_spark.sources.cf_text import object_files
+
+    paths = [f"/in/a/{SOURCE1}", "/in/b/other.gz", SOURCE1.replace("RT4", "RT5")]
+    assert object_files(paths, {SOURCE1}) == {SOURCE1: paths[0]}
+    assert object_files(paths, {paths[2]}) == {paths[2]: paths[2]}
+    with pytest.raises(ValueError, match="names 0 of the input files"):
+        object_files(paths, {"other.gz/x"})
+    with pytest.raises(ValueError, match="names 2 of the input files"):
+        object_files([*paths, f"/in/c/{SOURCE1}"], {SOURCE1})
+
+
 def test_malformed_stats(spark):
     from cflog2otel_spark.operators.parse import decode_and_parse, malformed_stats
 

@@ -8,10 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from cflog2otel_spark.config import Config
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
 from .conftest import (
-    CF_LOG, CF_LOG2, CONFIGS, SOURCE1, SOURCE2, generated_lines, summed_points)
+    CF_LINES, CF_LINES2, CONFIGS, SOURCE1, SOURCE2, generated_lines, summed_points)
 
 
 def _four_metric_config() -> Config:
@@ -135,10 +135,8 @@ def test_lineage_manifest_and_resume(spark, tmp_path):
     from cflog2otel_spark.lineage import completed_sources, resume_filter, write_run_manifest
     from cflog2otel_spark.pipeline import run_pipeline
 
-    _, lines1 = read_cf_log_file(CF_LOG)
-    _, lines2 = read_cf_log_file(CF_LOG2)
-    corpus = tokenized_df_from_lines(spark, lines1, SOURCE1).union(
-        tokenized_df_from_lines(spark, lines2, SOURCE2)
+    corpus = tokenized_df_from_lines(spark, CF_LINES, SOURCE1).union(
+        tokenized_df_from_lines(spark, CF_LINES2, SOURCE2)
     )
     cfg = Config.load(f"{CONFIGS}/multi_metrics.json")
     mdir = str(tmp_path / "manifests")
