@@ -50,18 +50,9 @@ def sniff_header(path: str) -> list[str]:
     return []
 
 
-def read_cf_text(
-    spark: SparkSession, paths: list[str] | dict[str, str], strict: bool = False
-) -> DataFrame:
+def read_cf_text(spark: SparkSession, paths: list[str], strict: bool = False) -> DataFrame:
     """Parsed log records from raw CF log files, with a `source` column
-    feeding the same enrichment as the tokenized path: the file's URI or,
-    for `paths` given as {object key: file} (object_files), the key, as an
-    S3 object's rows carry it."""
-    if isinstance(paths, dict):
-        return reduce(DataFrame.unionByName, (
-            read_cf_text(spark, [path], strict).withColumn("source", F.lit(key))
-            for key, path in paths.items()
-        ))
+    (the file's URI) feeding the same enrichment as the tokenized path."""
     groups: dict[tuple, list[str]] = {}
     for p in paths:
         groups.setdefault(tuple(sniff_header(p)), []).append(p)

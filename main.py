@@ -427,21 +427,37 @@ def main(argv: list[str] | None = None) -> int:
             )
         t0 = time.time()
         if args.text_input:
+            from functools import reduce
+
+            from pyspark.sql import DataFrame
+            from pyspark.sql import functions as F
+
             from cflog2otel_spark.operators.enrich import enrich
             from cflog2otel_spark.sources.cf_text import object_files, read_cf_text
 
             # an invocation's object key names the --text-input file that
-            # holds its lines, which then carries the key as its source;
-            # with no key, every file is read
-            files = args.text_input
+            # holds its lines, which then carries the key as its source, as
+            # an S3 object's rows do; with no key, every file is read
             keys = {ctx["source"] for ctx in invocations} - {None}
             if keys:
                 try:
-                    files = object_files(files, keys)
+                    named = object_files(args.text_input, keys)
                 except ValueError as exc:
                     print(str(exc), file=sys.stderr)
                     return 2
-            parsed = enrich(read_cf_text(spark, files, strict=args.strict))
+                if manifest is not None and cfg.backfill.enabled:
+                    print(
+                        "--text-input reads only the trigger objects' files: "
+                        "manifest siblings are not read", file=sys.stderr,
+                    )
+                parsed = reduce(DataFrame.unionByName, (
+                    read_cf_text(spark, [path], strict=args.strict)
+                    .withColumn("source", F.lit(key))
+                    for key, path in named.items()
+                ))
+            else:
+                parsed = read_cf_text(spark, args.text_input, strict=args.strict)
+            parsed = enrich(parsed)
         else:
             from cflog2otel_spark.sources.tokenized import read_tokenized
 

@@ -16,15 +16,15 @@ status store. The summary names, per conf, scale factor and plan kind,
 the queries whose operators differ from `base`; a query that differs
 under `control` is listed as unstable and timed for no conf.
 
-Then, at one scale factor, one session times each conf against `base` on
-the queries whose plans it changes, and the Arrow batch size on the
-queries with a Python node (which it reaches without a plan change):
-build plus collect, pairs alternating which side runs first, with the
-host's CPU steal over each pair read from /proc/stat.
+Then, at the last (largest) scale factor given, one session times each
+conf against `base` on the queries whose plans it changes, and the Arrow
+batch size on the queries with a Python node (which it reaches without a
+plan change): build plus collect, MIN_PAIRS pairs alternating which side
+runs first, with the host's CPU steal over each pair read from /proc/stat.
 
 Usage:
   python scripts/engine_conf_plans.py --out plans/r11/engine_confs.json \
-      [--ab-sf sf0.1 --ab-reps 7] SF_DIR [SF_DIR ...]
+      SF_DIR [SF_DIR ...]
 """
 
 from __future__ import annotations
@@ -209,10 +209,10 @@ def _steal() -> tuple[int, int]:
     return (cpu[7] if len(cpu) > 7 else 0), sum(cpu)
 
 
-def ab(sf_dir: str, confs: dict[str, list[str]], reps: int) -> dict:
+def ab(sf_dir: str, confs: dict[str, list[str]]) -> dict:
     """Wall time to build and collect each query under `base` and under
-    its conf, `reps` pairs after one untimed run, alternating which side
-    runs first."""
+    its conf, MIN_PAIRS pairs after one untimed run, alternating which
+    side runs first."""
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     from cflog2otel_spark.plans.driver_queries import QUERIES
 
@@ -231,7 +231,7 @@ def ab(sf_dir: str, confs: dict[str, list[str]], reps: int) -> dict:
                 fn = QUERIES[name][0]
                 timed(fn)
                 pairs = []
-                for r in range(reps):
+                for r in range(MIN_PAIRS):
                     s0, t0 = _steal()
                     got = {}
                     for side in ("base", "conf") if r % 2 == 0 else ("conf", "base"):
@@ -243,7 +243,7 @@ def ab(sf_dir: str, confs: dict[str, list[str]], reps: int) -> dict:
                     pairs.append({"base_s": round(got["base"], 3),
                                   "conf_s": round(got["conf"], 3),
                                   "steal": round((s1 - s0) / max(1, t1 - t0), 4)})
-                res = {"pairs": pairs, **_summary(pairs)}
+                res = {"runs": pairs, **_summary(pairs)}
                 res["steal_gated"] = _summary([p for p in pairs if p["steal"] <= STEAL_GATE])
                 out.setdefault(label, {})[name] = res
                 print(f"[ab {label}] {name} {res['median_base_s']} -> {res['median_conf_s']}",
@@ -298,8 +298,6 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("sf_dirs", nargs="+")
     ap.add_argument("--out", default="plans/r11/engine_confs.json")
-    ap.add_argument("--ab-sf", default="sf0.1", help="scale factor of the timing A/B")
-    ap.add_argument("--ab-reps", type=int, default=7)
     ap.add_argument("--one", nargs=2, metavar=("SF_DIR", "VARIANT"), help=argparse.SUPPRESS)
     args = ap.parse_args()
     if args.one:
@@ -326,15 +324,16 @@ def main() -> int:
     # time each conf on the queries whose plans it changes, and the Arrow
     # batch size on the queries with a Python node, which it reaches
     # without a plan change
-    at = runs[args.ab_sf]
+    ab_sf = list(sf_dirs)[-1]
+    at = runs[ab_sf]
     reach = {
-        label: sorted({q for qs in changed[label][args.ab_sf].values() for q in qs} - set(unstable))
+        label: sorted({q for qs in changed[label][ab_sf].values() for q in qs} - set(unstable))
         for label in CONFS
     }
     reach["arrow.maxRecordsPerBatch=100000"] = sorted(
         q for q, r in at["base"].items() if r["final"]["python"]
     )
-    timing = ab(sf_dirs[args.ab_sf], {k: v for k, v in reach.items() if v}, args.ab_reps)
+    timing = ab(sf_dirs[ab_sf], {k: v for k, v in reach.items() if v})
 
     plans = {
         sf: {
@@ -355,8 +354,9 @@ def main() -> int:
     }
     mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     doc = {
-        "command": f"python scripts/engine_conf_plans.py --out {args.out} --ab-sf "
-        f"{args.ab_sf} --ab-reps {args.ab_reps} " + " ".join(f"<testdata>/{sf}" for sf in sf_dirs),
+        "command": f"python scripts/engine_conf_plans.py --out {args.out} "
+        + " ".join(f"<testdata>/{sf}" for sf in sf_dirs),
+        "ab_sf": ab_sf,
         "host": {"cpus": len(os.sched_getaffinity(0)), "memory_gib": round(mem_gib, 1),
                  "master": "local[4]", "spark": _spark_version()},
         "confs": {label: f"{k}={v}" for label, (k, v) in CONFS.items()},

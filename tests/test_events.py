@@ -249,7 +249,8 @@ def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
     """With --text-input, an S3 record's key names the file that holds its
     lines (a path ending in `/<key>`): the run aggregates that file alone,
     with the key as its object key, and a key that names no file exits 2
-    naming the key."""
+    naming the key. With backfill on, the manifest's siblings are not read
+    from --text-input, and stderr says so."""
     import gzip
     import os
 
@@ -262,15 +263,17 @@ def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
         path.write_bytes(gzip.compress(text.encode()))
         paths.append(str(path))
 
-    def run(key: str) -> subprocess.CompletedProcess:
+    def run(key: str, config: str = "request_count_by_status_category.json",
+            *extra: str) -> subprocess.CompletedProcess:
         return subprocess.run(
             [
                 sys.executable, "main.py",
-                "--config", f"{CONFIGS}/request_count_by_status_category.json",
+                "--config", f"{CONFIGS}/{config}",
                 "--text-input", *paths,
                 "--s3-url", f"s3://example-bucket/{key}",
                 "--golden-stdout",
                 "--master", "local[2]",
+                *extra,
             ],
             cwd=REPO, capture_output=True, text=True, timeout=420,
         )
@@ -283,6 +286,12 @@ def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
     proc = run(missing)
     assert proc.returncode == 2, proc.stderr[-2000:]
     assert repr(missing) in proc.stderr and proc.stdout == ""
+
+    manifest = tmp_path / "manifest.json"
+    manifest.write_text(json.dumps({SOURCE2: "2019-12-01 22:40:00"}))
+    proc = run(SOURCE1, "backfil_config.json", "--manifest", str(manifest))
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "manifest siblings are not read" in proc.stderr
 
 
 def test_env_to_flag_fallback(monkeypatch):
