@@ -74,12 +74,13 @@ def read_cf_text(spark: SparkSession, paths: list[str], strict: bool = False) ->
 
 def object_files(paths: list[str], keys) -> dict[str, str]:
     """Object key -> the one of `paths` it names: the path equals the key
-    or ends with `/<key>`. A key that names no path, or more than one, is
-    an error."""
+    or ends with `/<key>`. A key that names no path is left out; a key
+    that names several is an error."""
     out = {}
     for key in sorted(keys):
         named = [p for p in paths if p == key or p.endswith(f"/{key}")]
-        if len(named) != 1:
+        if len(named) > 1:
             raise ValueError(f"object key {key!r} names {len(named)} of the input files: {named}")
-        out[key] = named[0]
+        if named:
+            out[key] = named[0]
     return out

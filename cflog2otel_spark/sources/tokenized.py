@@ -59,25 +59,6 @@ def tokenized_df_from_lines(
     )
 
 
-def read_cf_log_file(path: str) -> tuple[list[str], list[str]]:
-    """Read a CloudFront standard-log text file (driver-side, small files):
-    returns (field_order from the #Fields: directive, data lines).
-    Mirrors /root/reference/cloudfront_std_log.go:287-303.
-    """
-    fields: list[str] = []
-    lines: list[str] = []
-    with open(path) as fh:
-        for raw in fh.read().split("\n"):
-            if not raw:
-                continue
-            if raw.startswith("#"):
-                if raw.startswith("#Fields:"):
-                    fields = raw[len("#Fields:") :].strip().split(" ")
-                continue
-            lines.append(raw)
-    return fields, lines
-
-
 def verify_token_passthrough(parsed: DataFrame, original: DataFrame) -> int:
     """Join back on doc_id and count rows whose token arrays differ.
     Must be 0 — the payload invariant (BASELINE.json input_hint).

@@ -2,13 +2,15 @@
 
   spark-submit --py-files cflog2otel_spark.zip main.py \
       --config configs/multi_metrics.json \
-      --input /data/tokenized_corpus \
+      (--input /data/tokenized_corpus | --text-input FILE...) \
       --out /data/sinks \
       [--format parquet|json] [--strict] [--golden-stdout] \
       [--s3-event event.json | --s3-url s3://bucket/key |
        --trigger-source KEY [--event-time 2019-12-01T22:56:00Z]] \
       [--manifest listing.json | --backfill-auto-manifest DIR] \
-      [--config-validate-only] [--render-config] [--local-collector]
+      [--checkpoint-dir DIR [--resume]] \
+      [--export-otlp [URL] [--otlp-encoding json|protobuf]] \
+      [--stream] [--config-validate-only] [--render-config] [--local-collector]
 
 Each S3 record of --s3-event/--s3-url is one invocation, scoped to its
 object; --trigger-source/--event-time is a one-record invocation; with
@@ -16,6 +18,10 @@ neither, the whole input is one. With backfill on, an invocation that has
 a manifest and an event time also reads the trigger's gated siblings, and
 the whole input is line-gated by --event-time
 (cflog2otel_spark/operators/backfill.py).
+
+Usage errors exit 2 before Spark starts. Each invocation then runs to
+the end: sinks (under record_<i>/ for a several-record event), golden
+stdout, OTLP export and, last, its --checkpoint-dir manifest.
 
 Mirrors the reference CLI surface (/root/reference/cmd/cflog2otel/main.go:43-51):
   --config-validate-only ≈ -config-validate-only
@@ -344,6 +350,14 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(cfg.to_json(), indent=2))
         return 0
 
+    plan = None
+    if not args.config_validate_only:
+        try:
+            plan = _plan(args, cfg)
+        except ValueError as exc:
+            print(str(exc), file=sys.stderr)
+            return 2
+
     spark = get_spark(master=args.master, app_name="cflog2otel")
     spark.sparkContext.setLogLevel(log_level)
     try:
@@ -355,23 +369,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.config_validate_only:
             print("config is valid")
             return 0
-        if not args.input and not args.text_input:
-            print(
-                "--input or --text-input is required unless --config-validate-only",
-                file=sys.stderr,
-            )
-            return 2
-
-        from cflog2otel_spark.pipeline import (
-            parse_and_enrich, run_pipeline_parsed, write_sinks)
 
         if args.stream:
-            if not (args.input and args.out and args.checkpoint_dir):
-                print(
-                    "--stream requires --input, --out and --checkpoint-dir",
-                    file=sys.stderr,
-                )
-                return 2
             from cflog2otel_spark.streaming.stream import run_streaming_pipeline
 
             t0 = time.time()
@@ -390,170 +389,169 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
 
-        from cflog2otel_spark.operators.backfill import invocation_rows, manifest_from_listing
-        from cflog2otel_spark.operators.enrich import with_event_context
-
-        # one invocation per S3 record (app.go:179-203), a --trigger-source
-        # object as a one-record invocation, else the whole input as one
-        if args.s3_event or args.s3_url:
-            from cflog2otel_spark.sources.events import (
-                collect_s3_records, dummy_s3_notification, s3_record_context)
-
-            if args.s3_event:
-                with open(args.s3_event) as fh:
-                    event_json = fh.read()
-            else:
-                try:
-                    event_json = dummy_s3_notification(args.s3_url)
-                except ValueError as exc:
-                    print(str(exc), file=sys.stderr)
-                    return 2
-            invocations = [s3_record_context(r) for r in collect_s3_records(event_json)]
-            if not invocations:
-                print("no s3 notifications, skipping", file=sys.stderr)
-                return 0
-        else:
-            invocations = [{"source": args.trigger_source, "event_time": args.event_time}]
-        manifest = None
-        if args.manifest:
-            with open(args.manifest) as fh:
-                manifest = json.load(fh)
-        elif args.backfill_auto_manifest:
-            manifest = manifest_from_listing(args.backfill_auto_manifest)
-        elif cfg.backfill.enabled and invocations[0]["source"] is not None:
-            print(
-                "backfill enabled but no --manifest: sibling discovery "
-                "skipped, processing the trigger object only", file=sys.stderr,
-            )
-        t0 = time.time()
-        if args.text_input:
-            from functools import reduce
-
-            from pyspark.sql import DataFrame
-            from pyspark.sql import functions as F
-
-            from cflog2otel_spark.operators.enrich import enrich
-            from cflog2otel_spark.sources.cf_text import object_files, read_cf_text
-
-            # an invocation's object key names the --text-input file that
-            # holds its lines, which then carries the key as its source, as
-            # an S3 object's rows do; with no key, every file is read
-            keys = {ctx["source"] for ctx in invocations} - {None}
-            if keys:
-                try:
-                    named = object_files(args.text_input, keys)
-                except ValueError as exc:
-                    print(str(exc), file=sys.stderr)
-                    return 2
-                if manifest is not None and cfg.backfill.enabled:
-                    print(
-                        "--text-input reads only the trigger objects' files: "
-                        "manifest siblings are not read", file=sys.stderr,
-                    )
-                parsed = reduce(DataFrame.unionByName, (
-                    read_cf_text(spark, [path], strict=args.strict)
-                    .withColumn("source", F.lit(key))
-                    for key, path in named.items()
-                ))
-            else:
-                parsed = read_cf_text(spark, args.text_input, strict=args.strict)
-            parsed = enrich(parsed)
-        else:
-            from cflog2otel_spark.sources.tokenized import read_tokenized
-
-            parsed = parse_and_enrich(
-                read_tokenized(spark, args.input), cfg, strict=args.strict
-            )
-        if args.resume:
-            if not args.checkpoint_dir:
-                print("--resume requires --checkpoint-dir", file=sys.stderr)
-                return 2
-            from cflog2otel_spark.lineage import resume_filter
-
-            parsed = resume_filter(parsed, args.checkpoint_dir)
-
-        results = [
-            run_pipeline_parsed(spark, cfg, invocation_rows(
-                with_event_context(parsed, ctx), cfg.backfill,
-                ctx["source"], ctx["event_time"], manifest,
-            ))
-            for ctx in invocations
-        ]
-        n_rows = None
-        if args.checkpoint_dir:
-            from cflog2otel_spark.lineage import write_run_manifest
-
-            # one manifest per result (= per S3 record): a multi-record
-            # event must mark EVERY record's source done, or --resume would
-            # re-process record 2+ (VERDICT r3 #3). The wall time is shared
-            # across records, so per-record throughput is only recorded for
-            # the common single-record case.
-            n_rows = 0
-            for res in results:
-                n_rows += write_run_manifest(
-                    spark,
-                    res,
-                    args.checkpoint_dir,
-                    input_path=args.input,
-                    elapsed_sec=(time.time() - t0) if len(results) == 1 else None,
-                )
-        if args.out:
-            # one invocation per S3 record (reference exports per
-            # notification); sinks get an index suffix when there are many
-            for i, res in enumerate(results):
-                out = args.out if len(results) == 1 else f"{args.out}/record_{i}"
-                write_sinks(res, out, fmt=args.format)
-        if args.golden_stdout:
-            from cflog2otel_spark.golden import encode_golden
-
-            for res in results:
-                for tree in encode_golden(res, cfg):
-                    print(json.dumps(tree, indent=2))
-        if args.export_otlp:
-            from cflog2otel_spark.export import export_otlp_http
-            from cflog2otel_spark.golden import encode_otlp
-
-            endpoint = (
-                cfg.otel.get("endpoint")
-                if args.export_otlp == "__config__"
-                else args.export_otlp
-            )
-            if not endpoint:
-                print("no OTLP endpoint configured", file=sys.stderr)
-                return 2
-            n = 0
-            for res in results:
-                n += export_otlp_http(
-                    encode_otlp(res, cfg), endpoint,
-                    gzip=bool(cfg.otel.get("gzip")),
-                    headers=cfg.otel.get("headers") or None,
-                    encoding=args.otlp_encoding,
-                )
-            print(jd({"exported": n}), file=sys.stderr)
-        if args.export_otlp_grpc:
-            from cflog2otel_spark.export import export_otlp_grpc
-            from cflog2otel_spark.golden import encode_otlp
-
-            n = 0
-            for res in results:
-                n += export_otlp_grpc(
-                    encode_otlp(res, cfg), args.export_otlp_grpc,
-                    headers=cfg.otel.get("headers") or None,
-                )
-            print(jd({"exported_grpc": n}), file=sys.stderr)
-        dt = time.time() - t0
-        stats = {"elapsed_sec": round(dt, 3)}
-        if n_rows is not None:
-            stats.update({"rows": n_rows, "seq_per_sec": round(n_rows / dt, 1)})
-        # spark-submit's PythonRunner can merge the child's stderr into
-        # stdout; keep --golden-stdout output pure JSON by skipping stats
-        if not args.golden_stdout:
-            print(jd({"run": stats}), file=sys.stderr)
-        for res in results:
-            res.unpersist()
+        _run(spark, cfg, args, plan, jd)
         return 0
     finally:
         spark.stop()
+
+
+def _plan(args: argparse.Namespace, cfg):
+    """The part of a cf run that needs no Spark: every usage check, then
+    (invocations, manifest, files, OTLP/HTTP endpoint). An invocation is
+    one S3 record of --s3-event/--s3-url, the --trigger-source object, or
+    else the whole input; `files` maps each object key read to its
+    --text-input file (None: read every file). Raises ValueError, with the
+    message to print, for flags a run cannot use."""
+    if not args.input and not args.text_input:
+        raise ValueError("--input or --text-input is required unless --config-validate-only")
+    if args.stream:
+        if not (args.input and args.out and args.checkpoint_dir):
+            raise ValueError("--stream requires --input, --out and --checkpoint-dir")
+        return None
+    if args.resume and not args.checkpoint_dir:
+        raise ValueError("--resume requires --checkpoint-dir")
+    endpoint = args.export_otlp
+    if endpoint == "__config__":
+        endpoint = cfg.otel.get("endpoint")
+        if not endpoint:
+            raise ValueError("no OTLP endpoint configured")
+    from cflog2otel_spark.export import GRPC_AVAILABLE
+
+    if args.export_otlp_grpc and not GRPC_AVAILABLE:
+        raise ValueError("--export-otlp-grpc needs the grpc package; try --otlp-encoding protobuf")
+
+    if args.s3_event or args.s3_url:
+        from cflog2otel_spark.sources.events import (
+            collect_s3_records, dummy_s3_notification, s3_record_context)
+
+        if args.s3_event:
+            with open(args.s3_event) as fh:
+                event_json = fh.read()
+        else:
+            event_json = dummy_s3_notification(args.s3_url)
+        invocations = [s3_record_context(r) for r in collect_s3_records(event_json)]
+    else:
+        invocations = [{"source": args.trigger_source, "event_time": args.event_time}]
+    triggers = {ctx["source"] for ctx in invocations} - {None}
+
+    manifest = None
+    if args.manifest:
+        with open(args.manifest) as fh:
+            manifest = json.load(fh)
+    elif args.backfill_auto_manifest:
+        from cflog2otel_spark.operators.backfill import manifest_from_listing
+
+        manifest = manifest_from_listing(args.backfill_auto_manifest)
+    elif cfg.backfill.enabled and triggers:
+        print(
+            "backfill enabled but no --manifest: sibling discovery "
+            "skipped, processing the trigger object only", file=sys.stderr,
+        )
+
+    # an object key names the --text-input file that holds its lines, as
+    # an S3 key names its object; with backfill on, the manifest's keys
+    # name the siblings the gate may read
+    files = None
+    if args.text_input and triggers:
+        from cflog2otel_spark.sources.cf_text import object_files
+
+        keys = triggers | set(manifest or ()) if cfg.backfill.enabled else triggers
+        files = object_files(args.text_input, keys)
+        missing = sorted(triggers - files.keys())
+        if missing:
+            raise ValueError(f"object key {missing[0]!r} names none of the input files")
+    return invocations, manifest, files, endpoint
+
+
+def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> None:
+    """Run each invocation of `plan` to the end before the next: its rows,
+    the one aggregation, sinks, golden stdout, OTLP/HTTP, gRPC and, once
+    those are out, the lineage manifest that marks its sources done. Only
+    one invocation's data points are held at a time."""
+    from cflog2otel_spark.golden import encode_golden, encode_otlp
+    from cflog2otel_spark.lineage import resume_filter, write_run_manifest
+    from cflog2otel_spark.operators.backfill import invocation_rows
+    from cflog2otel_spark.operators.enrich import enrich, with_event_context
+    from cflog2otel_spark.pipeline import parse_and_enrich, run_pipeline_parsed, write_sinks
+
+    invocations, manifest, files, endpoint = plan
+    if not invocations:
+        print("no s3 notifications, skipping", file=sys.stderr)
+        return
+    t0 = time.time()
+    if args.text_input:
+        from functools import reduce
+
+        from pyspark.sql import DataFrame
+        from pyspark.sql import functions as F
+
+        from cflog2otel_spark.sources.cf_text import read_cf_text
+
+        if files is None:
+            parsed = read_cf_text(spark, args.text_input, strict=args.strict)
+        else:
+            # a named file's rows carry its object key as their source, as
+            # an S3 object's rows do
+            parsed = reduce(DataFrame.unionByName, (
+                read_cf_text(spark, [path], strict=args.strict).withColumn("source", F.lit(key))
+                for key, path in files.items()
+            ))
+        parsed = enrich(parsed)
+    else:
+        from cflog2otel_spark.sources.tokenized import read_tokenized
+
+        parsed = parse_and_enrich(read_tokenized(spark, args.input), cfg, strict=args.strict)
+    if args.resume:
+        parsed = resume_filter(parsed, args.checkpoint_dir)
+
+    n_rows = 0
+    for i, ctx in enumerate(invocations):
+        t_inv = time.time()
+        res = run_pipeline_parsed(spark, cfg, invocation_rows(
+            with_event_context(parsed, ctx), cfg.backfill,
+            ctx["source"], ctx["event_time"], manifest,
+        ))
+        if args.out:
+            # the reference exports per notification; several records get
+            # one sink directory each
+            out = args.out if len(invocations) == 1 else f"{args.out}/record_{i}"
+            write_sinks(res, out, fmt=args.format)
+        if args.golden_stdout:
+            for tree in encode_golden(res, cfg):
+                print(json.dumps(tree, indent=2))
+        if endpoint:
+            from cflog2otel_spark.export import export_otlp_http
+
+            n = export_otlp_http(
+                encode_otlp(res, cfg), endpoint,
+                gzip=bool(cfg.otel.get("gzip")),
+                headers=cfg.otel.get("headers") or None,
+                encoding=args.otlp_encoding,
+            )
+            print(jd({"exported": n}), file=sys.stderr)
+        if args.export_otlp_grpc:
+            from cflog2otel_spark.export import export_otlp_grpc
+
+            n = export_otlp_grpc(
+                encode_otlp(res, cfg), args.export_otlp_grpc,
+                headers=cfg.otel.get("headers") or None,
+            )
+            print(jd({"exported_grpc": n}), file=sys.stderr)
+        if args.checkpoint_dir:
+            n_rows += write_run_manifest(
+                spark, res, args.checkpoint_dir, input_path=args.input,
+                elapsed_sec=time.time() - t_inv,
+            )
+        res.unpersist()
+
+    dt = time.time() - t0
+    stats = {"elapsed_sec": round(dt, 3)}
+    if args.checkpoint_dir:
+        stats.update({"rows": n_rows, "seq_per_sec": round(n_rows / dt, 1)})
+    # spark-submit's PythonRunner can merge the child's stderr into
+    # stdout; keep --golden-stdout output pure JSON by skipping stats
+    if not args.golden_stdout:
+        print(jd({"run": stats}), file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -11,8 +11,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REFERENCE = "/root/reference"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-CF_LOG = f"{REFERENCE}/testdata/cf_log.txt"
-CF_LOG2 = f"{REFERENCE}/testdata/cf_log2.txt"
 FIXTURES = f"{REFERENCE}/testdata/fixtures"
 CONFIGS = f"{REPO}/configs"
 

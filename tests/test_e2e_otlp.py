@@ -1,20 +1,25 @@
-"""E2E OTLP-proto golden parity — mirrors /root/reference/app_test.go:26-68
+"""E2E OTLP-proto golden parity — mirrors the reference's app_test.go:26-68
 (e2e) and :70-150 (e2e_backfill): the full invocation path rendered as the
-OTLP ExportMetricsServiceRequest JSON the reference's collector snapshots."""
+OTLP ExportMetricsServiceRequest JSON the reference's collector snapshots.
+The goldens under tests/fixtures/ are written by hand from the FIXTURES.md
+§4/§5 data points and the two configs, not by the encoder under test."""
 
 import json
+import os
 
 from cflog2otel_spark.config import Config
 from cflog2otel_spark.golden import canonicalize_otlp, encode_otlp
 from cflog2otel_spark.operators.backfill import backfill_select
 from cflog2otel_spark.pipeline import run_pipeline, run_pipeline_parsed
-from cflog2otel_spark.sources.tokenized import read_cf_log_file, tokenized_df_from_lines
+from cflog2otel_spark.sources.tokenized import tokenized_df_from_lines
 
-from .conftest import CF_LOG, CF_LOG2, CONFIGS, FIXTURES, SOURCE1, SOURCE2
+from .conftest import CF_LINES, CF_LINES2, CONFIGS, SOURCE1, SOURCE2
+
+GOLDENS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 def _load(name):
-    with open(f"{FIXTURES}/{name}.golden.json") as fh:
+    with open(f"{GOLDENS}/{name}.golden.json") as fh:
         return canonicalize_otlp(json.load(fh))
 
 
@@ -27,15 +32,11 @@ def test_e2e_otlp_golden(spark, cf_fixture_df):
 
 
 def test_e2e_backfill_otlp_golden(spark):
-    from pyspark.sql import functions as F
-
     from cflog2otel_spark.operators.enrich import enrich
     from cflog2otel_spark.operators.parse import decode_and_parse
 
-    _, lines1 = read_cf_log_file(CF_LOG)
-    _, lines2 = read_cf_log_file(CF_LOG2)
-    corpus = tokenized_df_from_lines(spark, lines1, SOURCE1).union(
-        tokenized_df_from_lines(spark, lines2, SOURCE2)
+    corpus = tokenized_df_from_lines(spark, CF_LINES, SOURCE1).union(
+        tokenized_df_from_lines(spark, CF_LINES2, SOURCE2)
     )
     cfg = Config.load(f"{CONFIGS}/backfil_config.json")
     parsed = enrich(decode_and_parse(corpus))

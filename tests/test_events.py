@@ -20,6 +20,7 @@ from .conftest import (
     CF_LOG_TEXT,
     CONFIGS,
     REPO,
+    RT2,
     S3_NOTIFICATION,
     SOURCE1,
     SOURCE2,
@@ -195,6 +196,9 @@ def test_cli_multi_record_event_writes_per_record_sinks(spark, tmp_path):
 
     assert completed_sources(str(ckpt)) == {SOURCE1, SOURCE2}
     assert resume_filter(spark.read.parquet(corpus_path), str(ckpt)).count() == 0
+    # each record's manifest records its own invocation's throughput
+    manifests = [json.loads(p.read_text()) for p in ckpt.glob("manifest_*.json")]
+    assert [m["throughput"]["rows"] for m in manifests] == [6, 6]
 
 
 def test_dummy_s3_notification_shape():
@@ -249,8 +253,9 @@ def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
     """With --text-input, an S3 record's key names the file that holds its
     lines (a path ending in `/<key>`): the run aggregates that file alone,
     with the key as its object key, and a key that names no file exits 2
-    naming the key. With backfill on, the manifest's siblings are not read
-    from --text-input, and stderr says so."""
+    naming the key. With backfill on and a manifest, the manifest's keys
+    name the siblings' files too; one with no file (RT2) is not read, and
+    the gates give the FIXTURES.md §5 data points."""
     import gzip
     import os
 
@@ -263,35 +268,45 @@ def test_cli_text_input_trigger_reads_the_file_its_key_names(tmp_path):
         path.write_bytes(gzip.compress(text.encode()))
         paths.append(str(path))
 
-    def run(key: str, config: str = "request_count_by_status_category.json",
-            *extra: str) -> subprocess.CompletedProcess:
+    def run(config: str, *trigger: str) -> subprocess.CompletedProcess:
         return subprocess.run(
             [
                 sys.executable, "main.py",
                 "--config", f"{CONFIGS}/{config}",
                 "--text-input", *paths,
-                "--s3-url", f"s3://example-bucket/{key}",
+                *trigger,
                 "--golden-stdout",
                 "--master", "local[2]",
-                *extra,
             ],
             cwd=REPO, capture_output=True, text=True, timeout=420,
         )
 
-    proc = run(SOURCE1)
+    config1 = "request_count_by_status_category.json"
+    proc = run(config1, "--s3-url", f"s3://example-bucket/{SOURCE1}")
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert _golden_points(proc.stdout) == GOLDEN_CONFIG1
 
     missing = SOURCE1.replace("RT4", "RT9")
-    proc = run(missing)
+    proc = run(config1, "--s3-url", f"s3://example-bucket/{missing}")
     assert proc.returncode == 2, proc.stderr[-2000:]
     assert repr(missing) in proc.stderr and proc.stdout == ""
 
     manifest = tmp_path / "manifest.json"
-    manifest.write_text(json.dumps({SOURCE2: "2019-12-01 22:40:00"}))
-    proc = run(SOURCE1, "backfil_config.json", "--manifest", str(manifest))
+    manifest.write_text(json.dumps({
+        RT2: "2019-12-01 22:05:00",
+        SOURCE2: "2019-12-01 22:40:00",
+        SOURCE1: "2019-12-01 22:52:00",
+    }))
+    proc = run(
+        "backfil_config.json", "--trigger-source", SOURCE1,
+        "--event-time", "2019-12-01 22:56:00", "--manifest", str(manifest),
+    )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "manifest siblings are not read" in proc.stderr
+    assert _golden_points(proc.stdout)[2] == {
+        ("2019-12-01T22:39:00Z", "4xx"): 3,
+        ("2019-12-01T22:42:00Z", "2xx"): 3,
+        ("2019-12-01T22:51:00Z", "5xx"): 3,
+    }
 
 
 def test_env_to_flag_fallback(monkeypatch):
