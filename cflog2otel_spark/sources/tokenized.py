@@ -2,26 +2,24 @@
 
 The production input is an Iceberg table with columns
 (doc_id:string, tokens:array<int32>, n_tok:int32, source:string)
-(BASELINE.json input_hint). `read_tokenized` falls through format options:
-iceberg -> parquet path. Where no `iceberg` data source is on the
-classpath, a session finds that out on its first read and reads parquet
-directly from then on: the failed lookup costs a small object's read
-several times over. The payload invariant — per-row token-array equality
-end-to-end — is enforced by tests and `verify_token_passthrough`.
+(BASELINE.json input_hint). `read_tokenized` reads a path as Iceberg when
+the session's JVM can load the Iceberg source class, and as parquet
+otherwise. It asks the class loader rather than letting
+`format("iceberg")` fail: Spark looks an unknown format up in a Python
+data-source worker it spawns for the rest of the session, which made a
+fresh session's first read ~1.8 s slower. The payload invariant —
+per-row token-array equality end-to-end — is enforced by tests and
+`verify_token_passthrough`.
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import tokenized_input_schema
 
-
-# the sessions in which the `iceberg` data source did not resolve
-_WITHOUT_ICEBERG: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+_ICEBERG_SOURCE = "org.apache.iceberg.spark.source.IcebergSource"
 
 
 def read_tokenized(spark: SparkSession, path_or_table: str) -> DataFrame:
@@ -30,12 +28,11 @@ def read_tokenized(spark: SparkSession, path_or_table: str) -> DataFrame:
     """
     if "/" not in path_or_table:
         return spark.table(path_or_table)
-    if spark not in _WITHOUT_ICEBERG:
+    if spark.sparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(_ICEBERG_SOURCE):
         try:
             return spark.read.format("iceberg").load(path_or_table)
-        except Exception as exc:  # not an Iceberg table: read it as parquet
-            if "DATA_SOURCE_NOT_FOUND" in str(exc):
-                _WITHOUT_ICEBERG.add(spark)
+        except Exception:  # not an Iceberg table: read it as parquet
+            pass
     return spark.read.schema(tokenized_input_schema()).parquet(path_or_table)
 
 

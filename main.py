@@ -389,8 +389,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
 
-        _run(spark, cfg, args, plan, jd)
-        return 0
+        return _run(spark, cfg, args, plan, jd)
     finally:
         spark.stop()
 
@@ -463,11 +462,12 @@ def _plan(args: argparse.Namespace, cfg):
     return invocations, manifest, files, endpoint
 
 
-def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> None:
+def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> int:
     """Run each invocation of `plan` to the end before the next: its rows,
     the one aggregation, sinks, golden stdout, OTLP/HTTP, gRPC and, once
     those are out, the lineage manifest that marks its sources done. Only
-    one invocation's data points are held at a time."""
+    one invocation's data points are held at a time. A failed export
+    stops the run with exit code 1, its sources not done."""
     from cflog2otel_spark.golden import encode_golden, encode_otlp
     from cflog2otel_spark.lineage import resume_filter, write_run_manifest
     from cflog2otel_spark.operators.backfill import invocation_rows
@@ -477,7 +477,7 @@ def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> None:
     invocations, manifest, files, endpoint = plan
     if not invocations:
         print("no s3 notifications, skipping", file=sys.stderr)
-        return
+        return 0
     t0 = time.time()
     if args.text_input:
         from functools import reduce
@@ -519,24 +519,24 @@ def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> None:
         if args.golden_stdout:
             for tree in encode_golden(res, cfg):
                 print(json.dumps(tree, indent=2))
-        if endpoint:
-            from cflog2otel_spark.export import export_otlp_http
+        if endpoint or args.export_otlp_grpc:
+            from cflog2otel_spark.export import export_otlp_grpc, export_otlp_http
 
-            n = export_otlp_http(
-                encode_otlp(res, cfg), endpoint,
-                gzip=bool(cfg.otel.get("gzip")),
-                headers=cfg.otel.get("headers") or None,
-                encoding=args.otlp_encoding,
-            )
-            print(jd({"exported": n}), file=sys.stderr)
-        if args.export_otlp_grpc:
-            from cflog2otel_spark.export import export_otlp_grpc
-
-            n = export_otlp_grpc(
-                encode_otlp(res, cfg), args.export_otlp_grpc,
-                headers=cfg.otel.get("headers") or None,
-            )
-            print(jd({"exported_grpc": n}), file=sys.stderr)
+            reqs, headers = encode_otlp(res, cfg), cfg.otel.get("headers") or None
+            target = endpoint
+            try:
+                if endpoint:
+                    n = export_otlp_http(reqs, endpoint, gzip=bool(cfg.otel.get("gzip")),
+                                         headers=headers, encoding=args.otlp_encoding)
+                    print(jd({"exported": n}), file=sys.stderr)
+                if args.export_otlp_grpc:
+                    target = args.export_otlp_grpc
+                    n = export_otlp_grpc(reqs, target, headers=headers)
+                    print(jd({"exported_grpc": n}), file=sys.stderr)
+            except Exception as exc:  # the collector's, not the run's: one line
+                what = ctx["source"] or " ".join(args.text_input or [args.input])
+                print(f"OTLP export of {what} to {target} failed: {exc}", file=sys.stderr)
+                return 1
         if args.checkpoint_dir:
             n_rows += write_run_manifest(
                 spark, res, args.checkpoint_dir, input_path=args.input,
@@ -552,6 +552,7 @@ def _run(spark, cfg, args: argparse.Namespace, plan, jd) -> None:
     # stdout; keep --golden-stdout output pure JSON by skipping stats
     if not args.golden_stdout:
         print(jd({"run": stats}), file=sys.stderr)
+    return 0
 
 
 if __name__ == "__main__":

@@ -13,8 +13,10 @@ Python evaluation nodes (rows they received). For the queries a builder
 runs eagerly (iterative rounds, localCheckpoints, cached inputs) it keeps
 the join operators of their static and final plans, read from the SQL
 status store. The summary names, per conf, scale factor and plan kind,
-the queries whose operators differ from `base`; a query that differs
-under `control` is listed as unstable and timed for no conf.
+the queries whose operators differ from both `base` and `control`: a
+plan that one of the two plain sessions also shows is session noise,
+not the conf's doing. A query that differs between `base` and `control`
+is listed as unstable and timed for no conf.
 
 Then, at the last (largest) scale factor given, one session times each
 conf against `base` on the queries whose plans it changes, and the Arrow
@@ -287,9 +289,11 @@ KINDS = ("static", "final", "eager_static", "eager_final")
 
 def _changed(runs: dict, variant: str) -> dict:
     """kind -> the queries whose operators under `variant` differ from
-    `base`."""
+    `base` and, for a conf, from `control` too."""
+    refs = ("base",) if variant == "control" else ("base", "control")
     return {
-        kind: sorted(q for q, r in runs["base"].items() if r[kind] != runs[variant][q][kind])
+        kind: sorted(q for q, r in runs[variant].items()
+                     if all(runs[ref][q][kind] != r[kind] for ref in refs))
         for kind in KINDS
     }
 

@@ -88,8 +88,8 @@ def run_level(cpus: int, corpus: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    # 6M rows: with the -Xms heap preset the 2M-row job finishes in ~14 s
-    # at local[8], where the ~3 s fixed per-job cost (scheduler, sink
+    # 6M rows: a 2M-row job finished in ~14 s at local[8] (measured when
+    # session.py still preset -Xms at 3/4 of -Xmx), where the ~3 s fixed per-job cost (scheduler, sink
     # commits) dilutes the ratio — a longer job measures compute scaling,
     # which is what the north rule is about
     ap.add_argument("--rows", type=int, default=6_000_000)

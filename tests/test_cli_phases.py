@@ -48,27 +48,33 @@ def test_usage_errors_exit_before_spark(case, tmp_path, monkeypatch, capsys):
 
 def test_failed_export_marks_no_source_done(tmp_path):
     """The manifest is written after the export: when the collector cannot
-    be reached, the run fails and --resume still sees the object as not
+    be reached, the run fails with one stderr line naming the S3 record's
+    object and the endpoint, and --resume still sees the object as not
     done."""
     from cflog2otel_spark.lineage import completed_sources
 
-    log = tmp_path / "cf.gz"
+    log = tmp_path / SOURCE1
+    log.parent.mkdir(parents=True)
     log.write_bytes(gzip.compress(CF_LOG_TEXT.encode()))
     with socket.socket() as s:
         s.bind(("127.0.0.1", 0))
         port = s.getsockname()[1]  # closed once the block ends
+    endpoint = f"http://127.0.0.1:{port}"
     ckpt = tmp_path / "ckpt"
     proc = subprocess.run(
         [
             sys.executable, "main.py",
             "--config", f"{CONFIGS}/request_count_by_status_category.json",
             "--text-input", str(log),
+            "--s3-url", f"s3://example-bucket/{SOURCE1}",
             "--checkpoint-dir", str(ckpt),
-            "--export-otlp", f"http://127.0.0.1:{port}",
+            "--export-otlp", endpoint,
             "--master", "local[2]",
         ],
         cwd=REPO, capture_output=True, text=True, timeout=420,
     )
-    assert proc.returncode != 0
-    assert "URLError" in proc.stderr or "Connection refused" in proc.stderr, proc.stderr[-2000:]
+    assert proc.returncode == 1, proc.stderr[-2000:]
+    assert "Traceback" not in proc.stderr, proc.stderr[-2000:]
+    (line,) = [ln for ln in proc.stderr.splitlines() if endpoint in ln]
+    assert SOURCE1 in line and "failed" in line, line
     assert completed_sources(str(ckpt)) == set()

@@ -1,15 +1,16 @@
 """Every `cflog2otel_spark` module is imported by some non-test file.
 
 A module that only its own tests import is a path the product never
-runs: delete it rather than keep it alive. Pure `ast`, no JVM: each
-tracked `.py` outside a `tests/` directory (main.py, bench.py, perfbench,
-scripts and the package itself) is parsed, relative imports are
-resolved, and imports inside functions count."""
+runs: delete it rather than keep it alive. Pure `ast`, no JVM, no git:
+each `.py` under the repo root outside a `tests/` directory (main.py,
+bench.py, perfbench, scripts and the package itself; hidden directories
+such as `.perfbench_work`, and `__pycache__`, skipped) is parsed, relative imports
+are resolved, and imports inside functions count."""
 
 from __future__ import annotations
 
 import ast
-import subprocess
+import os
 from pathlib import Path
 
 from .conftest import REPO
@@ -42,13 +43,18 @@ def _imported_names(rel: Path, tree: ast.AST) -> set[str]:
     return names
 
 
+def _py_files(root: str) -> list[Path]:
+    """Every `.py` under `root`, relative to it."""
+    files = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".") and d != "__pycache__"]
+        rel = Path(dirpath).relative_to(root)
+        files += [rel / f for f in filenames if f.endswith(".py")]
+    return files
+
+
 def test_every_package_module_has_a_non_test_importer():
-    files = [
-        Path(p)
-        for p in subprocess.run(
-            ["git", "ls-files", "*.py"], cwd=REPO, capture_output=True, text=True, check=True
-        ).stdout.split()
-    ]
+    files = _py_files(REPO)
     modules = {_module_name(p) for p in files if p.parts[0] == PACKAGE}
     assert f"{PACKAGE}.pipeline" in modules
 
